@@ -18,22 +18,6 @@ from __future__ import annotations
 import argparse
 
 
-def load_queries(path: str) -> list[tuple[str, str]]:
-    out = []
-    with open(path, encoding="utf-8") as fh:
-        for ln, line in enumerate(fh, 1):
-            line = line.rstrip("\n")
-            if not line.strip() or line.lstrip().startswith("#"):
-                continue
-            if "\t" not in line:
-                raise SystemExit(
-                    f"{path}:{ln}: expected '<id><TAB><expr>', got {line!r}"
-                )
-            qid, expr = line.split("\t", 1)
-            out.append((qid.strip(), expr.strip()))
-    return out
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--queries", required=True, metavar="TSV")
@@ -46,7 +30,12 @@ def main() -> None:
     if args.stream and not args.checkpoint:
         ap.error("--stream requires --checkpoint")
 
-    from textindex_spark.percolate import percolate, stream_percolate
+    from textindex_spark.manifest import _fs
+    from textindex_spark.percolate import (
+        load_queries,
+        percolate,
+        stream_percolate,
+    )
     from textindex_spark.session import get_spark
 
     queries = load_queries(args.queries)
@@ -57,10 +46,11 @@ def main() -> None:
         stream_percolate(
             spark, queries, args.input, args.output, args.checkpoint
         )
-        try:
-            n = spark.read.parquet(f"{args.output}/batch_*").count()
-        except Exception:  # zero micro-batches processed → no dirs yet
-            n = 0
+        batches = f"{args.output}/batch_*"
+        fs, pattern, _ = _fs(spark, batches)
+        # zero micro-batches processed → no batch dirs yet; any other
+        # read failure propagates
+        n = spark.read.parquet(batches).count() if fs.globStatus(pattern) else 0
         print(f"percolated stream: {n} total (query, doc) matches in "
               f"{args.output}/batch_*")
         return

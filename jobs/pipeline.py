@@ -109,8 +109,7 @@ def main() -> None:
 
     alerts = None
     if args.percolate:
-        # jobs/ is sys.path[0] when spark-submit runs this script
-        from percolate import load_queries
+        from textindex_spark.percolate import load_queries
 
         alerts = load_queries(args.percolate)
         if not alerts:

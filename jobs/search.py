@@ -163,7 +163,7 @@ def main() -> None:
         "--min-match", type=int, default=None, metavar="M",
         help="minimum-should-match: with --mode or, keep only docs "
         "matching at least M distinct --terms patterns (ranked "
-        "search, single index or --shards)",
+        "search, single index or --shards; M > 1 excludes --prune)",
     )
     ap.add_argument(
         "--depth", type=int, default=None,
@@ -265,6 +265,10 @@ def main() -> None:
             "--min-match applies to ranked --terms with --mode or "
             "(single index or --shards)"
         )
+    if args.prune and args.min_match is not None and args.min_match > 1:
+        # the block-max θ probe would count docs below the minimum, so
+        # the engine runs such queries unpruned
+        ap.error("--prune cannot be combined with --min-match > 1")
     if bool(args.index) == bool(args.shards):
         ap.error("provide exactly one of --index / --shards")
     if args.shards and (

@@ -233,13 +233,11 @@ def test_sat_table_matches_independent_eval():
 
 
 def test_load_queries_tsv_contract(tmp_path):
-    """jobs/percolate.load_queries: comments/blank lines skipped,
+    """percolate.load_queries (the query file of jobs/percolate.py and
+    jobs/pipeline.py --percolate): comments/blank lines skipped,
     whitespace trimmed, tabs inside the expression preserved,
     missing-tab lines rejected with the line number."""
-    import sys
-
-    sys.path.insert(0, "jobs")
-    from percolate import load_queries
+    from textindex_spark.percolate import load_queries
 
     p = tmp_path / "q.tsv"
     p.write_text(

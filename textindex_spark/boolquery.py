@@ -59,20 +59,18 @@ from textindex_spark.query import (
     LOCAL_SCORE_MAX_POSTINGS,
     _and_surviving_ranges,
     _apply_scope,
-    _cached_table,
     _dead_ids_capped,
     _decoded_postings,
     _fetch_blocks,
-    _finish_local,
     _scope_nonmatch_ids,
     _score_blocks_np,
     apply_tombstones,
     cached_stats,
     expand_patterns,
+    finish_ranked,
     idf,
     parse_scope,
 )
-from textindex_spark.session import local_df
 
 _TOKEN_RE = re.compile(r"\(|\)|[^\s()]+")
 _KEYWORDS = {"and", "or", "not"}
@@ -279,7 +277,8 @@ def search_bool(
     `query.search`. Wider candidate sets use the distributed plan
     (one shuffle + codegen'd mask predicate). ``local_score`` forces
     the choice (still capped); results are rank-identical either
-    way."""
+    way. ``with_urls``: as in `query.search`, a bounded k gives a
+    driver-local, evaluated frame (urls from the resident cache)."""
     ast, patterns = parse_bool(query)
     if _eval_py(ast, [False] * len(patterns)):
         raise ValueError(
@@ -291,9 +290,8 @@ def search_bool(
         parse_scope(scope)  # validate before any work
     stats = cached_stats(spark, index_dir)
     expanded = expand_patterns(spark, index_dir, patterns)
-    empty = local_df(spark, [], "doc_id long, score double")
     if len(expanded) == 0:
-        result = empty
+        result = []
     else:
         pos = positive_leaves(ast)
         expanded = expanded.copy()
@@ -342,7 +340,7 @@ def search_bool(
         if pre_intersect and len(req) > 1:
             req_masks = _required_masks(expanded, req)
             if req_masks is None:  # a required leaf has no expansion
-                return _attach_urls(spark, index_dir, empty, with_urls)
+                return finish_ranked(spark, index_dir, [], k, with_urls)
         if use_local:
             dead = _dead_ids_capped(spark, index_dir)
             if dead is not None:
@@ -354,7 +352,7 @@ def search_bool(
                         spark, index_dir, req_masks[0], req_masks[1], stats
                     )
                     if surviving == []:
-                        return _finish_local(spark, index_dir, [], empty, with_urls)
+                        return finish_ranked(spark, index_dir, [], k, with_urls)
                 blocks = _fetch_blocks(
                     spark, index_dir, list(term_info["term"]), stats,
                     ranges=surviving,
@@ -369,7 +367,7 @@ def search_bool(
                     uniq, score = uniq[alive], score[alive]
                 order = np.lexsort((uniq, -score))[:k]
                 rows = [(int(uniq[i]), float(score[i])) for i in order]
-                return _finish_local(spark, index_dir, rows, empty, with_urls)
+                return finish_ranked(spark, index_dir, rows, k, with_urls)
         qterms = spark.createDataFrame(term_info[["term", "idf", "mask", "pos"]])
         decoded = _decoded_postings(
             spark, index_dir, qterms, stats, list(term_info["term"]),
@@ -392,20 +390,7 @@ def search_bool(
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
         )
-    return _attach_urls(spark, index_dir, result, with_urls)
-
-
-def _attach_urls(
-    spark: SparkSession, index_dir: str, result: DataFrame, with_urls: bool
-) -> DataFrame:
-    if not with_urls:
-        return result
-    docs = _cached_table(spark, index_dir, "docs").select("doc_id", "url")
-    return (
-        result.join(docs, "doc_id", "left")
-        .select("doc_id", "score", "url")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-    )
+    return finish_ranked(spark, index_dir, result, k, with_urls)
 
 
 def search_bool_sharded(
@@ -450,7 +435,6 @@ def search_bool_sharded(
     expansions = [expand_patterns(spark, d, patterns) for d in index_dirs]
     pos = positive_leaves(ast)
     req = sorted(required_leaves(ast))
-    empty = local_df(spark, [], "doc_id long, score double")
     cat = []
     for i, e in enumerate(expansions):
         if len(e):
@@ -459,7 +443,7 @@ def search_bool_sharded(
             cat.append(e)
     allx = pd.concat(cat) if cat else None
     if allx is None:
-        return _attach_urls_sharded(spark, index_dirs, empty, with_urls)
+        return finish_ranked(spark, index_dirs, [], k, with_urls)
     # GLOBAL df per term (a term may live in several shards)
     df_g = allx.drop_duplicates(["shard", "term"]).groupby("term")["df"].sum()
 
@@ -526,7 +510,7 @@ def search_bool_sharded(
                     dead = np.union1d(dead, sids)
             deads[i] = dead
     if use_local and ok:
-        merged: list[tuple[int, float]] = []
+        merged: list[tuple[int, float, int]] = []  # (doc_id, score, shard)
         for i, d in enumerate(index_dirs):
             if shard_req[i] == "skip":
                 continue
@@ -553,15 +537,9 @@ def search_bool_sharded(
                 alive = ~np.isin(uniq, dead)
                 uniq, score = uniq[alive], score[alive]
             order = np.lexsort((uniq, -score))[:k]
-            merged.extend((int(uniq[j]), float(score[j])) for j in order)
+            merged.extend((int(uniq[j]), float(score[j]), i) for j in order)
         merged.sort(key=lambda t: (-t[1], t[0]))
-        rows = merged[:k]
-        result = (
-            local_df(spark, rows, "doc_id long, score double")
-            if rows
-            else empty
-        )
-        return _attach_urls_sharded(spark, index_dirs, result, with_urls)
+        return finish_ranked(spark, index_dirs, merged[:k], k, with_urls)
     scored_frames = []
     for i, d in enumerate(index_dirs):
         if shard_req[i] == "skip":
@@ -594,30 +572,11 @@ def search_bool_sharded(
             sc = _apply_scope(
                 spark, d, sc, scope, _scope_nonmatch_ids(spark, d, scope)
             )
-        scored_frames.append(sc.select("doc_id", "score"))
+        scored_frames.append(sc.select("doc_id", "score", F.lit(i).alias("_shard")))
     if not scored_frames:
-        return _attach_urls_sharded(spark, index_dirs, empty, with_urls)
+        return finish_ranked(spark, index_dirs, [], k, with_urls)
     merged_df = scored_frames[0]
     for f in scored_frames[1:]:
         merged_df = merged_df.unionByName(f)
     result = merged_df.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    return _attach_urls_sharded(spark, index_dirs, result, with_urls)
-
-
-def _attach_urls_sharded(
-    spark: SparkSession,
-    index_dirs: list[str],
-    result: DataFrame,
-    with_urls: bool,
-) -> DataFrame:
-    if not with_urls:
-        return result
-    docs = None
-    for d in index_dirs:
-        t = _cached_table(spark, d, "docs").select("doc_id", "url")
-        docs = t if docs is None else docs.unionByName(t)
-    return (
-        result.join(docs, "doc_id", "left")
-        .select("doc_id", "score", "url")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-    )
+    return finish_ranked(spark, index_dirs, result, k, with_urls)

@@ -195,16 +195,7 @@ def search_fields(
     if scope:
         merged = Q._apply_scope(spark, index_dir, merged, scope, None)
     result = merged.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    if with_urls:
-        docs = Q._cached_table(spark, index_dir, "docs").select(
-            "doc_id", "url"
-        )
-        result = (
-            result.join(docs, "doc_id", "left")
-            .select("doc_id", "score", "url")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-        )
-    return result
+    return Q.finish_ranked(spark, index_dir, result, k, with_urls)
 
 
 def search_fielded(

@@ -149,11 +149,6 @@ def search_hybrid(
             Q._scope_docs_df(spark, index_dir, scope), "doc_id", "left_semi"
         )
     out = rrf_fuse([lex, vec], k=k, rrf_k=rrf_k)
-    if with_urls:
-        docs = Q._cached_table(spark, index_dir, "docs").select("doc_id", "url")
-        out = (
-            out.join(docs, "doc_id", "left")
-            .select("doc_id", "rrf_micro", "url")
-            .orderBy(F.desc("rrf_micro"), F.asc("doc_id"))
-        )
-    return out
+    return Q.finish_ranked(
+        spark, index_dir, out, k, with_urls, score_col="rrf_micro"
+    )

@@ -66,6 +66,26 @@ PERCOLATE_MAX_LEAVES = 16
 _perc_persists: list[DataFrame] = []
 
 
+def load_queries(path: str) -> list[tuple[str, str]]:
+    """Standing queries from a TSV file, one ``<id><TAB><expr>`` per
+    line; blank lines and ``#`` comments are skipped. A line without
+    a tab exits with its file and line number (the CLI contract of
+    jobs/percolate.py and jobs/pipeline.py --percolate)."""
+    out = []
+    with open(path, encoding="utf-8") as fh:
+        for ln, line in enumerate(fh, 1):
+            line = line.rstrip("\n")
+            if not line.strip() or line.lstrip().startswith("#"):
+                continue
+            if "\t" not in line:
+                raise SystemExit(
+                    f"{path}:{ln}: expected '<id><TAB><expr>', got {line!r}"
+                )
+            qid, expr = line.split("\t", 1)
+            out.append((qid.strip(), expr.strip()))
+    return out
+
+
 def compile_queries(
     queries: list[tuple[str, str]],
 ) -> tuple[list[tuple[str, int, str]], list[tuple[str, int]]]:

@@ -144,6 +144,15 @@ _META_COLS = ["term", "range_id", "n_docs", "max_tf", "max_tfnorm", "enc_avgdl"]
 _meta_cache: "OrderedDict[tuple[str, str], pd.DataFrame]" = OrderedDict()
 _meta_rows = 0
 
+# Result URLs resident per doc_id — the reference prints each hit's
+# path straight from memory. A bounded top-k resolves its ≤k urls
+# here (`finish_ranked`); misses cost one isin pushdown scan of the
+# docs table, and a doc_id with no docs row caches None (the left
+# join's answer). Entry-capped LRU, global across index dirs.
+URL_CACHE_MAX_ENTRIES = 262_144
+# (cd, doc_id) -> url | None
+_url_cache: "OrderedDict[tuple[str, int], str | None]" = OrderedDict()
+
 
 def _block_cache_put(cd: str, term: str, range_id: int, rows: list[tuple]) -> None:
     global _block_bytes
@@ -350,7 +359,7 @@ def _fetch_blocks(
 
 def invalidate_cache(index_dir: str) -> None:
     """Drop every query-node cache for an index (dictionary, stats,
-    analyzed table frames, posting blocks). Called by all
+    analyzed table frames, posting blocks, result urls). Called by all
     snapshot-mutating ops."""
     global _block_bytes, _meta_rows
     cd = canon_dir(index_dir)
@@ -366,6 +375,8 @@ def invalidate_cache(index_dir: str) -> None:
             _block_bytes -= _block_cache.pop(k)[1]
         for k in [k for k in _meta_cache if k[0] == cd]:
             _meta_rows -= len(_meta_cache.pop(k))
+        for k in [k for k in _url_cache if k[0] == cd]:
+            _url_cache.pop(k, None)
         for k in [k for k in _frame_cache if k[0] == cd]:
             _frame_cache.pop(k, None)
         for k in [k for k in _shard_cache if k[0] == cd]:
@@ -1009,6 +1020,15 @@ def search(
     (score desc, doc_id asc). mode='and' keeps reference AND
     semantics across query patterns.
 
+    ``with_urls`` with a bounded k (≤ ISIN_PUSHDOWN_MAX) returns a
+    driver-local frame, already evaluated: the top-k urls come from
+    the resident url cache (`finish_ranked`). Otherwise the frame is
+    lazy.
+
+    ``min_match`` > 1 turns ``prune`` off: the block-max θ probe
+    would count docs below the minimum and over-prune. The
+    CLI rejects ``--prune`` with ``--min-match`` > 1.
+
     ``k=None`` returns the FULL scored match set (no limit) — the
     input to cross-field score merging (`fields.search_fielded`,
     which needs every candidate's partial score, not a per-field
@@ -1127,9 +1147,8 @@ def search(
             if res is not None:
                 return res
     full_mask = (1 << n_patterns) - 1
-    empty = local_df(spark, [], "doc_id long, score double")
     if query_is_empty:
-        result = empty
+        result = []
     else:
         expanded = expanded.copy()
         expanded["idf"] = [idf(stats["n_docs"], int(d)) for d in expanded["df"]]
@@ -1227,14 +1246,7 @@ def search(
         )
         if k is not None:
             result = result.limit(k)
-    if with_urls:
-        docs = _cached_table(spark, index_dir, "docs").select("doc_id", "url")
-        result = (
-            result.join(docs, "doc_id", "left")
-            .select("doc_id", "score", "url")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-        )
-    return result
+    return finish_ranked(spark, index_dir, result, k, with_urls)
 
 
 def search_sharded(
@@ -1277,7 +1289,9 @@ def search_sharded(
     filtered retrieval, see `search`) federates the same way: each
     shard's own docs table answers the predicate for its docs.
     Block-max pruning stays a single-index feature (federated scoring
-    is already one decode job over all shards)."""
+    is already one decode job over all shards). ``with_urls``: each
+    url comes from the resident url cache of the doc's own shard
+    (see `search`)."""
     if scope:
         parse_scope(scope)
     patterns, boosts = split_boosts(patterns)
@@ -1309,13 +1323,12 @@ def search_sharded(
             e = e.copy()
             e["shard"] = i
             cat.append(e)
-    empty = local_df(spark, [], "doc_id long, score double")
     allx = pd.concat(cat) if cat else None
     covered = allx["pattern_idx"].nunique() if allx is not None else 0
     if allx is None or (mode == "and" and covered < n_patterns) or (
         min_match is not None and covered < min_match
     ):
-        result = empty
+        result = []
     else:
         df_g = allx.drop_duplicates(["shard", "term"]).groupby("term")["df"].sum()
         aggs = _boost_aggs(allx, dict(
@@ -1392,22 +1405,17 @@ def search_sharded(
                 sc = _apply_scope(
                     spark, d, sc, scope, _scope_nonmatch_ids(spark, d, scope)
                 )
-            if with_urls:
-                docs_s = _cached_table(spark, d, "docs").select("doc_id", "url")
-                sc = sc.join(docs_s, "doc_id", "left")
             scored_frames.append(
-                sc.select("doc_id", "score", *(["url"] if with_urls else []))
+                sc.select("doc_id", "score", F.lit(i).alias("_shard"))
             )
         if not scored_frames:
             # every matching shard was time-pruned away
-            return _empty_result(spark, with_urls)
+            return finish_ranked(spark, index_dirs, [], k, with_urls)
         merged = scored_frames[0]
         for f in scored_frames[1:]:
             merged = merged.unionByName(f)
-        return merged.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    if with_urls:
-        result = result.withColumn("url", F.lit(None).cast("string"))
-    return result
+        result = merged.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return finish_ranked(spark, index_dirs, result, k, with_urls)
 
 
 def _sharded_local(
@@ -1504,24 +1512,7 @@ def _sharded_local(
         order = np.lexsort((uniq, -score))[:k]
         merged.extend((int(uniq[j]), float(score[j]), i) for j in order)
     merged.sort(key=lambda t: (-t[1], t[0]))
-    merged = merged[:k]
-    empty = local_df(spark, [], "doc_id long, score double")
-    result = (
-        local_df(spark, [(d, s) for d, s, _ in merged], "doc_id long, score double")
-        if merged
-        else empty
-    )
-    if with_urls:
-        docs = None
-        for d in index_dirs:
-            t = _cached_table(spark, d, "docs").select("doc_id", "url")
-            docs = t if docs is None else docs.unionByName(t)
-        result = (
-            result.join(docs, "doc_id", "left")
-            .select("doc_id", "score", "url")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-        )
-    return result
+    return finish_ranked(spark, index_dirs, merged[:k], k, with_urls)
 
 
 def _search_local(
@@ -1562,7 +1553,6 @@ def _search_local(
     if prune and len(term_info) > ISIN_PUSHDOWN_MAX:
         return None
     covered = int(np.bitwise_or.reduce(term_info["mask"].values)) if len(term_info) else 0
-    empty = local_df(spark, [], "doc_id long, score double")
     if (mode == "and" and covered != full_mask) or (
         min_match is not None and int(covered).bit_count() < min_match
     ):
@@ -1575,7 +1565,7 @@ def _search_local(
                 list(term_info["term"]), term_info, dead=dead, mode=mode,
             )
             if plan is None:
-                return _finish_local(spark, index_dir, [], empty, with_urls)
+                return finish_ranked(spark, index_dir, [], k, with_urls)
             surviving, _ = plan
         elif mode == "and" and n_patterns > 1:
             # unpruned AND still gets candidate-range pre-intersection
@@ -1589,12 +1579,12 @@ def _search_local(
                 stats,
             )
             if surviving == []:
-                return _finish_local(spark, index_dir, [], empty, with_urls)
+                return finish_ranked(spark, index_dir, [], k, with_urls)
             # (_fetch_blocks reads everything for a survivor set wider
             # than the isin cap — still exact)
         surviving = _intersect_ranges(surviving, allowed_ranges)
         if surviving is not None and len(surviving) == 0:
-            return _finish_local(spark, index_dir, [], empty, with_urls)
+            return finish_ranked(spark, index_dir, [], k, with_urls)
         blocks = _fetch_blocks(
             spark, index_dir, list(term_info["term"]), stats, ranges=surviving
         )
@@ -1610,7 +1600,7 @@ def _search_local(
             uniq, score = uniq[alive], score[alive]
         order = np.lexsort((uniq, -score))[:k]
         result_rows = [(int(uniq[i]), float(score[i])) for i in order]
-    return _finish_local(spark, index_dir, result_rows, empty, with_urls)
+    return finish_ranked(spark, index_dir, result_rows, k, with_urls)
 
 
 def _popcount64(a: np.ndarray) -> np.ndarray:
@@ -1624,26 +1614,100 @@ def _popcount64(a: np.ndarray) -> np.ndarray:
     return out
 
 
-def _finish_local(
+def finish_ranked(
     spark: SparkSession,
-    index_dir: str,
-    result_rows: list,
-    empty: DataFrame,
+    index_dirs: str | list[str],
+    result: DataFrame | list[tuple],
+    k: int | None,
     with_urls: bool,
+    score_col: str = "score",
 ) -> DataFrame:
-    result = (
-        local_df(spark, result_rows, "doc_id long, score double")
-        if result_rows
-        else empty
-    )
-    if with_urls:
-        docs_df = _cached_table(spark, index_dir, "docs").select("doc_id", "url")
-        result = (
-            result.join(docs_df, "doc_id", "left")
-            .select("doc_id", "score", "url")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
+    """A ranked result in the search output shape: (doc_id, score),
+    or with ``with_urls`` (doc_id, score, url) in the same order.
+
+    ``result`` is the ranked frame (limited to ``k``) or the ≤k
+    ranked rows. With a shard list for ``index_dirs`` each row
+    carries its shard's position third (a ``_shard`` column on a
+    frame), so a url is looked up in the shard the doc came from.
+
+    URLs of a bounded top-k (k ≤ ISIN_PUSHDOWN_MAX) come from the
+    resident url cache (`_lookup_urls`): a frame is collected, and
+    the result is a driver-local frame, already evaluated — a warm
+    query launches no Spark job for its urls. ``k=None`` or a wider
+    k keeps the lazy left join against the docs table(s) plus the
+    ranking sort."""
+    shards = not isinstance(index_dirs, str)
+    dirs = list(index_dirs) if shards else [index_dirs]
+    if not with_urls or k is None or k > ISIN_PUSHDOWN_MAX:
+        frame = (
+            result.drop("_shard")
+            if isinstance(result, DataFrame)
+            else local_df(
+                spark, [r[:2] for r in result], "doc_id long, score double"
+            )
         )
-    return result
+        if not with_urls:
+            return frame
+        docs = None
+        for d in dirs:
+            t = _cached_table(spark, d, "docs").select("doc_id", "url")
+            docs = t if docs is None else docs.unionByName(t)
+        return (
+            frame.join(docs, "doc_id", "left")
+            .select("doc_id", score_col, "url")
+            .orderBy(F.desc(score_col), F.asc("doc_id"))
+        )
+    if isinstance(result, DataFrame):
+        dtype = result.schema[score_col].dataType.simpleString()
+        rows = [tuple(r) for r in result.collect()]
+    else:
+        dtype, rows = "double", result
+    if not shards:
+        rows = [(d, sc, 0) for d, sc in rows]
+    ids_by_shard: dict[int, list[int]] = {}
+    for d, _, s in rows:
+        ids_by_shard.setdefault(s, []).append(int(d))
+    urls = {s: _lookup_urls(spark, dirs[s], ids) for s, ids in ids_by_shard.items()}
+    return local_df(
+        spark,
+        [(d, sc, urls[s][int(d)]) for d, sc, s in rows],
+        f"doc_id long, {score_col} {dtype}, url string",
+    )
+
+
+def _lookup_urls(
+    spark: SparkSession, index_dir: str, ids: list[int]
+) -> dict[int, str | None]:
+    """doc_id → url through the resident url cache; the misses are
+    read in ONE isin pushdown scan of the docs table and cached,
+    None for an id with no docs row."""
+    cd = canon_dir(index_dir)
+    out: dict[int, str | None] = {}
+    misses = []
+    with _cache_lock:
+        for i in ids:
+            if (cd, i) in _url_cache:
+                _url_cache.move_to_end((cd, i))
+                out[i] = _url_cache[(cd, i)]
+            else:
+                misses.append(i)
+    if not misses:
+        return out
+    found: dict[int, str | None] = dict.fromkeys(misses)
+    for r in (
+        _cached_table(spark, index_dir, "docs")
+        .filter(F.col("doc_id").isin(misses))
+        .select("doc_id", "url")
+        .collect()
+    ):
+        found[r["doc_id"]] = r["url"]
+    out.update(found)
+    with _cache_lock:
+        for i, url in found.items():
+            _url_cache[(cd, i)] = url
+        while len(_url_cache) > URL_CACHE_MAX_ENTRIES:
+            _url_cache.popitem(last=False)
+    return out
 
 
 # Resident capped tombstone-id arrays per canon_dir (None = delete
@@ -1852,14 +1916,6 @@ def _intersect_ranges(
     if b is None:
         return a
     return sorted(set(a) & set(b))
-
-
-def _empty_result(spark: SparkSession, with_urls: bool) -> DataFrame:
-    """The empty ranked-result frame in `search`'s output shape."""
-    empty = local_df(spark, [], "doc_id long, score double")
-    if with_urls:
-        empty = empty.withColumn("url", F.lit(None).cast("string"))
-    return empty
 
 
 def _restrict_ranges(spark: SparkSession, blocks: DataFrame, ids):
@@ -2735,12 +2791,7 @@ def search_near(
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
-    if with_urls:
-        docs_df = _cached_table(spark, index_dir, "docs").select("doc_id", "url")
-        result = result.join(docs_df, "doc_id", "left").select(
-            "doc_id", "score", "url"
-        ).orderBy(F.desc("score"), F.asc("doc_id"))
-    return result
+    return finish_ranked(spark, index_dir, result, k, with_urls)
 
 
 def phrase_docs(
@@ -2769,7 +2820,8 @@ def search_phrase(
     ``exclude``: NOT semantics, one anti-join before top-k.
     ``scope``: metadata-filtered retrieval (see `search`); a ts
     scope additionally time-prunes the positional fetch (range_ts
-    bounds — pos_bytes is the heaviest payload)."""
+    bounds — pos_bytes is the heaviest payload). ``with_urls``: as
+    in `search`, a bounded k gives a driver-local, evaluated frame."""
     if scope:
         parse_scope(scope)
     frame = _phrase_frame(
@@ -2789,18 +2841,14 @@ def search_phrase(
             spark, index_dir, frame, scope,
             _scope_nonmatch_ids(spark, index_dir, scope),
         )
+    if frame is None:
+        return finish_ranked(spark, index_dir, [], k, with_urls)
     result = (
-        local_df(spark, [], "doc_id long, score double")
-        if frame is None
-        else frame.select("doc_id", "score")
+        frame.select("doc_id", "score")
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(k)
     )
-    result = result.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    if with_urls:
-        docs_df = _cached_table(spark, index_dir, "docs").select("doc_id", "url")
-        result = result.join(docs_df, "doc_id", "left").select(
-            "doc_id", "score", "url"
-        ).orderBy(F.desc("score"), F.asc("doc_id"))
-    return result
+    return finish_ranked(spark, index_dir, result, k, with_urls)
 
 
 _tomb_exists: dict[str, bool] = {}
@@ -3103,7 +3151,7 @@ def more_like_this(
     kind, text, _ = classify_and_extract(
         r["url"], r["html"] or b"", r["text"] or ""
     )
-    empty = _empty_result(spark, with_urls)
+    empty = finish_ranked(spark, index_dir, [], k, with_urls)
     if kind == filters.IGNORE:
         return empty
     tf, _dl = term_frequencies(text)
