@@ -230,6 +230,56 @@ def test_scoped_bool_matches_bruteforce(spark, index_dir, oracle):
             assert got == want, (scope, local)
 
 
+def test_ts_scoped_bool_decodes_only_allowed_ranges(
+    spark, index_dir, oracle, monkeypatch
+):
+    """A ts-scoped boolean tree time-prunes like a flat query: on this
+    time-ordered corpus (warc_ts monotone in doc_id, range_bits=6 —
+    the shape test_ts_range_pruning uses) the serving path fetches and
+    the distributed path decodes ONLY ranges the window can touch
+    (`_ts_allowed_ranges`), and both stay equal to the brute force.
+    The required leaf set here is {spark} alone, so no AND
+    pre-intersection restricts the ranges: only the ts window can."""
+    import textindex_spark.query as Qm
+
+    q = "spark AND (index OR vector)"
+    scope = "ts:2025-01-01T00:10:00..2025-01-01T00:20:00"
+    allowed = set(Qm._ts_allowed_ranges(spark, index_dir, scope))
+    n_ranges = spark.read.parquet(f"{index_dir}/range_ts").count()
+    assert 0 < len(allowed) < n_ranges
+    full = oracle_bool(oracle, q, k=10**9)
+    want = [(d, round(s, 9)) for d, s in full if oracle.scope_ok(d, scope)][:10]
+    assert want
+
+    calls = []
+    fetch, decode = Qm._fetch_blocks, Qm._decoded_postings
+
+    def spy_fetch(*a, ranges=None, **kw):
+        calls.append(("fetch", ranges))
+        return fetch(*a, ranges=ranges, **kw)
+
+    def spy_decode(*a, allowed_ranges=None, **kw):
+        calls.append(("decode", allowed_ranges))
+        return decode(*a, allowed_ranges=allowed_ranges, **kw)
+
+    monkeypatch.setattr(Qm, "_fetch_blocks", spy_fetch)
+    monkeypatch.setattr(Qm, "_decoded_postings", spy_decode)
+    for local, kind in ((None, "fetch"), (False, "decode")):
+        calls.clear()
+        got = [
+            (r["doc_id"], round(r["score"], 9))
+            for r in search_bool(
+                spark, index_dir, q, k=10, with_urls=False,
+                local_score=local, scope=scope,
+            ).collect()
+        ]
+        assert got == want, local
+        seen = [r for c, r in calls if c == kind]
+        assert seen, (kind, calls)
+        for r in seen:
+            assert r is not None and set(r) <= allowed, (kind, r, allowed)
+
+
 def test_random_bool_tree_differential(spark, index_dir, oracle):
     """Seeded random boolean-tree fuzz: 25 generated ASTs (depth ≤ 3,
     AND/OR/NOT over term/glob/fuzzy leaves, guaranteed one positive
@@ -306,25 +356,33 @@ def test_search_bool_sharded_matches_single_index(spark, rows, tmp_path_factory)
     single = tmp_path_factory.mktemp("boolunion")
     du = str(single / "u")
     build_index(spark, corpus_df(spark, rows), du, range_bits=6)
-    for q in [
+    queries = [
         "spark AND (vector OR merge) AND NOT qu*",
         "spark AND vector",
         "spark OR vector OR merge",
         "spark AND NOT (merge AND vector)",
         "qu* AND NOT quer*",
         "spark AND zanzibar*",  # unsatisfiable required leaf
-    ]:
-        want = [
-            (r["doc_id"], r["score"])
-            for r in search_bool(spark, du, q, k=10, with_urls=False).collect()
-        ]
-        for local in (None, False):
-            got = [
+    ]
+    # scoped federation: a metadata scope, and a ts window spanning
+    # the shard boundary (row 160 = 2025-01-01T00:34:40)
+    scopes = [None, "lang:fr", "ts:2025-01-01T00:25:00..2025-01-01T00:45:00"]
+    for q in queries:
+        for scope in scopes:
+            want = [
                 (r["doc_id"], r["score"])
-                for r in search_bool_sharded(
-                    spark, [d1, d2], q, k=10, with_urls=False, local_score=local
+                for r in search_bool(
+                    spark, du, q, k=10, with_urls=False, scope=scope
                 ).collect()
             ]
-            assert [d for d, _ in got] == [d for d, _ in want], (q, local)
-            for (gd, gs), (wd, ws) in zip(got, want):
-                assert math.isclose(gs, ws, rel_tol=1e-9), (q, gd, local)
+            for local in (None, False):
+                got = [
+                    (r["doc_id"], r["score"])
+                    for r in search_bool_sharded(
+                        spark, [d1, d2], q, k=10, with_urls=False,
+                        local_score=local, scope=scope,
+                    ).collect()
+                ]
+                assert [d for d, _ in got] == [d for d, _ in want], (q, scope, local)
+                for (gd, gs), (wd, ws) in zip(got, want):
+                    assert math.isclose(gs, ws, rel_tol=1e-9), (q, scope, gd, local)

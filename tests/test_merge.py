@@ -175,3 +175,32 @@ def test_merge_validation(spark, tmp_path):
     merge_indexes(spark, [da, db], dm, range_bits=4)
     with pytest.raises(ValueError, match="existing index"):
         merge_indexes(spark, [da, db], dm)
+
+
+def test_gate_merged_probe_rebuilds_half_written_dir(spark, tmp_path, monkeypatch):
+    """A merge that crashed between the segments write and the stats
+    publish leaves a directory `merge_indexes` refuses forever; the
+    gate's cache probe must clear and rebuild it, then reuse the
+    finished merge without merging again."""
+    from textindex_spark import gate
+
+    da, db = str(tmp_path / "a"), str(tmp_path / "b")
+    build_index(spark, corpus_df(spark, _rows(range(0, 8))), da, range_bits=4)
+    build_index(spark, corpus_df(spark, _rows(range(20, 26))), db, range_bits=4)
+    dm = tmp_path / "m"
+    (dm / "segments").mkdir(parents=True)
+    (dm / "segments" / "part-00000.parquet").write_bytes(b"torn")
+    with pytest.raises(ValueError, match="existing index"):
+        merge_indexes(spark, [da, db], str(dm))
+    assert gate.ensure_merged_index(spark, [da, db], str(dm)) == str(dm)
+    assert _stats(spark, str(dm))[0] == 14
+    # both shards' matches are served by the merged index
+    assert len(_search_map(spark, str(dm), ["spark"])) == len(
+        _search_map(spark, da, ["spark"])
+    ) + len(_search_map(spark, db, ["spark"]))
+
+    def no_merge(*a, **kw):
+        raise AssertionError("a finished merge must not be rebuilt")
+
+    monkeypatch.setattr(gate.B, "merge_indexes", no_merge)
+    gate.ensure_merged_index(spark, [da, db], str(dm))

@@ -190,10 +190,9 @@ def search_fields(
     total = F.coalesce("_s", F.lit(0.0))
     for i in range(len(field_specs)):
         total = total + F.coalesce(f"_f{i}", F.lit(0.0))
-    merged = merged.select("doc_id", total.alias("score"))
-    merged = Q.apply_tombstones(spark, index_dir, merged)
-    if scope:
-        merged = Q._apply_scope(spark, index_dir, merged, scope, None)
+    merged = Q.DeadSet(spark, index_dir, scope=scope).drop(
+        merged.select("doc_id", total.alias("score"))
+    )
     result = merged.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
     return Q.finish_ranked(spark, index_dir, result, k, with_urls)
 

@@ -16,6 +16,7 @@ with ``string_split`` + ``NOT IN (stop list)``.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1310,6 +1311,18 @@ def q_minhash_lsh(spark, sf_dir):
     return s.unionByName(p)
 
 
+def ensure_merged_index(spark: SparkSession, dirs: list[str], md: str) -> str:
+    """The physical merge of ``dirs`` at ``md``, built once. A merge
+    writes its stats table after every other table, so a directory
+    without one is a merge that crashed part-way: it is cleared and
+    merged again (`merge_indexes` refuses a directory that already
+    holds segments)."""
+    if not B.manifest.table_exists(spark, md, "stats"):
+        shutil.rmtree(md, ignore_errors=True)
+        B.merge_indexes(spark, dirs, md, range_bits=10)
+    return md
+
+
 def q_sharded_ops(spark, sf_dir):
     """bm25_sharded + bool_sharded + PHYSICAL merge folded: the two
     federated paths AND the consolidated single index
@@ -1324,11 +1337,7 @@ def q_sharded_ops(spark, sf_dir):
     )
     dirs = ensure_sharded_index(spark, sf_dir)
     key = os.path.basename(os.path.normpath(sf_dir))
-    md = f"{GATE_DIR}/{key}_merged"
-    try:
-        spark.read.parquet(f"{md}/stats").collect()
-    except Exception:
-        B.merge_indexes(spark, dirs, md, range_bits=10)
+    md = ensure_merged_index(spark, dirs, f"{GATE_DIR}/{key}_merged")
     c = Q.search(
         spark, md, BM25_TERMS, k=10, mode="and", with_urls=False
     ).select(

@@ -25,10 +25,13 @@ adds on top:
 from __future__ import annotations
 
 import math
+import operator
 import re
 import threading
 from collections import OrderedDict
 from collections.abc import Iterator
+from functools import cached_property, reduce
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -526,24 +529,6 @@ def split_boosts(patterns: list[str]) -> tuple[list[str], list[float]]:
     return bases, boosts
 
 
-def _boost_aggs(expanded: pd.DataFrame, aggs: dict) -> dict:
-    """Add the max-boost aggregation when the expansion carries one."""
-    if "boost" in expanded.columns:
-        aggs["boost"] = ("boost", "max")
-    return aggs
-
-
-def _fold_boost_idf(term_info: pd.DataFrame) -> pd.DataFrame:
-    """Single definition of boost semantics (see split_boosts): fold
-    the aggregated max boost into idf BEFORE any scoring/pruning math
-    — every downstream consumer (scoring, θ probes, block upper
-    bounds, federation) reads the same pre-multiplied column."""
-    if "boost" in term_info.columns:
-        term_info["idf"] = term_info["idf"] * term_info["boost"]
-        term_info = term_info.drop(columns=["boost"])
-    return term_info
-
-
 # --- regex term expansion (``/pattern/`` syntax, engine extension) ---
 # A slash-delimited pattern expands to every vocabulary term the
 # regex fully matches, then rides the same pattern_idx machinery as
@@ -962,24 +947,19 @@ def _decoded_postings(
     qterms: DataFrame,
     stats: dict,
     term_list: list[str],
-    and_masks: tuple[dict[str, int], int] | None = None,
     allowed_ranges: list[int] | None = None,
 ) -> DataFrame:
     """Posting blocks for the query vocabulary, decoded to
-    (term, doc_id, tf, doc_len, tfnorm) rows. ``and_masks``
-    (mask_by_term, full_mask) enables candidate-range
-    pre-intersection for conjunctive consumers — only ranges where
-    every pattern is present are decoded (exact; see
-    ``_and_surviving_ranges``). ``allowed_ranges`` restricts the
-    decode to a caller-proven range set (ts-scope time pruning,
-    ``_ts_allowed_ranges``); both restrictions intersect."""
-    blocks = _query_blocks(spark, index_dir, qterms, term_list, stats.get("n_term_buckets"))
-    ids = allowed_ranges
-    if and_masks is not None:
-        ids = _intersect_ranges(ids, _and_surviving_ranges(
-            spark, index_dir, and_masks[0], and_masks[1], stats, blocks
-        ))
-    blocks = _restrict_ranges(spark, blocks, ids)
+    (term, doc_id, tf, doc_len, tfnorm) rows, tfnorm under
+    ``stats["avgdl"]`` (the ranked core passes the global one).
+    ``allowed_ranges`` restricts the decode to a caller-proven range
+    set (candidate-range pre-intersection, block-max survivors,
+    ts-scope time pruning)."""
+    blocks = _restrict_ranges(
+        spark,
+        _query_blocks(spark, index_dir, qterms, term_list, stats.get("n_term_buckets")),
+        allowed_ranges,
+    )
     blocks = blocks.select(*_DECODE_COLS).withColumn(
         "range_bits", F.lit(stats["range_bits"])
     ).withColumn("avgdl", F.lit(stats["avgdl"]))
@@ -1056,197 +1036,11 @@ def search(
     merges into ``dead`` (resident + θ-sound), an oversize complement
     applies as a left_semi join on the distributed plan with pruning
     disabled."""
-    if scope:
-        parse_scope(scope)  # validate before any work
-    patterns, boosts = split_boosts(patterns)
-    if min_match is not None:
-        # minimum-should-match (Lucene minNrShouldMatch): a doc
-        # qualifies iff it matches ≥ min_match DISTINCT patterns —
-        # the continuum between OR (1) and AND (n). Membership-only:
-        # surviving scores are the plain disjunctive sums.
-        if mode != "or":
-            raise ValueError("min_match applies to mode='or' queries")
-        if not 1 <= min_match <= len(patterns):
-            raise ValueError(
-                f"min_match must be in [1, {len(patterns)}], got {min_match}"
-            )
-        if min_match > 1:
-            # the block-max θ probe estimates the k-th best score over
-            # ALL matching docs; a non-qualifying doc in the probe
-            # would inflate θ and prune ranges holding the true
-            # qualifying top-k — same soundness fallback as oversize
-            # exclusions/scopes
-            prune = False
-    stats = cached_stats(spark, index_dir)
-    expanded = expand_patterns(spark, index_dir, patterns)
-    if any(b != 1.0 for b in boosts) and len(expanded):
-        expanded = expanded.copy()
-        expanded["boost"] = [boosts[i] for i in expanded["pattern_idx"]]
-    n_patterns = len(patterns)
-    query_is_empty = len(expanded) == 0 or (
-        mode == "and" and expanded["pattern_idx"].nunique() < n_patterns
-    ) or (
-        min_match is not None
-        and expanded["pattern_idx"].nunique() < min_match
+    return _ranked(
+        spark, [index_dir], patterns, _flat_tree(len(patterns), mode, min_match),
+        k, with_urls, local_score=local_score, prune=prune, exclude=exclude,
+        scope=scope, exclude_ids=exclude_ids,
     )
-    excl_ids: np.ndarray | None = None
-    excl_expanded: pd.DataFrame | None = None
-    if exclude and not query_is_empty:
-        # expand exclusion patterns ONCE (the dictionary wildcard scan
-        # is shared by the id fetch and any distributed anti-join);
-        # skip entirely when the positive query is provably empty.
-        # Boosts cannot change membership: strip, honor the base.
-        exclude = split_boosts(exclude)[0]
-        excl_expanded = expand_patterns(spark, index_dir, exclude)
-        excl_ids = _exclusion_ids(
-            spark, index_dir, exclude, stats, expanded=excl_expanded
-        )
-    scope_ids: np.ndarray | None = None
-    ts_ranges: list[int] | None = None
-    if scope and not query_is_empty:
-        scope_ids = _scope_nonmatch_ids(spark, index_dir, scope)
-        # time pruning: posting ranges a ts window can touch (None =
-        # unavailable / not a ts scope; [] = the window is empty)
-        ts_ranges = _ts_allowed_ranges(spark, index_dir, scope)
-    xids: np.ndarray | None = (
-        np.array(sorted(set(exclude_ids)), dtype=np.int64)
-        if exclude_ids
-        else None
-    )
-    fits_local = (
-        len(expanded) > 0
-        and expanded.drop_duplicates("term")["df"].sum() <= LOCAL_SCORE_MAX_POSTINGS
-    )
-    if k is None:
-        local_score = False  # full scored set: distributed only
-        prune = False
-    elif local_score is None:
-        local_score = fits_local
-    else:
-        # explicit local_score=True must not bypass the driver-memory
-        # guard — a stop-word-grade wildcard would OOM the query node
-        local_score = local_score and fits_local
-    if exclude and not query_is_empty and excl_ids is None:
-        local_score = False  # exclusion set must stay distributed
-    if scope and not query_is_empty and scope_ids is None:
-        local_score = False  # oversize complement: semi-join distributed
-    if local_score and not query_is_empty:
-        dead = _dead_ids_capped(spark, index_dir)
-        if dead is not None:  # oversize delete sets go distributed
-            if excl_ids is not None and len(excl_ids):
-                dead = np.union1d(dead, excl_ids)
-            if scope_ids is not None and len(scope_ids):
-                dead = np.union1d(dead, scope_ids)
-            if xids is not None:
-                dead = np.union1d(dead, xids)
-            res = _search_local(
-                spark, index_dir, expanded, stats, len(patterns), k, mode,
-                with_urls, dead, prune=prune, allowed_ranges=ts_ranges,
-                min_match=min_match,
-            )
-            if res is not None:
-                return res
-    full_mask = (1 << n_patterns) - 1
-    if query_is_empty:
-        result = []
-    else:
-        expanded = expanded.copy()
-        expanded["idf"] = [idf(stats["n_docs"], int(d)) for d in expanded["df"]]
-        # one row per matched vocab term: idf + pattern-coverage mask
-        aggs = _boost_aggs(expanded, dict(
-            idf=("idf", "first"),
-            mask=("pattern_idx", lambda s: int(np.bitwise_or.reduce([1 << i for i in s]))),
-        ))
-        term_info = _fold_boost_idf(
-            expanded.groupby("term").agg(**aggs).reset_index()
-        )
-        qterms = spark.createDataFrame(term_info[["term", "idf", "mask"]])
-        term_list = list(term_info["term"])
-        if prune and exclude and excl_ids is None:
-            # θ cannot account for an oversize exclusion set: an
-            # excluded doc in the θ probe would inflate θ and prune
-            # ranges holding the true top-k. Fall back to exact
-            # unpruned decode (still one distributed job).
-            prune = False
-        if prune and scope and scope_ids is None:
-            # same soundness argument for an oversize scope complement
-            prune = False
-        and_masks = None
-        if mode == "and" and not prune and n_patterns > 1:
-            # candidate-range pre-intersection: decode only ranges
-            # where every pattern is present (exact — a matching
-            # doc's postings live in one range). The pruned plan does
-            # its own per-range AND-mask filtering.
-            and_masks = (
-                dict(zip(term_info["term"], (int(m) for m in term_info["mask"]))),
-                full_mask,
-            )
-        decoded = _decoded_postings(
-            spark, index_dir, qterms, stats, term_list, and_masks=and_masks,
-            allowed_ranges=ts_ranges,
-        )
-        if prune:
-            dead_p = None
-            extra = [
-                a
-                for a in (excl_ids, scope_ids, xids)
-                if a is not None and len(a)
-            ]
-            if extra:
-                tomb = _dead_ids_capped(spark, index_dir)
-                # oversize tombstones leave dead_p=None: _prune_plan
-                # then recomputes (None again) and keeps θ=0 — safe
-                dead_p = (
-                    np.union1d(tomb, np.concatenate(extra))
-                    if tomb is not None
-                    else None
-                )
-            decoded = _pruned_decode(
-                spark, index_dir, qterms, stats, k, full_mask, term_list,
-                term_info, mode=mode, dead=dead_p, allowed_ranges=ts_ranges,
-            )
-        scored = (
-            decoded.join(F.broadcast(qterms), "term")
-            .groupBy("doc_id")
-            .agg(
-                F.sum(F.col("idf") * F.col("tfnorm")).alias("score"),
-                F.bit_or("mask").alias("mask"),
-            )
-        )
-        if mode == "and":
-            scored = scored.filter(F.col("mask") == full_mask)
-        elif min_match is not None and min_match > 1:
-            scored = scored.filter(
-                F.bit_count(F.col("mask")) >= min_match
-            )
-        scored = apply_tombstones(spark, index_dir, scored)
-        if exclude:
-            if excl_ids is not None and len(excl_ids) == 0:
-                pass  # no exclude pattern matched anything
-            elif excl_ids is not None and len(excl_ids) <= TOMBSTONE_LOCAL_MAX:
-                # ids already resident and small: broadcast anti-join,
-                # no second decode job
-                excl_df = local_df(
-                    spark, [(int(i),) for i in excl_ids], "doc_id long"
-                )
-                scored = scored.join(F.broadcast(excl_df), "doc_id", "left_anti")
-            else:
-                excl_df = _exclusion_docs_df(
-                    spark, index_dir, exclude, stats, expanded=excl_expanded
-                )
-                if excl_df is not None:
-                    scored = scored.join(excl_df, "doc_id", "left_anti")
-        if scope:
-            scored = _apply_scope(spark, index_dir, scored, scope, scope_ids)
-        if xids is not None:
-            xdf = local_df(spark, [(int(i),) for i in xids], "doc_id long")
-            scored = scored.join(F.broadcast(xdf), "doc_id", "left_anti")
-        result = scored.select("doc_id", "score").orderBy(
-            F.desc("score"), F.asc("doc_id")
-        )
-        if k is not None:
-            result = result.limit(k)
-    return finish_ranked(spark, index_dir, result, k, with_urls)
 
 
 def search_sharded(
@@ -1272,8 +1066,8 @@ def search_sharded(
       driver-side concat, no jobs when warm);
     * per-shard postings are decoded with the SHARD's layout
       (range_bits) but scored with the GLOBAL idf and avgdl — the
-      BM25 partial is recomputed in Catalyst from (tf, doc_len), so
-      shard-local encode-time avgdl never leaks into scores.
+      BM25 partial is recomputed from (tf, doc_len), so shard-local
+      encode-time avgdl never leaks into scores.
 
     A doc lives in exactly one shard, so per-shard AND-mask
     aggregation, candidate-range pre-intersection, and tombstone
@@ -1292,326 +1086,336 @@ def search_sharded(
     is already one decode job over all shards). ``with_urls``: each
     url comes from the resident url cache of the doc's own shard
     (see `search`)."""
-    if scope:
-        parse_scope(scope)
-    patterns, boosts = split_boosts(patterns)
+    return _ranked(
+        spark, list(index_dirs), patterns,
+        _flat_tree(len(patterns), mode, min_match), k, with_urls,
+        local_score=local_score, exclude=exclude, scope=scope,
+    )
+
+
+# --- the ranked-query core --------------------------------------------
+# Every ranked mode is a membership tree over the per-doc pattern mask
+# (bit i = pattern i matched a term in the doc): ("leaf", i),
+# ("not", child), ("and", [children]), ("or", [children]) and
+# ("atleast", [children], m). A flat query is an "and"/"or" node over
+# all its leaves, or "atleast" for min_match > 1
+# (Lucene minNrShouldMatch); a boolean query is its parsed AST
+# (`boolquery.parse_bool`). `_eval_np` evaluates a tree on the query
+# node, `_mask_predicate` compiles it to Catalyst — codegen'd, no UDF.
+
+
+def _flat_tree(n_patterns: int, mode: str, min_match: int | None) -> tuple:
+    """The membership tree of a flat query: AND = every pattern, OR =
+    any, ``min_match`` = at least m DISTINCT patterns — the continuum
+    between OR (1) and AND (n); membership-only, surviving scores are
+    the plain disjunctive sums."""
+    leaves = [("leaf", i) for i in range(n_patterns)]
     if min_match is not None:
         if mode != "or":
             raise ValueError("min_match applies to mode='or' queries")
-        if not 1 <= min_match <= len(patterns):
+        if not 1 <= min_match <= n_patterns:
             raise ValueError(
-                f"min_match must be in [1, {len(patterns)}], got {min_match}"
+                f"min_match must be in [1, {n_patterns}], got {min_match}"
             )
-    boosted = any(b != 1.0 for b in boosts)
-    stats_list = [cached_stats(spark, d) for d in index_dirs]
-    n_docs_g = sum(int(s["n_docs"]) for s in stats_list)
-    total_tokens_g = sum(int(s["total_tokens"]) for s in stats_list)
-    avgdl_g = (total_tokens_g / n_docs_g) if n_docs_g else 1.0
-    n_patterns = len(patterns)
-    full_mask = (1 << n_patterns) - 1
-    expansions = [expand_patterns(spark, d, patterns) for d in index_dirs]
-    if boosted:
-        expansions = [
-            e.assign(boost=[boosts[i] for i in e["pattern_idx"]])
-            if len(e)
-            else e
-            for e in expansions
-        ]
-    cat = []
-    for i, e in enumerate(expansions):
-        if len(e):
-            e = e.copy()
-            e["shard"] = i
-            cat.append(e)
-    allx = pd.concat(cat) if cat else None
-    covered = allx["pattern_idx"].nunique() if allx is not None else 0
-    if allx is None or (mode == "and" and covered < n_patterns) or (
-        min_match is not None and covered < min_match
-    ):
-        result = []
+        if min_match > 1:
+            return ("atleast", leaves, min_match)
+    return ("and" if mode == "and" else "or", leaves)
+
+
+def positive_leaves(node: tuple, depth: int = 0, out: set | None = None) -> set:
+    """Leaf indices under an EVEN number of NOTs — the score-bearing
+    leaves."""
+    if out is None:
+        out = set()
+    if node[0] == "leaf":
+        if depth % 2 == 0:
+            out.add(node[1])
+    elif node[0] == "not":
+        positive_leaves(node[1], depth + 1, out)
     else:
-        df_g = allx.drop_duplicates(["shard", "term"]).groupby("term")["df"].sum()
-        aggs = _boost_aggs(allx, dict(
-            mask=("pattern_idx", lambda s: int(np.bitwise_or.reduce([1 << i for i in s])))
-        ))
-        tinfo = allx.groupby("term").agg(**aggs).reset_index()
-        tinfo["idf"] = [idf(n_docs_g, int(df_g[t])) for t in tinfo["term"]]
-        # global max boost per term folded into the global idf —
-        # federation stays rank-identical to the union index
-        tinfo = _fold_boost_idf(tinfo).set_index("term")
-        local = (
-            _sharded_local(
-                spark, index_dirs, stats_list, expansions, tinfo, avgdl_g,
-                n_patterns, full_mask, k, mode, with_urls, exclude, scope,
-                min_match=min_match,
-            )
-            if local_score is not False
-            else None
-        )
-        if local is not None:
-            return local
-        scored_frames = []
-        for i, d in enumerate(index_dirs):
-            e = expansions[i]
-            if len(e) == 0:
-                continue
-            ts_r = _ts_allowed_ranges(spark, d, scope) if scope else None
-            if ts_r is not None and len(ts_r) == 0:
-                # shard-level time pruning: the shard's crawl period
-                # misses the window entirely — contribute nothing and
-                # launch nothing (the shard-per-crawl-month federation
-                # shape: a 1-month window touches ONE shard of a
-                # multi-year federation). Global df/avgdl above still
-                # counted this shard — scores are unchanged, exactly
-                # as if its empty contribution had been unioned in.
-                continue
-            terms_s = sorted(set(e["term"]))
-            ti = tinfo.loc[terms_s].reset_index()
-            qterms = spark.createDataFrame(ti[["term", "idf", "mask"]])
-            and_masks = None
-            if mode == "and" and n_patterns > 1:
-                and_masks = (
-                    dict(zip(ti["term"], (int(m) for m in ti["mask"]))),
-                    full_mask,
-                )
-            decoded = _decoded_postings(
-                spark, d, qterms, stats_list[i], terms_s, and_masks=and_masks,
-                allowed_ranges=ts_r,
-            )
-            w = (
-                F.col("idf")
-                * F.col("tf")
-                * (K1 + 1.0)
-                / (
-                    F.col("tf")
-                    + K1 * (1.0 - B + B * F.col("doc_len") / F.lit(avgdl_g))
-                )
-            )
-            sc = (
-                decoded.join(F.broadcast(qterms), "term")
-                .groupBy("doc_id")
-                .agg(F.sum(w).alias("score"), F.bit_or("mask").alias("mask"))
-            )
-            if mode == "and":
-                sc = sc.filter(F.col("mask") == full_mask)
-            elif min_match is not None and min_match > 1:
-                sc = sc.filter(F.bit_count(F.col("mask")) >= min_match)
-            sc = apply_tombstones(spark, d, sc)
-            if exclude:
-                excl_df = _exclusion_docs_df(spark, d, exclude, stats_list[i])
-                if excl_df is not None:
-                    sc = sc.join(excl_df, "doc_id", "left_anti")
-            if scope:
-                sc = _apply_scope(
-                    spark, d, sc, scope, _scope_nonmatch_ids(spark, d, scope)
-                )
-            scored_frames.append(
-                sc.select("doc_id", "score", F.lit(i).alias("_shard"))
-            )
-        if not scored_frames:
-            # every matching shard was time-pruned away
-            return finish_ranked(spark, index_dirs, [], k, with_urls)
-        merged = scored_frames[0]
-        for f in scored_frames[1:]:
-            merged = merged.unionByName(f)
-        result = merged.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    return finish_ranked(spark, index_dirs, result, k, with_urls)
+        for c in node[1]:
+            positive_leaves(c, depth, out)
+    return out
 
 
-def _sharded_local(
+def required_leaves(node: tuple) -> set:
+    """Leaf indices that are TRUE in every satisfying assignment —
+    the certain positive conjuncts: leaves required by all children
+    of an AND (union) or by every branch of an OR (intersection);
+    nothing is required under a NOT or an at-least node
+    (conservative — a double-negated conjunction is treated as
+    requiring nothing). These drive the candidate-range
+    pre-intersection of flat AND and boolean queries alike."""
+    if node[0] == "leaf":
+        return {node[1]}
+    if node[0] in ("not", "atleast"):
+        return set()
+    parts = [required_leaves(c) for c in node[1]]
+    if node[0] == "and":
+        return set().union(*parts)
+    out = parts[0]
+    for p in parts[1:]:
+        out &= p
+    return out
+
+
+def _satisfiable(node: tuple, covered: int) -> bool:
+    """Can any doc satisfy the tree when only the leaves in the
+    ``covered`` bitmask have vocabulary expansions in its index? A
+    NOT is optimistic (the doc may lack the leaf). False proves the
+    index holds no result: a missing required leaf, fewer covered
+    patterns than min_match, or no expansion at all."""
+    if node[0] == "leaf":
+        return bool(covered >> node[1] & 1)
+    if node[0] == "not":
+        return True
+    hits = [_satisfiable(c, covered) for c in node[1]]
+    if node[0] == "atleast":
+        return sum(hits) >= node[2]
+    return all(hits) if node[0] == "and" else any(hits)
+
+
+def _eval_np(node: tuple, mask_acc: np.ndarray) -> np.ndarray:
+    """Vectorized tree evaluation over per-doc leaf bitmasks — the
+    numpy twin of ``_mask_predicate`` for the query-node scorer."""
+    if node[0] == "leaf":
+        return (mask_acc & (1 << node[1])) != 0
+    if node[0] == "not":
+        return ~_eval_np(node[1], mask_acc)
+    parts = [_eval_np(c, mask_acc) for c in node[1]]
+    if node[0] == "atleast":
+        return np.sum(parts, axis=0) >= node[2]
+    return reduce(np.logical_and if node[0] == "and" else np.logical_or, parts)
+
+
+def _mask_predicate(node: tuple, mask: Column) -> Column:
+    """Compile the tree to a Catalyst boolean over the leaf bitmask."""
+    if node[0] == "leaf":
+        return mask.bitwiseAND(F.lit(1 << node[1])) != 0
+    if node[0] == "not":
+        return ~_mask_predicate(node[1], mask)
+    cols = [_mask_predicate(c, mask) for c in node[1]]
+    if node[0] == "atleast":
+        return reduce(operator.add, [c.cast("int") for c in cols]) >= node[2]
+    return reduce(operator.and_ if node[0] == "and" else operator.or_, cols)
+
+
+def _required_masks(
+    expanded: pd.DataFrame, req: list[int]
+) -> tuple[dict[str, int], int]:
+    """(mask_by_term, full_mask) over the required leaves — the input
+    of `_and_surviving_ranges`, with leaf indices re-packed into
+    contiguous bits."""
+    bit = {leaf: i for i, leaf in enumerate(req)}
+    mask_by_term: dict[str, int] = {}
+    for term, p in zip(expanded["term"], expanded["pattern_idx"]):
+        if p in bit:
+            mask_by_term[term] = mask_by_term.get(term, 0) | 1 << bit[p]
+    return mask_by_term, (1 << len(req)) - 1
+
+
+def _term_info(
+    expansions: list[pd.DataFrame], n_docs: int, positive: set
+) -> pd.DataFrame:
+    """One row per matched vocabulary term → (term, idf, mask): the
+    pattern-coverage mask and the scoring weight. The weight is the
+    BM25 idf from the GLOBAL df (Σ df over the shards holding the
+    term), times the term's max boost (see split_boosts), and 0 for a
+    term whose leaves are all negated — its mask bits still gate
+    membership, it never scores. Every consumer (resident and
+    distributed scoring, θ probes, block upper bounds) reads this one
+    pre-multiplied column, so all paths stay rank-identical."""
+    df: dict[str, int] = {}
+    mask: dict[str, int] = {}
+    pos: dict[str, bool] = {}
+    boost: dict[str, float] = {}
+    for e in expansions:
+        for t, d in dict(zip(e["term"], e["df"])).items():
+            df[t] = df.get(t, 0) + int(d)
+        boosts = e["boost"] if "boost" in e.columns else [1.0] * len(e)
+        for t, p, b in zip(e["term"], e["pattern_idx"], boosts):
+            mask[t] = mask.get(t, 0) | 1 << int(p)
+            pos[t] = pos.get(t, False) or int(p) in positive
+            boost[t] = max(boost.get(t, b), b)
+    terms = sorted(df)
+    return pd.DataFrame({
+        "term": terms,
+        "idf": [idf(n_docs, df[t]) * float(pos[t]) * boost[t] for t in terms],
+        "mask": np.array([mask[t] for t in terms], dtype=np.int64),
+    })
+
+
+class _Shard(NamedTuple):
+    """One index of a ranked query: its position in the shard list,
+    its stats carrying the GLOBAL avgdl, its slice of the term info,
+    its DeadSet and the ranges its decode is restricted to (None =
+    every range)."""
+
+    pos: int
+    dir: str
+    stats: dict
+    terms: pd.DataFrame
+    dead: DeadSet
+    ranges: list[int] | None
+
+
+def _ranked(
     spark: SparkSession,
     index_dirs: list[str],
-    stats_list: list[dict],
-    expansions: list[pd.DataFrame],
-    tinfo: pd.DataFrame,
-    avgdl_g: float,
-    n_patterns: int,
-    full_mask: int,
-    k: int,
-    mode: str,
+    patterns: list[str],
+    tree: tuple,
+    k: int | None,
     with_urls: bool,
+    local_score: bool | None = None,
+    prune: bool = False,
+    pre_intersect: bool = True,
     exclude: list[str] | None = None,
     scope: str | None = None,
-    min_match: int | None = None,
-) -> DataFrame | None:
-    """Query-node serving path for federated search: per-shard
-    resident block fetch (range pre-intersected for AND) + numpy BM25
-    with the GLOBAL avgdl/idf, merged driver-side — zero Spark jobs
-    warm, same zero-job contract as the single-index serving path.
-    Returns None when any shard's candidate postings or tombstone set
-    exceeds the driver caps (caller runs the distributed plan)."""
-    total_df = 0
-    for e in expansions:
-        if len(e):
-            total_df += int(e.drop_duplicates("term")["df"].sum())
-    if total_df == 0 or total_df > LOCAL_SCORE_MAX_POSTINGS:
-        return None
-    deads: list[np.ndarray | None] = []
-    for i, d in enumerate(index_dirs):
-        if len(expansions[i]) == 0:
-            # shard matches no query term: it contributes nothing, so
-            # its tombstone/exclusion sizes must not force the whole
-            # query off the serving path (review r4)
-            deads.append(None)
-            continue
-        dead = _dead_ids_capped(spark, d)
-        if dead is None:
-            return None
-        if exclude:
-            excl = _exclusion_ids(spark, d, exclude, stats_list[i])
-            if excl is None:
-                return None  # oversize exclusion: distributed plan
-            if len(excl):
-                dead = np.union1d(dead, excl)
-        if scope:
-            sids = _scope_nonmatch_ids(spark, d, scope)
-            if sids is None:
-                return None  # oversize complement: distributed plan
-            if len(sids):
-                dead = np.union1d(dead, sids)
-        deads.append(dead)
-    merged: list[tuple[int, float, int]] = []  # (doc_id, score, shard)
-    for i, d in enumerate(index_dirs):
-        e = expansions[i]
-        if len(e) == 0:
-            continue
-        terms_s = sorted(set(e["term"]))
-        ti = tinfo.loc[terms_s].reset_index()
-        if len(ti) > ISIN_PUSHDOWN_MAX:
-            return None
-        stats_s = dict(stats_list[i])
-        stats_s["avgdl"] = avgdl_g  # global stats for scoring
-        surviving = None
-        if mode == "and" and n_patterns > 1:
-            surviving = _and_surviving_ranges(
-                spark, d,
-                dict(zip(ti["term"], (int(m) for m in ti["mask"]))),
-                full_mask, stats_s,
-            )
-            if surviving == []:
-                continue
-        if scope:
-            surviving = _intersect_ranges(
-                surviving, _ts_allowed_ranges(spark, d, scope)
-            )
-            if surviving is not None and len(surviving) == 0:
-                continue
-        blocks = _fetch_blocks(spark, d, terms_s, stats_s, ranges=surviving)
-        uniq, score, mask_acc = _score_blocks_np(blocks, stats_s, ti)
-        if mode == "and":
-            keep = mask_acc == full_mask
-            uniq, score = uniq[keep], score[keep]
-        elif min_match is not None and min_match > 1:
-            # a doc lives in exactly one shard, so the shard-local
-            # mask IS its global pattern coverage
-            keep = _popcount64(mask_acc) >= min_match
-            uniq, score = uniq[keep], score[keep]
-        if len(deads[i]):
-            alive = ~np.isin(uniq, deads[i])
-            uniq, score = uniq[alive], score[alive]
-        order = np.lexsort((uniq, -score))[:k]
-        merged.extend((int(uniq[j]), float(score[j]), i) for j in order)
-    merged.sort(key=lambda t: (-t[1], t[0]))
-    return finish_ranked(spark, index_dirs, merged[:k], k, with_urls)
+    exclude_ids: list[int] | None = None,
+) -> DataFrame:
+    """The one executor behind `search`, `search_sharded`,
+    `boolquery.search_bool` and `boolquery.search_bool_sharded`: BM25
+    top-k over ``index_dirs`` of the docs satisfying ``tree``.
 
-
-def _search_local(
-    spark: SparkSession,
-    index_dir: str,
-    expanded: pd.DataFrame,
-    stats: dict,
-    n_patterns: int,
-    k: int,
-    mode: str,
-    with_urls: bool,
-    dead: np.ndarray,
-    prune: bool = False,
-    allowed_ranges: list[int] | None = None,
-    min_match: int | None = None,
-) -> DataFrame | None:
-    """Query-node scoring: one pushdown-filtered block fetch, then
-    numpy decode + BM25 + AND-mask + top-k locally. Rank-identical to
-    the distributed path (same formula, same tie-break). ``dead`` is
-    the (capped, see TOMBSTONE_LOCAL_MAX) tombstone id array.
-    ``allowed_ranges`` (ts-scope time pruning) intersects whatever
-    range restriction the plan derives — exact because ``dead``
-    already carries the scope complement.
-
-    With ``prune=True`` the fetch is preceded by the block-max prune
-    plan (2 light metadata/θ jobs) and reads ONLY surviving ranges —
-    3 single-stage pushdown scans total, no distributed agg. Returns
-    None when the expansion is too wide for isin pushdown (caller
-    falls back to the distributed pruned plan)."""
-    full_mask = (1 << n_patterns) - 1
-    aggs = _boost_aggs(expanded, dict(
-        df=("df", "first"),
-        mask=("pattern_idx", lambda s: int(np.bitwise_or.reduce([1 << i for i in s]))),
-    ))
-    term_info = expanded.groupby("term").agg(**aggs).reset_index()
-    term_info["idf"] = [idf(stats["n_docs"], int(d)) for d in term_info["df"]]
-    term_info = _fold_boost_idf(term_info)
-    if prune and len(term_info) > ISIN_PUSHDOWN_MAX:
-        return None
-    covered = int(np.bitwise_or.reduce(term_info["mask"].values)) if len(term_info) else 0
-    if (mode == "and" and covered != full_mask) or (
-        min_match is not None and int(covered).bit_count() < min_match
-    ):
-        result_rows = []
-    else:
-        surviving = None
-        if prune:
-            plan = _prune_plan(
-                spark, index_dir, stats, k, full_mask,
-                list(term_info["term"]), term_info, dead=dead, mode=mode,
-            )
-            if plan is None:
-                return finish_ranked(spark, index_dir, [], k, with_urls)
-            surviving, _ = plan
-        elif mode == "and" and n_patterns > 1:
-            # unpruned AND still gets candidate-range pre-intersection
-            # from the resident metadata (zero jobs warm): only ranges
-            # where every pattern is present are fetched
-            surviving = _and_surviving_ranges(
-                spark,
-                index_dir,
-                dict(zip(term_info["term"], (int(m) for m in term_info["mask"]))),
-                full_mask,
-                stats,
-            )
-            if surviving == []:
-                return finish_ranked(spark, index_dir, [], k, with_urls)
-            # (_fetch_blocks reads everything for a survivor set wider
-            # than the isin cap — still exact)
-        surviving = _intersect_ranges(surviving, allowed_ranges)
-        if surviving is not None and len(surviving) == 0:
-            return finish_ranked(spark, index_dir, [], k, with_urls)
-        blocks = _fetch_blocks(
-            spark, index_dir, list(term_info["term"]), stats, ranges=surviving
+    A single index is the one-shard case: n_docs, avgdl and df are
+    global over the shards, which for one index are its own stats. A
+    doc lives in exactly one shard, so masks, the tree, the DeadSet
+    and range restrictions all stay shard-local, and a shard whose
+    vocabulary cannot satisfy the tree is skipped. Each shard decodes
+    only the ranges that can hold a result: the block-max prune plan
+    (``prune``: single index, flat AND/OR, bounded k, resident dead
+    set), else the pre-intersection on the tree's certain conjuncts
+    (``pre_intersect``), either one intersected with a ts scope's
+    ranges. Scoring runs on the query node (`_score_resident`) when
+    the candidate postings fit LOCAL_SCORE_MAX_POSTINGS and every
+    shard's dead set is resident, else as one distributed plan
+    (`_score_distributed`); ``local_score=False`` forces the latter.
+    Results are rank-identical either way."""
+    if scope:
+        parse_scope(scope)  # validate before any work
+    patterns, boosts = split_boosts(patterns)
+    stats_list = [cached_stats(spark, d) for d in index_dirs]
+    n_docs = sum(int(s["n_docs"]) for s in stats_list)
+    tokens = sum(int(s["total_tokens"]) for s in stats_list)
+    avgdl = tokens / n_docs if n_docs else 1.0
+    expansions = [expand_patterns(spark, d, patterns) for d in index_dirs]
+    if any(b != 1.0 for b in boosts):
+        expansions = [
+            e.assign(boost=[boosts[i] for i in e["pattern_idx"]]) for e in expansions
+        ]
+    # a shard that cannot satisfy the tree contributes nothing and gets
+    # no DeadSet, so its tombstone/exclusion sizes cannot force the
+    # query off the serving path; its df still counts in the global idf
+    live = [
+        i
+        for i, e in enumerate(expansions)
+        if _satisfiable(tree, reduce(operator.or_, (1 << int(p) for p in e["pattern_idx"]), 0))
+    ]
+    if not live:
+        return finish_ranked(spark, index_dirs, [], k, with_urls)
+    info = _term_info(expansions, n_docs, positive_leaves(tree))
+    req = sorted(required_leaves(tree)) if pre_intersect else []
+    # min_match > 1 (an "atleast" tree) keeps prune off, as search()
+    # documents and the CLI enforces
+    prune = prune and k is not None and len(index_dirs) == 1 and tree[0] in ("and", "or")
+    shards = []
+    for i in live:
+        d, e = index_dirs[i], expansions[i]
+        stats = dict(stats_list[i], avgdl=avgdl)
+        terms = info[info["term"].isin(set(e["term"]))]
+        dead = DeadSet(spark, d, exclude=exclude, scope=scope, exclude_ids=exclude_ids)
+        if prune and dead.resident is not None:
+            ranges = _prune_plan(spark, d, stats, k, tree, terms, dead.resident)
+        elif len(req) > 1:
+            # a satisfying doc has every required leaf, and its
+            # postings live in one range: only ranges where each
+            # required leaf has ≥1 expansion can hold results. The
+            # other ranges drop for ALL query terms (negated leaves
+            # included) — surviving docs keep every row, so scores
+            # are unchanged.
+            ranges = _and_surviving_ranges(spark, d, *_required_masks(e, req), stats)
+        else:
+            ranges = None
+        # ranges == [] (e.g. a ts window missing this shard's crawl
+        # period — a 1-month window touches ONE shard of a multi-year
+        # shard-per-month federation): the shard launches nothing,
+        # and scores are unchanged since global stats still count it
+        shards.append(
+            _Shard(i, d, stats, terms, dead, _intersect_ranges(ranges, dead.ranges))
         )
-        uniq, score, mask_acc = _score_blocks_np(blocks, stats, term_info)
-        if mode == "and":
-            keep = mask_acc == full_mask
-            uniq, score = uniq[keep], score[keep]
-        elif min_match is not None and min_match > 1:
-            keep = _popcount64(mask_acc) >= min_match
-            uniq, score = uniq[keep], score[keep]
-        if len(dead):
-            alive = ~np.isin(uniq, dead)
-            uniq, score = uniq[alive], score[alive]
+    # the postings cap holds even for an explicit local_score=True: a
+    # stop-word-grade wildcard must never reach the query node
+    n_postings = sum(
+        int(expansions[s.pos].drop_duplicates("term")["df"].sum()) for s in shards
+    )
+    resident = (
+        k is not None
+        and local_score is not False
+        and 0 < n_postings <= LOCAL_SCORE_MAX_POSTINGS
+        and all(s.dead.resident is not None for s in shards)
+    )
+    score = _score_resident if resident else _score_distributed
+    return finish_ranked(spark, index_dirs, score(spark, shards, tree, k), k, with_urls)
+
+
+def _score_resident(
+    spark: SparkSession, shards: list[_Shard], tree: tuple, k: int
+) -> list[tuple[int, float, int]]:
+    """Query-node scoring → the top-k (doc_id, score, shard) rows: per
+    shard one block fetch through the block cache, numpy decode +
+    BM25 (`_score_blocks_np`), the tree over the leaf masks and the
+    resident dead set; the shards' top-k merge driver-side. Same
+    formula and tie-break as `_score_distributed`; zero Spark jobs
+    warm."""
+    rows: list[tuple[int, float, int]] = []
+    for s in shards:
+        if s.ranges == []:
+            continue
+        blocks = _fetch_blocks(
+            spark, s.dir, list(s.terms["term"]), s.stats, ranges=s.ranges
+        )
+        uniq, score, mask_acc = _score_blocks_np(blocks, s.stats, s.terms)
+        keep = _eval_np(tree, mask_acc) & ~np.isin(uniq, s.dead.resident)
+        uniq, score = uniq[keep], score[keep]
         order = np.lexsort((uniq, -score))[:k]
-        result_rows = [(int(uniq[i]), float(score[i])) for i in order]
-    return finish_ranked(spark, index_dir, result_rows, k, with_urls)
+        rows.extend((int(uniq[j]), float(score[j]), s.pos) for j in order)
+    rows.sort(key=lambda t: (-t[1], t[0]))
+    return rows[:k]
 
 
-def _popcount64(a: np.ndarray) -> np.ndarray:
-    """Vectorized popcount (numpy<2 lacks bitwise_count); query masks
-    carry ≤ MAX_QUERY_PATTERNS=63 bits so the shift loop is bounded."""
-    a = a.astype(np.uint64, copy=True)
-    out = np.zeros(a.shape, dtype=np.int64)
-    while a.any():
-        out += (a & np.uint64(1)).astype(np.int64)
-        a >>= np.uint64(1)
-    return out
+def _score_distributed(
+    spark: SparkSession, shards: list[_Shard], tree: tuple, k: int | None
+) -> DataFrame | list:
+    """Distributed scoring → the ranked (doc_id, score, _shard) frame,
+    limited to k: per shard one decode job over its ranges, one
+    shuffle keyed doc_id aggregating (Σ idf·tfnorm, bit_or(mask)),
+    the tree as a Catalyst predicate and `DeadSet.drop`; the shards
+    union into one global top-k (TakeOrderedAndProject)."""
+    frames = []
+    for s in shards:
+        if s.ranges == []:
+            continue
+        terms = list(s.terms["term"])
+        qterms = spark.createDataFrame(s.terms)
+        scored = (
+            _decoded_postings(spark, s.dir, qterms, s.stats, terms, allowed_ranges=s.ranges)
+            .join(F.broadcast(qterms), "term")
+            .groupBy("doc_id")
+            .agg(
+                F.sum(F.col("idf") * F.col("tfnorm")).alias("score"),
+                F.bit_or("mask").alias("mask"),
+            )
+            .filter(_mask_predicate(tree, F.col("mask")))
+        )
+        frames.append(
+            s.dead.drop(scored).select("doc_id", "score", F.lit(s.pos).alias("_shard"))
+        )
+    if not frames:
+        return []
+    result = reduce(DataFrame.unionByName, frames).orderBy(
+        F.desc("score"), F.asc("doc_id")
+    )
+    return result if k is None else result.limit(k)
 
 
 def finish_ranked(
@@ -1978,48 +1782,14 @@ def _scope_docs_df(
     return docs.filter(_scope_match_pred(field, value)).select("doc_id")
 
 
-def _apply_scope(
-    spark: SparkSession,
-    index_dir: str,
-    scored: DataFrame,
-    scope: str,
-    scope_ids: np.ndarray | None,
-) -> DataFrame:
-    """Distributed scope application on a (doc_id, ...) frame: small
-    complement → broadcast anti-join; oversize complement → left_semi
-    against the filtered docs scan."""
-    if scope_ids is not None and len(scope_ids) == 0:
-        return scored  # every live doc matches the scope
-    if scope_ids is not None:
-        ndf = local_df(
-            spark, [(int(i),) for i in scope_ids], "doc_id long"
-        )
-        return scored.join(F.broadcast(ndf), "doc_id", "left_anti")
-    return scored.join(
-        _scope_docs_df(spark, index_dir, scope), "doc_id", "left_semi"
-    )
-
-
 def _exclusion_ids(
-    spark: SparkSession,
-    index_dir: str,
-    exclude: list[str],
-    stats: dict,
-    expanded: pd.DataFrame | None = None,
+    spark: SparkSession, index_dir: str, expanded: pd.DataFrame, stats: dict
 ) -> np.ndarray | None:
-    """doc_ids containing ANY expansion of an exclude pattern, as a
+    """doc_ids containing ANY term of an exclusion expansion, as a
     driver-side array — or None when the exclusion postings exceed
     LOCAL_SCORE_MAX_POSTINGS (a stop-word-grade exclusion must never
-    be collected onto the query node; callers then anti-join
-    distributed and disable θ-based pruning). Exclusion is per-query
-    tombstoning: the ids merge into the ``dead`` set downstream, so
-    the θ probe and the block-max prune plan stay exact — a θ
-    inflated by docs later excluded could prune ranges holding the
-    true top-k. ``expanded`` reuses a caller-side expansion of the
-    same patterns (one dictionary wildcard scan, not two)."""
-    if expanded is None:
-        # boosts cannot change membership: strip, honor the base
-        expanded = expand_patterns(spark, index_dir, split_boosts(exclude)[0])
+    be collected onto the query node; the DeadSet then anti-joins
+    distributed and pruning stays off)."""
     if len(expanded) == 0:
         return np.empty(0, dtype=np.int64)
     uniq = expanded.drop_duplicates("term")
@@ -2034,21 +1804,11 @@ def _exclusion_ids(
 
 
 def _exclusion_docs_df(
-    spark: SparkSession,
-    index_dir: str,
-    exclude: list[str],
-    stats: dict,
-    expanded: pd.DataFrame | None = None,
-) -> DataFrame | None:
-    """Distinct doc_ids matching any exclude pattern as a DataFrame
-    (the distributed anti-join side for exclusion sets too large to
-    hold on the query node), or None when no pattern matches.
-    ``expanded`` reuses a caller-side expansion."""
-    if expanded is None:
-        # boosts cannot change membership: strip, honor the base
-        expanded = expand_patterns(spark, index_dir, split_boosts(exclude)[0])
-    if len(expanded) == 0:
-        return None
+    spark: SparkSession, index_dir: str, expanded: pd.DataFrame, stats: dict
+) -> DataFrame:
+    """Distinct doc_ids holding any term of an exclusion expansion as a
+    DataFrame — the distributed anti-join side for exclusion sets too
+    large to hold on the query node."""
     terms = sorted(set(expanded["term"]))
     return (
         _decoded_postings(spark, index_dir, None, stats, terms)
@@ -2057,49 +1817,159 @@ def _exclusion_docs_df(
     )
 
 
+class DeadSet:
+    """Every doc one query must not return from one index: tombstones,
+    the scope complement, docs holding any expansion of an ``exclude``
+    pattern (NOT semantics, per-query tombstoning) and caller
+    ``exclude_ids`` — plus ``ranges``, the posting ranges a ts scope
+    can touch (`_ts_allowed_ranges`; None = every range).
+
+    Two forms of the same filter:
+
+    * ``resident`` — the union as one driver-side array, or None when
+      any part is over its cap. This is the single θ-soundness rule:
+      block-max pruning and the query-node scorer run only when it is
+      not None, because a dead doc left in a θ probe would inflate θ
+      and prune ranges holding the true top-k.
+    * ``drop(frame)`` — the distributed anti-/semi-joins on any
+      (doc_id, ...) frame: the deleted table, small id sets as one
+      broadcast anti-join, an oversize exclusion as a decoded
+      anti-join, an oversize scope complement as a left_semi join
+      against the filtered docs scan.
+
+    Parts are computed on first use and served from the per-index
+    caches, so a warm query builds its dead set with zero Spark
+    jobs."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        index_dir: str,
+        exclude: list[str] | None = None,
+        scope: str | None = None,
+        exclude_ids: list[int] | None = None,
+    ):
+        if scope:
+            parse_scope(scope)  # validate before any work
+        self.spark, self.index_dir, self.scope = spark, index_dir, scope
+        # boosts cannot change membership: strip, honor the base
+        self.exclude = split_boosts(exclude)[0] if exclude else None
+        self.exclude_ids = (
+            np.array(sorted(set(exclude_ids)), dtype=np.int64) if exclude_ids else None
+        )
+
+    @cached_property
+    def ranges(self) -> list[int] | None:
+        if not self.scope:
+            return None
+        return _ts_allowed_ranges(self.spark, self.index_dir, self.scope)
+
+    @cached_property
+    def _excl_expanded(self) -> pd.DataFrame:
+        # expanded ONCE: the id fetch and the anti-join share it
+        return expand_patterns(self.spark, self.index_dir, self.exclude)
+
+    @cached_property
+    def _excl_ids(self) -> np.ndarray | None:
+        return _exclusion_ids(
+            self.spark, self.index_dir, self._excl_expanded,
+            cached_stats(self.spark, self.index_dir),
+        )
+
+    @cached_property
+    def _scope_ids(self) -> np.ndarray | None:
+        return _scope_nonmatch_ids(self.spark, self.index_dir, self.scope)
+
+    @cached_property
+    def resident(self) -> np.ndarray | None:
+        parts = []
+        if self.exclude:
+            parts.append(self._excl_ids)
+        if self.scope:
+            parts.append(self._scope_ids)
+        if self.exclude_ids is not None:
+            parts.append(self.exclude_ids)
+        if any(p is None for p in parts):
+            return None
+        tomb = _dead_ids_capped(self.spark, self.index_dir)
+        return None if tomb is None else reduce(np.union1d, parts, tomb)
+
+    def drop(self, frame: DataFrame) -> DataFrame:
+        frame = apply_tombstones(self.spark, self.index_dir, frame)
+        ids = [np.empty(0, dtype=np.int64)]
+        if self.exclude:
+            excl = self._excl_ids
+            if excl is not None and len(excl) <= TOMBSTONE_LOCAL_MAX:
+                ids.append(excl)
+            else:
+                frame = frame.join(
+                    _exclusion_docs_df(
+                        self.spark, self.index_dir, self._excl_expanded,
+                        cached_stats(self.spark, self.index_dir),
+                    ),
+                    "doc_id", "left_anti",
+                )
+        if self.scope:
+            if self._scope_ids is None:
+                frame = frame.join(
+                    _scope_docs_df(self.spark, self.index_dir, self.scope),
+                    "doc_id", "left_semi",
+                )
+            else:
+                ids.append(self._scope_ids)
+        if self.exclude_ids is not None:
+            ids.append(self.exclude_ids)
+        ids = reduce(np.union1d, ids)
+        if len(ids):
+            ids_df = local_df(self.spark, [(int(i),) for i in ids], "doc_id long")
+            frame = frame.join(F.broadcast(ids_df), "doc_id", "left_anti")
+        return frame
+
+
 def _prune_plan(
     spark: SparkSession,
     index_dir: str,
     stats: dict,
     k: int,
-    full_mask: int,
-    term_list: list[str],
+    tree: tuple,
     term_info: pd.DataFrame,
-    dead: np.ndarray | None = None,
-    mode: str = "and",
-) -> tuple[list[int], int] | None:
+    dead: np.ndarray,
+) -> list[int]:
     """Block-max prune planning — two LIGHT driver round-trips, both
     served from the resident caches when warm (zero Spark jobs):
 
     1. metadata probe — the block-stats columns for the query terms
        (``_block_meta``: resident metadata cache, or one isin-pushdown
        scan that never reads binary columns; a few rows per term per
-       range). Range upper bounds Σ_term idf·ub and AND-coverage masks
-       are computed in pandas on the driver.
+       range). Range upper bounds Σ_term idf·ub and coverage masks
+       are computed in pandas on the driver; a range whose mask
+       cannot satisfy the tree (AND: a pattern absent) drops.
     2. θ probe — the binary blocks of the single best range
        (``_fetch_blocks``: block cache, or one pushdown scan on
        term AND range_id), scored in numpy on the driver; θ = the k-th
-       LIVE score (tombstones excluded — a range full of deleted docs
-       must not inflate θ and prune the true top-k away; ADVICE r1).
+       LIVE score (``dead`` — the resident DeadSet — excluded: a range
+       full of deleted docs must not inflate θ and prune the true
+       top-k away; ADVICE r1).
 
-    Returns (surviving range_ids, Σ n_docs over surviving blocks), or
-    None when no range can satisfy the AND mask (empty result).
+    Returns the surviving range_ids ([] when no range can satisfy the
+    tree: empty result).
 
     Per-row upper bound: the stored block-max (tight) while the
     block's encode-time avgdl is current; after incremental appends
     shift avgdl, the avgdl-free bound (k1+1)·max_tf/(max_tf+k1·(1−b))
     which dominates tfnorm for any doc length.
 
-    ``mode='or'`` is the WAND home case (VERDICT r3 task 4): no
-    AND-coverage mask anywhere — a range survives iff the sum of its
-    present terms' upper bounds reaches θ, and θ comes from the k-th
-    live OR score of the best range. Sound because a doc's postings
-    live in exactly ONE range (range_id = doc_id >> range_bits), so
-    the per-range ub bounds any doc's TOTAL score in either mode.
+    An OR tree is the WAND home case (VERDICT r3 task 4): no
+    coverage filter — a range survives iff the sum of its present
+    terms' upper bounds reaches θ, and θ comes from the k-th live OR
+    score of the best range. Sound because a doc's postings live in
+    exactly ONE range (range_id = doc_id >> range_bits), so the
+    per-range ub bounds any doc's TOTAL score in either mode.
     """
+    term_list = list(term_info["term"])
     meta = _block_meta(spark, index_dir, term_list, stats)
     if len(meta) == 0:
-        return None
+        return []
     info = term_info.set_index("term")
     idfs = meta["term"].map(info["idf"]).values.astype(np.float64)
     masks = meta["term"].map(info["mask"]).values.astype(np.int64)
@@ -2108,81 +1978,20 @@ def _prune_plan(
     safe_ub = max_tf * (K1 + 1.0) / (max_tf + K1 * (1.0 - B))
     row_ub = np.where(fresh, meta["max_tfnorm"].values, safe_ub)
     per_range = pd.DataFrame(
-        {
-            "range_id": meta["range_id"].values,
-            "w": idfs * row_ub,
-            "mask": masks,
-            "n_docs": meta["n_docs"].values,
-        }
+        {"range_id": meta["range_id"].values, "w": idfs * row_ub, "mask": masks}
     ).groupby("range_id").agg(
         ub=("w", "sum"),
         mask=("mask", lambda s: int(np.bitwise_or.reduce(s.values))),
-        n_docs=("n_docs", "sum"),
     )
-    if mode == "and":
-        per_range = per_range[per_range["mask"] == full_mask]
+    per_range = per_range[_eval_np(tree, per_range["mask"].values.astype(np.int64))]
     if len(per_range) == 0:
-        return None
+        return []
     best_range = int(per_range["ub"].idxmax())
-
-    if dead is None:
-        dead = _dead_ids_capped(spark, index_dir)
-    theta = 0.0
-    if dead is not None:  # uncapped delete sets force θ=0 (safe: no pruning)
-        probe = _fetch_blocks(spark, index_dir, term_list, stats, ranges=[best_range])
-        uniq, score, mask_acc = _score_blocks_np(probe, stats, term_info)
-        live = ~np.isin(uniq, dead)
-        if mode == "and":
-            live &= mask_acc == full_mask
-        top = np.sort(score[live])[::-1]
-        if len(top) >= k:
-            theta = float(top[k - 1])
-
-    keep = per_range["ub"].values >= theta
-    surviving = [int(r) for r in per_range.index[keep]]
-    return surviving, int(per_range["n_docs"].values[keep].sum())
-
-
-def _pruned_decode(
-    spark: SparkSession,
-    index_dir: str,
-    qterms: DataFrame,
-    stats: dict,
-    k: int,
-    full_mask: int,
-    term_list: list[str],
-    term_info: pd.DataFrame,
-    mode: str = "and",
-    dead: np.ndarray | None = None,
-    allowed_ranges: list[int] | None = None,
-) -> DataFrame:
-    """Distributed block-max-pruned decode: prune plan (2 light jobs)
-    + ONE mapInPandas decode job over surviving blocks (term+range_id
-    pushdown reaches the parquet scan). ``dead`` augments the θ
-    probe's live filter (tombstones ∪ per-query exclusions); None →
-    the plan fetches tombstones itself. ``allowed_ranges`` (ts-scope
-    time pruning) intersects the plan's survivor set — exact, because
-    the scope's dead-set/anti-join already removes every doc those
-    ranges would have contributed."""
-    plan = _prune_plan(
-        spark, index_dir, stats, k, full_mask, term_list, term_info,
-        mode=mode, dead=dead,
-    )
-    if plan is None:
-        return local_df(spark, [], DECODED_SCHEMA)
-    surviving, _ = plan
-    surviving = _intersect_ranges(surviving, allowed_ranges)
-    if surviving is not None and len(surviving) == 0:
-        return local_df(spark, [], DECODED_SCHEMA)
-    blocks = _restrict_ranges(
-        spark,
-        _query_blocks(spark, index_dir, qterms, term_list, stats.get("n_term_buckets")),
-        surviving,
-    )
-    pruned_blocks = blocks.select(*_DECODE_COLS).withColumn(
-        "range_bits", F.lit(stats["range_bits"])
-    ).withColumn("avgdl", F.lit(stats["avgdl"]))
-    return pruned_blocks.mapInPandas(_decode_kernel, DECODED_SCHEMA)
+    probe = _fetch_blocks(spark, index_dir, term_list, stats, ranges=[best_range])
+    uniq, score, mask_acc = _score_blocks_np(probe, stats, term_info)
+    top = np.sort(score[~np.isin(uniq, dead) & _eval_np(tree, mask_acc)])[::-1]
+    theta = float(top[k - 1]) if len(top) >= k else 0.0
+    return [int(r) for r in per_range.index[per_range["ub"].values >= theta]]
 
 
 def _score_blocks_np(
@@ -2232,51 +2041,12 @@ def find_unranked(
     (ts scopes additionally prune whole posting ranges via the
     range_ts bounds). Boosts are stripped (membership-only
     surface)."""
-    if scope:
-        parse_scope(scope)
-    patterns = split_boosts(patterns)[0]
-    stats = cached_stats(spark, index_dir)
-    expanded = expand_patterns(spark, index_dir, patterns)
-    n_patterns = len(patterns)
-    if len(expanded) == 0 or expanded["pattern_idx"].nunique() < n_patterns:
-        return local_df(spark, [], "doc_id long, url string")
-    term_info = (
-        expanded.groupby("term")
-        .agg(mask=("pattern_idx", lambda s: int(np.bitwise_or.reduce([1 << i for i in s]))))
-        .reset_index()
-    )
-    qterms = spark.createDataFrame(term_info[["term", "mask"]]).withColumn(
-        "idf", F.lit(0.0)
-    )
-    full_mask = (1 << n_patterns) - 1
-    decoded = _decoded_postings(
-        spark, index_dir, qterms, stats, list(term_info["term"]),
-        and_masks=(
-            dict(zip(term_info["term"], (int(m) for m in term_info["mask"]))),
-            full_mask,
-        ),
-        allowed_ranges=(
-            _ts_allowed_ranges(spark, index_dir, scope) if scope else None
-        ),
-    )
-    hits = (
-        decoded.join(F.broadcast(qterms.select("term", "mask")), "term")
-        .groupBy("doc_id")
-        .agg(F.bit_or("mask").alias("mask"))
-        .filter(F.col("mask") == full_mask)
-        .select("doc_id")
-    )
+    # the full match set of the ranked core; the score is dropped
+    hits = search(
+        spark, index_dir, patterns, k=None, with_urls=False,
+        exclude=exclude, scope=scope,
+    ).select("doc_id")
     docs = _cached_table(spark, index_dir, "docs").select("doc_id", "url")
-    hits = apply_tombstones(spark, index_dir, hits)
-    if exclude:
-        excl_df = _exclusion_docs_df(spark, index_dir, exclude, stats)
-        if excl_df is not None:
-            hits = hits.join(excl_df, "doc_id", "left_anti")
-    if scope:
-        hits = _apply_scope(
-            spark, index_dir, hits, scope,
-            _scope_nonmatch_ids(spark, index_dir, scope),
-        )
     return hits.join(docs, "doc_id", "left").orderBy("doc_id")
 
 
@@ -2535,12 +2305,13 @@ def _phrase_frame(
     spark: SparkSession,
     index_dir: str,
     words: list[str],
+    dead: DeadSet,
     with_score: bool = True,
-    allowed_ranges: list[int] | None = None,
 ) -> DataFrame | None:
-    """→ (doc_id, n_occ[, score]) for every doc containing the exact
-    phrase, or None when a slot matches nothing in the dictionary
-    (no doc can match). One bucket-pruned isin-pushdown posting fetch,
+    """→ (doc_id, n_occ[, score]) for every doc outside ``dead``
+    containing the exact phrase, or None when a slot matches nothing
+    in the dictionary (no doc can match); a ts scope in ``dead``
+    time-prunes the positional fetch. One bucket-pruned isin-pushdown posting fetch,
     one positions decode, then a JVM-side join chain: the i-th slot's
     positions shifted by -i and intersected across slots
     (n_occ = |intersection|). A slot may be a wildcard pattern
@@ -2575,7 +2346,7 @@ def _phrase_frame(
     # are pruned before pos_bytes is ever read
     decoded = _decoded_pos(
         spark, index_dir, [slot_terms[p] for p in patterns], stats,
-        allowed_ranges=allowed_ranges,
+        allowed_ranges=dead.ranges,
     )
     first_occ: dict[str, int] = {}
     cur = None
@@ -2620,8 +2391,7 @@ def _phrase_frame(
         for i in first_occ.values():
             score = F.col(f"_w{i}") if score is None else score + F.col(f"_w{i}")
         cols.append(score.alias("score"))
-    out = cur.select(*cols).filter(F.col("n_occ") > 0)
-    return apply_tombstones(spark, index_dir, out)
+    return dead.drop(cur.select(*cols).filter(F.col("n_occ") > 0))
 
 
 def near_docs(
@@ -2655,8 +2425,7 @@ def near_docs(
     literal slots contribute idf·tfnorm, wildcard slots the MAX
     matched expansion partial, exactly `_phrase_frame`'s scoring
     (candidates and scores from the same scan)."""
-    if scope:
-        parse_scope(scope)  # validate before any work
+    dead = DeadSet(spark, index_dir, exclude=exclude, scope=scope)
     slots = phrase_slots(words)
     if not slots:
         raise ValueError("query contains no indexable terms")
@@ -2680,9 +2449,7 @@ def near_docs(
         return local_df(spark, [], schema)
     decoded = _decoded_pos(
         spark, index_dir, [slot_terms[p] for p in uniq], stats,
-        allowed_ranges=(
-            _ts_allowed_ranges(spark, index_dir, scope) if scope else None
-        ),
+        allowed_ranges=dead.ranges,
     )
     if with_score:
         idf_by_term = {
@@ -2752,17 +2519,7 @@ def near_docs(
             score = F.col(f"_w{i}") if score is None else score + F.col(f"_w{i}")
         cur = cur.withColumn("score", score)
         cols.append("score")
-    out = cur.filter(F.col("n_near") > 0).select(*cols)
-    if exclude:
-        excl_df = _exclusion_docs_df(spark, index_dir, exclude, stats)
-        if excl_df is not None:
-            out = out.join(excl_df, "doc_id", "left_anti")
-    if scope:
-        out = _apply_scope(
-            spark, index_dir, out, scope,
-            _scope_nonmatch_ids(spark, index_dir, scope),
-        )
-    return apply_tombstones(spark, index_dir, out)
+    return dead.drop(cur.filter(F.col("n_near") > 0).select(*cols))
 
 
 def search_near(
@@ -2800,7 +2557,9 @@ def phrase_docs(
     """→ (doc_id, n_occ): every live doc containing the exact phrase,
     with its occurrence count. Slots may be wildcard patterns:
     phrase_docs(spark, idx, ["big", "dat*"])."""
-    frame = _phrase_frame(spark, index_dir, words, with_score=False)
+    frame = _phrase_frame(
+        spark, index_dir, words, DeadSet(spark, index_dir), with_score=False
+    )
     if frame is None:
         return local_df(spark, [], "doc_id long, n_occ int")
     return frame.select("doc_id", "n_occ")
@@ -2822,25 +2581,10 @@ def search_phrase(
     scope additionally time-prunes the positional fetch (range_ts
     bounds — pos_bytes is the heaviest payload). ``with_urls``: as
     in `search`, a bounded k gives a driver-local, evaluated frame."""
-    if scope:
-        parse_scope(scope)
     frame = _phrase_frame(
         spark, index_dir, words,
-        allowed_ranges=(
-            _ts_allowed_ranges(spark, index_dir, scope) if scope else None
-        ),
+        DeadSet(spark, index_dir, exclude=exclude, scope=scope),
     )
-    if frame is not None and exclude:
-        excl_df = _exclusion_docs_df(
-            spark, index_dir, exclude, cached_stats(spark, index_dir)
-        )
-        if excl_df is not None:
-            frame = frame.join(excl_df, "doc_id", "left_anti")
-    if frame is not None and scope:
-        frame = _apply_scope(
-            spark, index_dir, frame, scope,
-            _scope_nonmatch_ids(spark, index_dir, scope),
-        )
     if frame is None:
         return finish_ranked(spark, index_dir, [], k, with_urls)
     result = (
@@ -2925,51 +2669,11 @@ def facet_counts(
         raise ValueError(
             "facet by must be 'lang', 'site', 'year', 'month' or 'day'"
         )
-    patterns = split_boosts(patterns)[0]  # membership-only: strip
-    stats = cached_stats(spark, index_dir)
-    expanded = expand_patterns(spark, index_dir, patterns)
-    n_patterns = len(patterns)
-    empty = local_df(spark, [], "value string, n_docs long")
-    if len(expanded) == 0 or (
-        mode == "and" and expanded["pattern_idx"].nunique() < n_patterns
-    ):
-        return empty
-    term_info = (
-        expanded.groupby("term")
-        .agg(mask=("pattern_idx", lambda s: int(np.bitwise_or.reduce([1 << i for i in s]))))
-        .reset_index()
-    )
-    qterms = spark.createDataFrame(term_info[["term", "mask"]])
-    and_masks = None
-    if mode == "and" and n_patterns > 1:
-        and_masks = (
-            dict(zip(term_info["term"], (int(m) for m in term_info["mask"]))),
-            (1 << n_patterns) - 1,
-        )
-    decoded = _decoded_postings(
-        spark, index_dir, qterms.withColumn("idf", F.lit(0.0)),
-        stats, list(term_info["term"]), and_masks=and_masks,
-        allowed_ranges=(
-            _ts_allowed_ranges(spark, index_dir, scope) if scope else None
-        ),
-    )
-    hits = (
-        decoded.join(F.broadcast(qterms), "term")
-        .groupBy("doc_id")
-        .agg(F.bit_or("mask").alias("mask"))
-    )
-    if mode == "and":
-        hits = hits.filter(F.col("mask") == (1 << n_patterns) - 1)
-    hits = apply_tombstones(spark, index_dir, hits.select("doc_id"))
-    if exclude:
-        excl_df = _exclusion_docs_df(spark, index_dir, exclude, stats)
-        if excl_df is not None:
-            hits = hits.join(excl_df, "doc_id", "left_anti")
-    if scope:
-        hits = _apply_scope(
-            spark, index_dir, hits, scope,
-            _scope_nonmatch_ids(spark, index_dir, scope),
-        )
+    # the full match set of the ranked core; the score is dropped
+    hits = search(
+        spark, index_dir, patterns, k=None, mode=mode, with_urls=False,
+        exclude=exclude, scope=scope,
+    ).select("doc_id")
     docs = _cached_table(spark, index_dir, "docs")
     if by == "lang":
         facet = F.col("lang")
