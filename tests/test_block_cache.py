@@ -382,3 +382,151 @@ def test_url_cache_entry_cap_under_threads(spark, index_dir, monkeypatch):
     assert not errors, errors[:2]
     assert 0 < len(query._url_cache) <= 8
     invalidate_cache(index_dir)
+
+
+# --- resident result frames: a warm top-k answers from driver memory --
+
+
+@pytest.fixture
+def py4j_calls(monkeypatch):
+    """Counts the py4j round trips (driver → JVM commands) this thread
+    makes. py4j's own finalizer thread, which releases the JVM
+    references of garbage-collected objects at any time, is not the
+    caller under test."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    calls = [0]
+    send = ClientServerConnection.send_command
+    caller = threading.get_ident()
+
+    def counting(self, command, *args, **kwargs):
+        calls[0] += threading.get_ident() == caller
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    return calls
+
+
+def _resident_call(family: str, spark, index_dir, shard_dirs, with_urls: bool):
+    from textindex_spark.boolquery import search_bool
+    from textindex_spark.query import search_sharded
+
+    kw = dict(k=5, with_urls=with_urls)
+    calls = {
+        "and": lambda: search(spark, index_dir, ["spark", "index"], **kw),
+        "or_pruned": lambda: search(
+            spark, index_dir, ["spark", "index"], mode="or", prune=True, **kw
+        ),
+        "wildcard": lambda: search(spark, index_dir, ["quer*"], **kw),
+        "fuzzy": lambda: search(spark, index_dir, ["querry~1"], **kw),
+        "exclude": lambda: search(
+            spark, index_dir, ["spark"], exclude=["merge"], **kw
+        ),
+        "scope": lambda: search(spark, index_dir, ["spark"], scope="lang:en", **kw),
+        "bool": lambda: search_bool(
+            spark, index_dir, "spark AND (index OR quer*) AND NOT merge", **kw
+        ),
+        "sharded": lambda: search_sharded(
+            spark, shard_dirs, ["spark", "index"], mode="or", **kw
+        ),
+    }
+    return calls[family]()
+
+
+@pytest.mark.parametrize("with_urls", [False, True])
+@pytest.mark.parametrize(
+    "family",
+    ["and", "or_pruned", "wildcard", "fuzzy", "exclude", "scope", "bool", "sharded"],
+)
+def test_warm_result_zero_py4j_calls(
+    spark, index_dir, shard_dirs, py4j_calls, family, with_urls
+):
+    """A warm bounded query's result frame answers collect(),
+    toPandas() and count() without one JVM round trip, from the
+    search call on: the frame never materializes its JVM side."""
+    cold = _resident_call(family, spark, index_dir, shard_dirs, with_urls).collect()
+    assert cold, f"{family}: the fixture query must have hits"
+    py4j_calls[0] = 0
+    frame = _resident_call(family, spark, index_dir, shard_dirs, with_urls)
+    rows = frame.collect()
+    pdf = frame.toPandas()
+    n = frame.count()
+    assert py4j_calls[0] == 0, f"{family}: {py4j_calls[0]} py4j calls warm"
+    assert "_jdf" not in frame.__dict__
+    assert rows == cold and n == len(rows)
+    assert [tuple(r) for r in pdf.itertuples(index=False)] == [tuple(r) for r in rows]
+    # the counter sees real traffic: materializing the frame crosses
+    frame.filter("score > 0").count()
+    assert py4j_calls[0] > 0 and "_jdf" in frame.__dict__
+
+
+@pytest.mark.parametrize(
+    "ddl,rows",
+    [
+        ("doc_id long, score double", [(7, 2.5), (3, 1.25), (9, 1.25)]),
+        (
+            "doc_id long, score double, url string",
+            [(7, 2.5, "https://a.example/x"), (3, 1.25, None), (9, 1.0, "https://b/y")],
+        ),
+        ("doc_id long, score double, url string", []),
+        ("doc_id long, rrf_micro bigint, url string", [(4, 16393, None)]),
+    ],
+)
+def test_resident_frame_matches_local_df(spark, ddl, rows):
+    """A ResidentFrame is the local_df frame of the same rows: the
+    same collect(), toPandas() values and dtypes (int64/float64/object
+    for the empty result too), schema, and — once materialized — the
+    same joins, filters, sorts and unions, as either side."""
+    from pyspark.sql.types import StructType
+
+    from textindex_spark.session import ResidentFrame, local_df
+
+    res = ResidentFrame(spark, rows, ddl)
+    ref = local_df(spark, rows, ddl)
+    assert res.collect() == ref.collect()
+    assert [r.asDict() for r in res.collect()] == [r.asDict() for r in ref.collect()]
+    got, want = res.toPandas(), ref.toPandas()
+    assert list(got.dtypes) == list(want.dtypes)
+    assert got.equals(want)
+    assert res.schema == ref.schema and res.columns == ref.columns
+    assert res.dtypes == ref.dtypes
+    assert res.take(2) == ref.take(2) and res.head() == ref.head()
+    assert res.isEmpty() == (not rows)
+    # the schema handed out is a copy: mutating it changes nothing
+    res.schema.add("extra", "long")
+    assert res.schema == StructType.fromDDL(ddl) == ref.schema
+    assert "_jdf" not in res.__dict__
+
+    other = local_df(spark, [(7, "seven"), (3, "three")], "doc_id long, tag string")
+    assert sorted(res.join(other, "doc_id").collect()) == sorted(
+        ref.join(other, "doc_id").collect()
+    )
+    assert sorted(other.join(res, "doc_id", "left").collect()) == sorted(
+        other.join(ref, "doc_id", "left").collect()
+    )
+    assert res.filter("doc_id > 3").collect() == ref.filter("doc_id > 3").collect()
+    assert res.orderBy("doc_id").collect() == ref.orderBy("doc_id").collect()
+    assert sorted(res.unionByName(ref).collect()) == sorted(ref.unionByName(ref).collect())
+    assert sorted(ref.unionByName(res).collect()) == sorted(ref.unionByName(ref).collect())
+    assert "_jdf" in res.__dict__
+
+
+def test_warm_expand_reuses_term_index(spark, index_dir, monkeypatch):
+    """The term-indexed dictionary is built once per load, not per
+    query: a warm expansion never calls set_index, and gives the same
+    rows in the same order."""
+    import pandas as pd
+
+    invalidate_cache(index_dir)
+    pats = ["spark", "quer*", "absentzz", "querry~1"]
+    cold = query.expand_patterns(spark, index_dir, pats)
+
+    def no_reindex(*_a, **_k):
+        raise AssertionError("warm expansion rebuilt the term index")
+
+    monkeypatch.setattr(pd.DataFrame, "set_index", no_reindex)
+    warm = query.expand_patterns(spark, index_dir, pats)
+    assert warm.equals(cold)
+    assert (cold["term"] == "spark").any()

@@ -201,7 +201,9 @@ def search_bool(
     (one shuffle + codegen'd mask predicate). ``local_score`` forces
     the choice (still capped); results are rank-identical either
     way. ``with_urls``: as in `query.search`, a bounded k gives a
-    driver-local, evaluated frame (urls from the resident cache)."""
+    `ResidentFrame` (urls from the resident cache) whose ``collect``,
+    ``toPandas`` and ``count`` answer from driver memory; any other
+    method materializes it once."""
     ast, patterns = _checked_tree(query)
     return _ranked(
         spark, [index_dir], patterns, ast, k, with_urls,

@@ -42,7 +42,7 @@ from textindex_spark import manifest
 from textindex_spark.build import B, K1, STATS_SCHEMA, read_stats, term_bucket_py
 from textindex_spark.codec import decode_batch
 from textindex_spark.refimpl.oracle import wildcard_to_regex
-from textindex_spark.session import local_df
+from textindex_spark.session import ResidentFrame, local_df
 
 DECODED_SCHEMA = "term string, doc_id long, tf int, doc_len long, tfnorm double"
 
@@ -647,7 +647,10 @@ def cached_stats(spark: SparkSession, index_dir: str) -> dict:
 
 def _load_dictionary(spark: SparkSession, index_dir: str) -> pd.DataFrame | None:
     """Load (term, df, max_tfnorm) into driver memory once per index
-    (None when the vocabulary exceeds TERMS_CACHE_MAX)."""
+    (None when the vocabulary exceeds TERMS_CACHE_MAX), indexed by
+    term for exact lookups. The index and its hash table are built
+    here, not per query: at 1M terms they cost ~40 ms (set_index plus
+    the first lookup's lazy hash build)."""
     cd = canon_dir(index_dir)
     if cd in _dict_cache:
         return _dict_cache[cd][0]
@@ -658,7 +661,10 @@ def _load_dictionary(spark: SparkSession, index_dir: str) -> pd.DataFrame | None
             manifest.read_table(spark, index_dir, "terms")
             .select("term", "df", "max_tfnorm")
             .toPandas()
+            .set_index("term", drop=False)
         )
+        if len(terms):
+            terms.loc[[terms.index[0]]]  # builds the lazy lookup tables
     _dict_cache[cd] = (terms, stats)
     return terms
 
@@ -686,7 +692,6 @@ def expand_patterns(
     terms = _load_dictionary(spark, index_dir)
     if terms is not None:
         frames = []
-        by_term = terms.set_index("term", drop=False)
         for i, p in enumerate(patterns):
             rx = _parse_regex(p)
             fz = None if rx is not None else _parse_fuzzy(p)
@@ -697,7 +702,7 @@ def expand_patterns(
             elif _is_wildcard(p):
                 hit = terms[_wild_mask(terms["term"], p)].copy()
             else:
-                hit = by_term.loc[[p]].copy() if p in by_term.index else terms.iloc[0:0].copy()
+                hit = terms.loc[[p]].copy() if p in terms.index else terms.iloc[0:0].copy()
             hit["pattern_idx"] = i
             frames.append(hit)
         out = pd.concat(frames, ignore_index=True)
@@ -1000,10 +1005,13 @@ def search(
     (score desc, doc_id asc). mode='and' keeps reference AND
     semantics across query patterns.
 
-    ``with_urls`` with a bounded k (≤ ISIN_PUSHDOWN_MAX) returns a
-    driver-local frame, already evaluated: the top-k urls come from
-    the resident url cache (`finish_ranked`). Otherwise the frame is
-    lazy.
+    A bounded k on the serving path, or with ``with_urls`` and
+    k ≤ ISIN_PUSHDOWN_MAX, returns a `ResidentFrame`: the top-k rows
+    (urls from the resident url cache) held in driver memory.
+    ``collect``, ``toPandas``, ``count``, ``take``/``head``/``first``,
+    ``schema`` and ``columns`` answer without a JVM round trip; any
+    other DataFrame method materializes the frame once
+    (`finish_ranked`). Otherwise the frame is lazy.
 
     ``min_match`` > 1 turns ``prune`` off: the block-max θ probe
     would count docs below the minimum and over-prune. The
@@ -1084,8 +1092,8 @@ def search_sharded(
     shard's own docs table answers the predicate for its docs.
     Block-max pruning stays a single-index feature (federated scoring
     is already one decode job over all shards). ``with_urls``: each
-    url comes from the resident url cache of the doc's own shard
-    (see `search`)."""
+    url comes from the resident url cache of the doc's own shard.
+    The result is a `ResidentFrame` or lazy, as in `search`."""
     return _ranked(
         spark, list(index_dirs), patterns,
         _flat_tree(len(patterns), mode, min_match), k, with_urls,
@@ -1436,17 +1444,21 @@ def finish_ranked(
 
     URLs of a bounded top-k (k ≤ ISIN_PUSHDOWN_MAX) come from the
     resident url cache (`_lookup_urls`): a frame is collected, and
-    the result is a driver-local frame, already evaluated — a warm
-    query launches no Spark job for its urls. ``k=None`` or a wider
+    the result is a `ResidentFrame` of the ≤k rows — a warm query
+    launches no Spark job for its urls. ``collect``, ``toPandas``,
+    ``count``, ``take``/``head``/``first``, ``schema`` and ``columns``
+    answer from driver memory with no py4j round trip; any other
+    method builds the `local_df` frame of the rows once. Ranked rows
+    without urls become a `ResidentFrame` too. ``k=None`` or a wider
     k keeps the lazy left join against the docs table(s) plus the
-    ranking sort."""
+    ranking sort, and a lazy frame without urls stays lazy."""
     shards = not isinstance(index_dirs, str)
     dirs = list(index_dirs) if shards else [index_dirs]
     if not with_urls or k is None or k > ISIN_PUSHDOWN_MAX:
         frame = (
             result.drop("_shard")
             if isinstance(result, DataFrame)
-            else local_df(
+            else ResidentFrame(
                 spark, [r[:2] for r in result], "doc_id long, score double"
             )
         )
@@ -1472,7 +1484,7 @@ def finish_ranked(
     for d, _, s in rows:
         ids_by_shard.setdefault(s, []).append(int(d))
     urls = {s: _lookup_urls(spark, dirs[s], ids) for s, ids in ids_by_shard.items()}
-    return local_df(
+    return ResidentFrame(
         spark,
         [(d, sc, urls[s][int(d)]) for d, sc, s in rows],
         f"doc_id long, {score_col} {dtype}, url string",
@@ -2580,7 +2592,8 @@ def search_phrase(
     ``scope``: metadata-filtered retrieval (see `search`); a ts
     scope additionally time-prunes the positional fetch (range_ts
     bounds — pos_bytes is the heaviest payload). ``with_urls``: as
-    in `search`, a bounded k gives a driver-local, evaluated frame."""
+    in `search`, a bounded k gives a `ResidentFrame` that answers
+    ``collect``/``toPandas``/``count`` from driver memory."""
     frame = _phrase_frame(
         spark, index_dir, words,
         DeadSet(spark, index_dir, exclude=exclude, scope=scope),

@@ -8,9 +8,13 @@ size.
 """
 from __future__ import annotations
 
+import copy
 import os
+from functools import cached_property
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Row, SparkSession
+from pyspark.sql.classic.dataframe import DataFrame
+from pyspark.sql.types import NumericType, StringType, StructType
 
 
 # This sandbox VM uses hypervisor-lazy memory: the FIRST write to any
@@ -157,6 +161,20 @@ def _parse_mem_mb(v: str) -> int:
         return 0
 
 
+# DDL string → StructType, parsed once: `StructType.fromDDL` asks the
+# JVM parser (one py4j round trip) on every call. The cached objects
+# are shared, so they are read-only — StructType is mutable (`.add`),
+# and nothing that could mutate one may receive it.
+_schemas: dict[str, StructType] = {}
+
+
+def _schema(ddl: str) -> StructType:
+    st = _schemas.get(ddl)
+    if st is None:
+        st = _schemas[ddl] = StructType.fromDDL(ddl)
+    return st
+
+
 def local_df(spark: SparkSession, rows, schema: str):
     """Driver-local rows → DataFrame via ONE Arrow batch.
 
@@ -172,9 +190,8 @@ def local_df(spark: SparkSession, rows, schema: str):
     ``rows`` may be tuples or dicts; ``schema`` is a DDL string (column
     order in dict rows is normalized to the schema's order)."""
     import pandas as pd
-    from pyspark.sql.types import StructType
 
-    st = StructType.fromDDL(schema)
+    st = _schema(schema)
     names = [f.name for f in st.fields]
     rows = list(rows or [])
     if not rows:
@@ -199,11 +216,80 @@ def local_df(spark: SparkSession, rows, schema: str):
             df = spark.sql(f"SELECT {cols} WHERE 1=0")
             cache[schema] = df
         return df
-    if isinstance(rows[0], dict):
-        pdf = pd.DataFrame(rows, columns=names)
-    else:
-        pdf = pd.DataFrame(rows, columns=names)
-    return spark.createDataFrame(pdf, schema=st)
+    return spark.createDataFrame(pd.DataFrame(rows, columns=names), schema=st)
+
+
+class ResidentFrame(DataFrame):
+    """A small evaluated result held in driver memory: `local_df`'s
+    frame without the JVM until something needs it.
+
+    ``collect``, ``toPandas``, ``count``, ``isEmpty``, ``take`` (so
+    ``head``/``first``), ``schema`` (a copy), ``columns`` and
+    ``dtypes`` answer from the rows — no py4j round trip, where
+    building the `local_df` frame and collecting it cost ~35 py4j
+    calls and 40–60 ms. Any other DataFrame method (joins, ``show``,
+    ``.rdd``, ``explain``, ...) materializes the `local_df` frame of
+    the same rows once (`_jdf`) and runs on it unchanged.
+
+    ``rows`` are tuples of Python values in ``schema`` (a DDL string)
+    order; the columns are flat numeric/string types."""
+
+    def __new__(cls, *args, **kwargs):
+        # classic DataFrame.__new__ calls __init__(jdf, session) itself
+        return object.__new__(cls)
+
+    def __init__(self, spark: SparkSession, rows, schema: str):
+        st = _schema(schema)
+        assert all(isinstance(f.dataType, (NumericType, StringType)) for f in st.fields)
+        self._session = spark
+        self._sc = spark.sparkContext
+        self.is_cached = False
+        self._support_repr_html = False
+        self._ddl = schema
+        self._st = st
+        make = Row(*st.names)
+        self._rows = [make(*r) for r in rows]
+
+    @cached_property
+    def _jdf(self):
+        return local_df(self._session, self._rows, self._ddl)._jdf
+
+    @property
+    def schema(self) -> StructType:
+        return copy.deepcopy(self._st)
+
+    def collect(self) -> list[Row]:
+        return list(self._rows)
+
+    def take(self, num: int) -> list[Row]:
+        return self._rows[:num]
+
+    def count(self) -> int:
+        return len(self._rows)
+
+    def isEmpty(self) -> bool:
+        return not self._rows
+
+    def toPandas(self):
+        """The frame Spark's Arrow ``toPandas`` gives: the same
+        per-field dtype correction (`_create_converter_to_pandas`),
+        so an empty result is int64/float64/object too."""
+        import pandas as pd
+        from pyspark.sql.pandas.types import _create_converter_to_pandas
+
+        names = self._st.names
+        pdf = (
+            pd.DataFrame(self._rows, columns=names)
+            if self._rows
+            else pd.DataFrame(columns=names)
+        )
+        return pd.concat(
+            [
+                _create_converter_to_pandas(f.dataType, f.nullable)(pdf[f.name])
+                for f in self._st.fields
+            ],
+            axis="columns",
+        )
 
 
 def warm_workers(spark: SparkSession, mb_per_task: int = 192) -> None:
