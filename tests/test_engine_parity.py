@@ -388,7 +388,20 @@ def test_and_range_preintersection(spark, index_dir, oracle):
         if "PushedFilters" in l and "postings" in l
     )
     assert "range_id" in scan.split("PushedFilters")[1], scan
-    assert "In(term" in scan and "PartitionFilters: [term_bucket" in scan
+    assert "In(term" in scan, scan
+    # the partition filter names exactly the query terms' buckets
+    # (one bucket prints as `= b`, several as `IN (...)`)
+    from textindex_spark.build import term_bucket_py
+
+    buckets = sorted(
+        {term_bucket_py(t, stats["n_term_buckets"]) for t in ("spark", rare)}
+    )
+    part = scan.split("PartitionFilters: [")[1].split("], PushedFilters")[0]
+    want = (
+        f" = {buckets[0]})" if len(buckets) == 1
+        else f" IN ({','.join(map(str, buckets))})"
+    )
+    assert "term_bucket#" in part and want in part, scan
 
 
 def test_phrase_near_exclude(spark, index_dir, oracle):
@@ -497,18 +510,26 @@ def test_matched_lines(spark, rows, index_dir, oracle):
             assert any(w == "spark" for w in line.split(" "))
 
 
-def test_postings_bucket_partition_pruning(spark, index_dir):
+def test_postings_bucket_partition_pruning(spark, rows, tmp_path, monkeypatch):
     """The postings scan of a query must list ONLY the term_bucket
     directories of the query terms (exact partition pruning, the
     file-listing killer at 10^12 docs) and still push the term
-    predicate to the parquet scan."""
-    from textindex_spark.build import term_bucket_py
+    predicate to the parquet scan. The bucket count is data-sized (a
+    300-doc index is one bucket), so the index here is built with a
+    small per-bucket token target to have several buckets to prune."""
+    from textindex_spark import build as B
+    from textindex_spark.build import read_stats, term_bucket_py
     from textindex_spark.query import search
 
-    res = search(spark, index_dir, ["spark"], k=5, local_score=False,
+    out = str(tmp_path / "idx")
+    monkeypatch.setattr(B, "TOKENS_PER_TERM_BUCKET", 1024)
+    build_index(spark, corpus_df(spark, rows), out, range_bits=6)
+    n_buckets = read_stats(spark, out)["n_term_buckets"]
+    assert n_buckets >= 2
+    res = search(spark, out, ["spark"], k=5, local_score=False,
                  with_urls=False)
     plan = res._jdf.queryExecution().executedPlan().toString()
-    b = term_bucket_py("spark", 64)
+    b = term_bucket_py("spark", n_buckets)
     assert f"(term_bucket#" in plan and f" = {b})" in plan, plan[:2000]
     assert "PushedFilters: [IsNotNull(term), EqualTo(term,spark)]" in plan
     # BM25 must never deserialize the positional payload

@@ -24,11 +24,15 @@ Scale notes (100 TB / 10^12 docs):
   is deterministic salting aligned with the storage layout (the salt
   IS the block key), cheaper than df-estimation + two-stage merge.
 * Postings are written into hash-bucketed directories
-  (term_bucket = hash(term) % N, partitionBy) with term-sorted files →
-  queries prune to their terms' directories before any file listing,
-  then parquet row-group min/max stats skip within the bucket
-  (Iceberg mapping: bucket(N, term) partition transform + sort order
-  term, range_id).
+  (term_bucket = hash(term) % n_term_buckets, partitionBy) with
+  term-sorted files → queries prune to their terms' directories before
+  any file listing, then parquet row-group min/max stats skip within
+  the bucket (Iceberg mapping: bucket(N, term) partition transform +
+  sort order term, range_id). The bucket count is sized from the data:
+  one bucket per TOKENS_PER_TERM_BUCKET tokens (~4 MB of postings),
+  capped at 64, so a small index is one postings file instead of 64
+  near-empty ones, and a 10^12-doc index keeps 64 directories of a
+  few GB each.
 * Per-posting doc_len is stored alongside tf (both varint), so BM25
   needs NO join against the docs table at query time — norms live in
   the posting list, as in production IR systems.
@@ -39,6 +43,7 @@ from __future__ import annotations
 
 import time
 from collections.abc import Iterator
+from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
@@ -69,6 +74,23 @@ STATS_SCHEMA = (
     "range_bits long, k1 double, b double, build_sec double, "
     "n_term_buckets long"
 )
+
+
+@contextmanager
+def job_phase(spark: SparkSession, phase: str) -> Iterator[None]:
+    """Label the Spark jobs this thread launches inside the block as
+    ``textindex build: <phase>`` (the UI / event-log description),
+    then restore the caller's description. Job descriptions are
+    thread-local, so a phase running on its own driver thread sets it
+    there. The job group is never touched: callers use it to count
+    and cancel their own jobs."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"textindex build: {phase}")
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
 
 def write_stats_row(spark: SparkSession, stats_dir: str, stats: dict) -> None:
@@ -114,10 +136,29 @@ def write_stats_row(spark: SparkSession, stats_dir: str, stats: dict) -> None:
 # partition pruning instead of min/max range pruning. It also removes
 # the RangePartitioner sampling pass that repartitionByRange ran over
 # the encoded postings (measured: an extra ~40% on the postings write
-# at local[32]). At 10^12 docs raise n_term_buckets so one bucket is
-# a few GB; the layout maps 1:1 onto Iceberg bucket(N, term)
+# at local[32]). The layout maps 1:1 onto Iceberg bucket(N, term)
 # partition transforms.
+#
+# Sizing rule: n_term_buckets = min(64, ceil(total_tokens / 2^20)).
+# Postings encode at ~3.5 bytes per token, so a bucket holds ~4 MB
+# once the index is big enough to fill one, and the count stops at 64
+# (an index of 64 × 2^20 tokens or more has 64 directories). Below
+# that every bucket is one file, and per-file parquet overhead
+# dominated: with 64 buckets a 1,337-doc, 107k-token index wrote 64
+# postings files, 655 KB in all, for rows that take 378 KB as one
+# file. The count is stored in stats.n_term_buckets, and every
+# reader, append and compaction takes it from there; rows without it
+# (indexes built before the sizing rule) read as
+# N_TERM_BUCKETS_DEFAULT.
 N_TERM_BUCKETS_DEFAULT = 64
+TOKENS_PER_TERM_BUCKET = 1 << 20
+
+
+def n_term_buckets_for(total_tokens: int) -> int:
+    """Postings bucket count for an index of ``total_tokens`` tokens
+    (the sizing rule above)."""
+    per = TOKENS_PER_TERM_BUCKET
+    return min(N_TERM_BUCKETS_DEFAULT, max(1, -(-int(total_tokens) // per)))
 
 
 def term_bucket_col(term: Column, n_buckets: int) -> Column:
@@ -436,9 +477,9 @@ def build_index(
     with the data, leaving no window where the index exists but the
     guard doesn't."""
     t0 = time.time()
-    documents = normalize_input(documents)
-    segments = tokenize_segments(documents)
-    segments.write.mode("overwrite").parquet(f"{out_dir}/segments")
+    with job_phase(spark, "segments"):
+        segments = tokenize_segments(normalize_input(documents))
+        segments.write.mode("overwrite").parquet(f"{out_dir}/segments")
     return finalize_index(
         spark, out_dir, range_bits, write_partitions, t0, extra_props
     )
@@ -478,7 +519,8 @@ def finalize_index(
 
     def _write_docs() -> None:
         try:
-            docs.write.mode("overwrite").parquet(f"{out_dir}/docs")
+            with job_phase(spark, "docs"):
+                docs.write.mode("overwrite").parquet(f"{out_dir}/docs")
             # per-range crawl-time bounds (doc_id >> range_bits is the
             # posting-block key): a ts-scoped query prunes posting
             # ranges whose [min_ts, max_ts] misses its window BEFORE
@@ -493,22 +535,26 @@ def finalize_index(
             written = spark.read.schema(
                 manifest.TABLE_SCHEMAS["docs"]
             ).parquet(f"{out_dir}/docs")
-            range_ts(written, range_bits).write.mode("overwrite").parquet(
-                f"{out_dir}/range_ts"
-            )
+            with job_phase(spark, "range_ts"):
+                range_ts(written, range_bits).write.mode("overwrite").parquet(
+                    f"{out_dir}/range_ts"
+                )
         except BaseException as e:  # surfaced after join()
             docs_err.append(e)
 
     docs_job = Thread(target=_write_docs, daemon=True)
     docs_job.start()
 
-    stats_row = seg.agg(
-        F.count("*").alias("n_docs"),
-        F.avg("doc_len").alias("avgdl"),
-        F.sum("doc_len").alias("total_tokens"),
-    ).collect()[0]
+    with job_phase(spark, "stats"):
+        stats_row = seg.agg(
+            F.count("*").alias("n_docs"),
+            F.avg("doc_len").alias("avgdl"),
+            F.sum("doc_len").alias("total_tokens"),
+        ).collect()[0]
     n_docs = stats_row["n_docs"] or 0
     avgdl = float(stats_row["avgdl"] or 0.0)
+    total_tokens = int(stats_row["total_tokens"] or 0)
+    n_buckets = n_term_buckets_for(total_tokens)
 
     postings = build_postings(seg, avgdl, range_bits)
     nparts = write_partitions or max(1, postings.sparkSession.sparkContext.defaultParallelism)
@@ -528,9 +574,10 @@ def finalize_index(
 
         def _write_postings() -> None:
             try:
-                write_postings_bucketed(
-                    postings, f"{out_dir}/postings", nparts, N_TERM_BUCKETS_DEFAULT
-                )
+                with job_phase(spark, "postings"):
+                    write_postings_bucketed(
+                        postings, f"{out_dir}/postings", nparts, n_buckets
+                    )
             except BaseException as e:  # surfaced after join()
                 postings_err.append(e)
 
@@ -538,9 +585,10 @@ def finalize_index(
         postings_job.start()
         postings_df = postings
     else:
-        write_postings_bucketed(
-            postings, f"{out_dir}/postings", nparts, N_TERM_BUCKETS_DEFAULT
-        )
+        with job_phase(spark, "postings"):
+            write_postings_bucketed(
+                postings, f"{out_dir}/postings", nparts, n_buckets
+            )
         postings_df = spark.read.schema(manifest.TABLE_SCHEMAS["postings"]).parquet(
             f"{out_dir}/postings"
         )
@@ -554,13 +602,14 @@ def finalize_index(
     obs = Observation("vocab")
     terms = terms_from_postings(postings_df)
     try:
-        (
-            terms.repartitionByRange(max(1, nparts // 4), "term")
-            .sortWithinPartitions("term")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .write.mode("overwrite")
-            .parquet(f"{out_dir}/terms")
-        )
+        with job_phase(spark, "terms"):
+            (
+                terms.repartitionByRange(max(1, nparts // 4), "term")
+                .sortWithinPartitions("term")
+                .observe(obs, F.count(F.lit(1)).alias("n"))
+                .write.mode("overwrite")
+                .parquet(f"{out_dir}/terms")
+            )
         vocab_size = int(obs.get["n"] or 0)
         # the docs write ran concurrently with everything above (stats
         # agg, postings shuffle+write, terms write); it only has to be
@@ -583,13 +632,13 @@ def finalize_index(
     stats = {
         "n_docs": int(n_docs),
         "avgdl": avgdl,
-        "total_tokens": int(stats_row["total_tokens"] or 0),
+        "total_tokens": total_tokens,
         "vocab_size": int(vocab_size),
         "range_bits": range_bits,
         "k1": K1,
         "b": B,
         "build_sec": time.time() - t0,
-        "n_term_buckets": N_TERM_BUCKETS_DEFAULT,
+        "n_term_buckets": n_buckets,
     }
     write_stats_row(spark, f"{out_dir}/stats", stats)
     if not publish:
@@ -842,7 +891,17 @@ def append_batch(
     (``textindex_spark.manifest``). A crash or retry before the commit
     leaves the live snapshot untouched and re-stages the exact same
     directories, so the operation is idempotent end to end.
+
+    The commit is conditional on the stats table the batch was staged
+    against: its postings are bucketed under that row's
+    n_term_buckets, which a concurrent consolidation may change
+    (manifest.CommitConflict then; a retry re-stages under the new
+    count).
     """
+    # manifest BEFORE stats: a stats change landing between the two
+    # reads then fails the conditional commit below instead of
+    # slipping through it
+    man = manifest.current_manifest(spark, out_dir)
     stats = read_stats(spark, out_dir)
     range_bits = int(stats["range_bits"])
     old_docs = manifest.read_table(spark, out_dir, "docs")
@@ -864,7 +923,6 @@ def append_batch(
     # A crash-and-retry before the commit re-derives the same tag
     # (version unchanged) and overwrites its own staging, keeping the
     # operation idempotent; any successful commit bumps the version.
-    man = manifest.current_manifest(spark, out_dir)
     tag = f"{base}_v{int(man['version']) if man else 0}"
     seg_dir = f"{out_dir}/segments_append_{tag}"
     docs_dir = f"{out_dir}/docs_append_{tag}"
@@ -1001,6 +1059,7 @@ def append_batch(
             "stats": [manifest.rel(out_dir, stats_dir)],
         },
         props={"last_append_base": base, **(extra_props or {})},
+        require_tables=manifest.pinned(man, "stats"),
     )
     # invalidate the query-node caches (dictionary + analyzed frames)
     from textindex_spark import query as _q
@@ -1045,9 +1104,7 @@ def backfill_range_ts(spark: SparkSession, out_dir: str) -> int:
             manifest.commit(
                 spark, out_dir,
                 set_tables={"range_ts": [manifest.rel(out_dir, rts_dir)]},
-                require_tables={
-                    "docs": list(man["tables"].get("docs", ["docs"]))
-                } if man else None,
+                require_tables=manifest.pinned(man, "docs"),
             )
         except manifest.CommitConflict:
             continue
@@ -1117,9 +1174,7 @@ def _consolidate_range_ts(spark: SparkSession, out_dir: str) -> None:
         manifest.commit(
             spark, out_dir,
             set_tables={"range_ts": [manifest.rel(out_dir, new_dir)]},
-            require_tables={
-                "range_ts": list(man["tables"].get("range_ts", ["range_ts"]))
-            } if man else None,
+            require_tables=manifest.pinned(man, "range_ts"),
         )
     except manifest.CommitConflict:
         return
@@ -1130,22 +1185,40 @@ def _consolidate_range_ts(spark: SparkSession, out_dir: str) -> None:
 
 def _consolidate_postings(spark: SparkSession, out_dir: str) -> None:
     """Rewrite the postings table's N data dirs as ONE bucketed dir
-    (no decode — block rows pass through) and commit atomically."""
+    (no decode — block rows pass through), re-sized to the bucket
+    count of the index's current total_tokens: an index bootstrapped
+    small (a stream's first batch) grows out of its one bucket here.
+    The postings and a stats row carrying the new count publish in
+    ONE commit, conditional on both tables' dir lists: an append that
+    landed meanwhile (its postings bucketed under the old count, its
+    stats row carrying it) makes the commit a CommitConflict, and
+    the consolidation is skipped until the next maintenance call."""
+    man = manifest.current_manifest(spark, out_dir)
     stats = read_stats(spark, out_dir)
     postings = manifest.read_table(spark, out_dir, "postings")
-    man = manifest.current_manifest(spark, out_dir)
     gen = (int(man["version"]) + 1) if man else 1
     new_dir = f"{out_dir}/postings_consolidated_{gen}"
+    stats_dir = f"{out_dir}/stats_consolidated_{gen}"
+    n_buckets = n_term_buckets_for(stats.get("total_tokens") or 0)
     cols = [f.split()[0] for f in POSTING_SCHEMA.split(", ")]
     write_postings_bucketed(
         postings.select(*cols),
         new_dir,
         max(1, spark.sparkContext.defaultParallelism),
-        int(stats.get("n_term_buckets") or N_TERM_BUCKETS_DEFAULT),
+        n_buckets,
     )
-    manifest.commit(
-        spark, out_dir, set_tables={"postings": [manifest.rel(out_dir, new_dir)]}
-    )
+    write_stats_row(spark, stats_dir, {**stats, "n_term_buckets": n_buckets})
+    try:
+        manifest.commit(
+            spark, out_dir,
+            set_tables={
+                "postings": [manifest.rel(out_dir, new_dir)],
+                "stats": [manifest.rel(out_dir, stats_dir)],
+            },
+            require_tables=manifest.pinned(man, "postings", "stats"),
+        )
+    except manifest.CommitConflict:
+        return
     from textindex_spark import query as _q
 
     _q.invalidate_cache(out_dir)
@@ -1215,7 +1288,10 @@ def compact_postings(spark: SparkSession, out_dir: str) -> int:
     Commit protocol: the compacted table is written to a NEW versioned
     directory and published with one manifest commit — no rmtree/move,
     nothing destructive touches the live snapshot, and a crash at any
-    point leaves the old postings fully readable."""
+    point leaves the old postings fully readable. The publish is
+    conditional (manifest.CommitConflict if the postings or stats
+    tables changed meanwhile)."""
+    man = manifest.current_manifest(spark, out_dir)
     postings = manifest.read_table(spark, out_dir, "postings")
     dup_keys = (
         postings.groupBy("term", "range_id").count().filter(F.col("count") > 1)
@@ -1295,7 +1371,6 @@ def compact_postings(spark: SparkSession, out_dir: str) -> int:
     )
     merged = regrouped.mapInPandas(_encode_kernel, POSTING_SCHEMA)
     combined = intact.select(*merged.columns).unionByName(merged)
-    man = manifest.current_manifest(spark, out_dir)
     gen = (int(man["version"]) + 1) if man else 1
     new_dir = f"{out_dir}/postings_compact_{gen}"
     nparts = max(1, spark.sparkContext.defaultParallelism)
@@ -1303,8 +1378,13 @@ def compact_postings(spark: SparkSession, out_dir: str) -> int:
         combined, new_dir, nparts,
         int(stats.get("n_term_buckets") or N_TERM_BUCKETS_DEFAULT),
     )
+    # conditional on the postings + stats the rewrite was derived
+    # from: a concurrent append's block rows must not be dropped, nor
+    # a concurrent consolidation's bucket count contradicted
     manifest.commit(
-        spark, out_dir, set_tables={"postings": [manifest.rel(out_dir, new_dir)]}
+        spark, out_dir,
+        set_tables={"postings": [manifest.rel(out_dir, new_dir)]},
+        require_tables=manifest.pinned(man, "postings", "stats"),
     )
     from textindex_spark import query as _q
 

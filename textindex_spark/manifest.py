@@ -325,6 +325,15 @@ class CommitConflict(RuntimeError):
     data from. Callers re-derive against the new snapshot and retry."""
 
 
+def pinned(man: dict | None, *tables: str) -> dict[str, list[str]] | None:
+    """``require_tables`` value pinning each named table to its dir
+    list in ``man`` (the manifest the caller derived its staged data
+    from); None for an index without a manifest."""
+    if man is None:
+        return None
+    return {t: list(man["tables"].get(t, [])) for t in tables}
+
+
 def commit(
     spark: SparkSession,
     index_dir: str,

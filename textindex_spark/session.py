@@ -71,9 +71,15 @@ def get_spark(
         # single slowest extract/tokenize task gates the whole scan
         # stage and the idle-core tail grows with parallelism (profiled:
         # utilization 0.65 at local[32], the 8→32 scaling residual).
-        # A floor of 2 waves lets finished cores steal the tail. At
-        # warehouse scale splits already ≫ cores, so this is a no-op
-        # there — it only fixes the small-input local-mode artifact.
+        # A floor of 2 waves lets finished cores steal the tail, but
+        # only on inputs above about minPartitionNum × openCostInBytes
+        # (32 MB at local[4]): the split size is max(openCostInBytes =
+        # 4 MB, total bytes / minPartitionNum), where every file counts
+        # openCostInBytes on top of its length. Below that a file is cut
+        # into 4 MB splits, so a file under 4 MB is ONE split: at
+        # local[4] perfbench's 872 KB input of 8 row groups is scanned
+        # and tokenized by a single task. At warehouse scale splits
+        # already ≫ cores, so this is a no-op there.
         .config("spark.sql.files.minPartitionNum", str(2 * n_slots))
     )
     # Heap: 8 GB is GC-bound at 32 shuffle+parquet-writing threads
@@ -303,6 +309,10 @@ def warm_workers(spark: SparkSession, mb_per_task: int = 192) -> None:
     def touch(batches):
         import numpy as np
         import pandas as pd
+
+        # installs the package's zip re-read guard in this worker, so
+        # the first timed task does not re-read pyspark.zip
+        import textindex_spark  # noqa: F401
 
         for pdf in batches:
             a = np.empty(mb_per_task * 1_000_000, dtype=np.uint8)
