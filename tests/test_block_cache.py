@@ -416,6 +416,7 @@ def _resident_call(family: str, spark, index_dir, shard_dirs, with_urls: bool):
     kw = dict(k=5, with_urls=with_urls)
     calls = {
         "and": lambda: search(spark, index_dir, ["spark", "index"], **kw),
+        "or": lambda: search(spark, index_dir, ["spark", "index"], mode="or", **kw),
         "or_pruned": lambda: search(
             spark, index_dir, ["spark", "index"], mode="or", prune=True, **kw
         ),
@@ -460,6 +461,46 @@ def test_warm_result_zero_py4j_calls(
     # the counter sees real traffic: materializing the frame crosses
     frame.filter("score > 0").count()
     assert py4j_calls[0] > 0 and "_jdf" in frame.__dict__
+
+
+@pytest.fixture
+def pandas_objects(monkeypatch):
+    """Counts the pandas DataFrame and Series objects built, by
+    wrapping their common constructor (`NDFrame.__init__`, which both
+    public constructors and pandas' internal copies go through)."""
+    from pandas.core.generic import NDFrame
+
+    made = [0]
+    init = NDFrame.__init__
+
+    def counting(self, *args, **kwargs):
+        made[0] += 1
+        return init(self, *args, **kwargs)
+
+    monkeypatch.setattr(NDFrame, "__init__", counting)
+    return made
+
+
+@pytest.mark.parametrize("with_urls", [False, True])
+@pytest.mark.parametrize(
+    "family",
+    ["and", "or", "or_pruned", "wildcard", "fuzzy", "exclude", "scope", "bool", "sharded"],
+)
+def test_warm_query_builds_no_pandas_objects(
+    spark, index_dir, shard_dirs, pandas_objects, family, with_urls
+):
+    """A warm bounded query runs on numpy arrays from expansion to
+    top-k: from the search call through collect() it builds no pandas
+    DataFrame or Series."""
+    cold = _resident_call(family, spark, index_dir, shard_dirs, with_urls).collect()
+    assert cold, f"{family}: the fixture query must have hits"
+    pandas_objects[0] = 0
+    rows = _resident_call(family, spark, index_dir, shard_dirs, with_urls).collect()
+    assert pandas_objects[0] == 0, f"{family}: {pandas_objects[0]} pandas objects warm"
+    assert rows == cold
+    # the counter sees real construction
+    query.expand_patterns(spark, index_dir, ["spark"])
+    assert pandas_objects[0] > 0
 
 
 @pytest.mark.parametrize(
@@ -514,19 +555,17 @@ def test_resident_frame_matches_local_df(spark, ddl, rows):
 
 
 def test_warm_expand_reuses_term_index(spark, index_dir, monkeypatch):
-    """The term-indexed dictionary is built once per load, not per
-    query: a warm expansion never calls set_index, and gives the same
+    """The term-sorted dictionary is built once per load, not per
+    query: a warm expansion never rebuilds it, and gives the same
     rows in the same order."""
-    import pandas as pd
-
     invalidate_cache(index_dir)
     pats = ["spark", "quer*", "absentzz", "querry~1"]
     cold = query.expand_patterns(spark, index_dir, pats)
 
-    def no_reindex(*_a, **_k):
+    def no_rebuild(*_a, **_k):
         raise AssertionError("warm expansion rebuilt the term index")
 
-    monkeypatch.setattr(pd.DataFrame, "set_index", no_reindex)
+    monkeypatch.setattr(query._Dictionary, "of", no_rebuild)
     warm = query.expand_patterns(spark, index_dir, pats)
     assert warm.equals(cold)
     assert (cold["term"] == "spark").any()

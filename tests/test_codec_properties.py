@@ -6,11 +6,12 @@ encode/decode asymmetries. Pure numpy, no Spark session.
 from __future__ import annotations
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from textindex_spark.codec import (
     decode_batch,
+    decode_flat,
     decode_positions_batch,
     encode_batch,
     encode_positions_batch,
@@ -114,3 +115,49 @@ def test_varint_encoding_is_minimal_and_prefix_free(vals):
     assert n_term == len(vals)
     expect = sum(max(1, (int(v).bit_length() + 6) // 7) for v in vals)
     assert len(buf) == expect
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    st.lists(  # per block: sorted unique doc-id offsets + tf
+        st.lists(
+            st.tuples(
+                st.integers(min_value=0, max_value=2**40),
+                st.integers(min_value=1, max_value=2**20),
+            ),
+            min_size=1,
+            max_size=40,
+            unique_by=lambda t: t[0],
+        ),
+        min_size=1,
+        max_size=64,
+    ),
+    st.integers(min_value=0, max_value=2**60),
+)
+@example([[(0, 1)]], 2**53 + 1)  # one block, one posting, id > 2^53
+@example([[(5, 300), (2**35, 1)]], 2**60)  # one block, multi-byte varints
+@example([[(i, 1)] for i in range(64)], 2**55)  # many one-posting blocks
+def test_flat_decode_is_split_decode(blocks, base0):
+    """decode_flat's flat columns are decode_batch's per-block arrays
+    concatenated, its counts their lengths, and both give back the
+    encoded ids exactly — in single- and many-block batches, with
+    multi-byte varints and doc_ids above 2^53 (where a float64 base
+    would round them)."""
+    doc_lists, tf_lists, bases = [], [], []
+    for b, rows in enumerate(blocks):
+        rows = sorted(rows)
+        base = base0 + b * 2**41
+        doc_lists.append(np.array([base + off for off, _ in rows], dtype=np.int64))
+        tf_lists.append(np.array([tf for _, tf in rows], dtype=np.int64))
+        bases.append(base)
+    bases = np.array(bases, dtype=np.int64)
+    enc = encode_batch(doc_lists, bases, [tf_lists])
+    gaps, tfb = [e[0] for e in enc], [e[1] for e in enc]
+    docs, (tfs,), counts = decode_flat(gaps, bases, [tfb])
+    split_docs, split_tfs = decode_batch(gaps, bases, [tfb])
+    assert docs.dtype == np.int64 and counts.tolist() == [len(d) for d in doc_lists]
+    assert np.array_equal(docs, np.concatenate(doc_lists))
+    assert np.array_equal(tfs, np.concatenate(tf_lists))
+    assert len(split_docs) == len(split_tfs) == len(blocks)
+    for got_d, got_t, want_d, want_t in zip(split_docs, split_tfs, doc_lists, tf_lists):
+        assert np.array_equal(got_d, want_d) and np.array_equal(got_t, want_t)

@@ -1565,14 +1565,16 @@ def test_build_survives_all_ignored_batch(spark, tmp_path):
 
 def test_fuzzy_kernel_hypothesis():
     """Property fuzz: the banded early-exit DP (`_lev_within`) and
-    the prefiltered vectorized kernel (`_fuzzy_mask`) agree with the
+    the prefiltered dictionary kernel (`_fuzzy_rows`) agree with the
     oracle's independent full-matrix Levenshtein on random inputs —
-    the pigeonhole chunk filter must never reject a true match."""
-    import pandas as pd
+    the length window and the pigeonhole chunk filter must never
+    reject a true match."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from textindex_spark.query import _fuzzy_mask, _lev_within, fuzzy_distance
+    from textindex_spark.query import (
+        _Dictionary, _fuzzy_rows, _lev_within, fuzzy_distance,
+    )
     from textindex_spark.refimpl.oracle import _edit_distance
 
     words = st.text(alphabet="abcde", max_size=8)
@@ -1592,8 +1594,9 @@ def test_fuzzy_kernel_hypothesis():
         st.integers(1, 2),
     )
     def check_mask(terms, base, d):
-        got = list(_fuzzy_mask(pd.Series(terms, dtype=object), base, d))
-        want = [_edit_distance(base, t) <= d for t in terms]
+        dic = _Dictionary.of(terms, [1] * len(terms), [0.0] * len(terms))
+        got = dic.terms[_fuzzy_rows(dic, base, d)].tolist()
+        want = sorted(t for t in terms if _edit_distance(base, t) <= d)
         assert got == want, (terms, base, d)
 
     check_banded()

@@ -257,9 +257,11 @@ def test_sharded_mixed_bucket_counts(spark, rows, oracle, tmp_path):
 
 
 def test_build_jobs_carry_phase_descriptions(spark, rows, tmp_path):
-    """Every Spark job of one build is labeled with its phase, the
-    driver-thread phases (docs, range_ts, postings) included; the
-    caller's description and job group come back unchanged."""
+    """Every Spark job of one build is labeled with its phase and
+    carries the caller's job group, the driver-thread phases (docs,
+    range_ts, postings) included, so a caller's cancelJobGroup reaches
+    all of them; the caller's description and job group come back
+    unchanged."""
     sc = spark.sparkContext
     store = sc._jsc.sc().statusStore()
 
@@ -281,12 +283,14 @@ def test_build_jobs_carry_phase_descriptions(spark, rows, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    descs = []
+    descs, groups = [], []
     for jid in sorted(j for j in job_ids() if j > seen):
-        d = store.job(jid).description()
-        descs.append(d.get() if d.isDefined() else None)
+        job = store.job(jid)
+        descs.append(job.description().get() if job.description().isDefined() else None)
+        groups.append(job.jobGroup().get() if job.jobGroup().isDefined() else None)
     phases = {"segments", "docs", "range_ts", "stats", "postings", "terms"}
     assert set(descs) == {f"textindex build: {p}" for p in phases}, descs
+    assert groups and set(groups) == {"bucket-test-group"}, list(zip(descs, groups))
 
 
 # --- the worker's zip re-read guard -------------------------------------

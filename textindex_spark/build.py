@@ -512,8 +512,11 @@ def finalize_index(
     # the stats agg + postings shuffle proceed — Spark schedules jobs
     # submitted from separate threads concurrently, removing the
     # serial job barrier (fixed latency that does NOT shrink with
-    # cores — the Amdahl term in the N→4N scaling measurement).
-    from threading import Thread
+    # cores — the Amdahl term in the N→4N scaling measurement). An
+    # InheritableThread carries the caller's job group (and other local
+    # properties) to the thread's jobs, so a caller's cancelJobGroup or
+    # per-group job count reaches them too.
+    from pyspark import InheritableThread
 
     docs_err: list[BaseException] = []
 
@@ -542,7 +545,7 @@ def finalize_index(
         except BaseException as e:  # surfaced after join()
             docs_err.append(e)
 
-    docs_job = Thread(target=_write_docs, daemon=True)
+    docs_job = InheritableThread(_write_docs, daemon=True)
     docs_job.start()
 
     with job_phase(spark, "stats"):
@@ -566,7 +569,7 @@ def finalize_index(
     # (see POSTINGS_OVERLAP_MAX_DOCS).
     overlap = 0 < n_docs <= POSTINGS_OVERLAP_MAX_DOCS
     postings_err: list[BaseException] = []
-    postings_job: Thread | None = None
+    postings_job: InheritableThread | None = None
     if overlap:
         from pyspark import StorageLevel
 
@@ -581,7 +584,7 @@ def finalize_index(
             except BaseException as e:  # surfaced after join()
                 postings_err.append(e)
 
-        postings_job = Thread(target=_write_postings, daemon=True)
+        postings_job = InheritableThread(_write_postings, daemon=True)
         postings_job.start()
         postings_df = postings
     else:

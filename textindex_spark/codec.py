@@ -9,7 +9,10 @@ metadata for block-max pruning.
 All functions operate on whole Arrow batches: ``encode_batch`` /
 ``decode_batch`` take *lists of arrays* (one entry per posting block)
 and vectorize the varint transform across the concatenation, so the
-per-row Python overhead is O(rows), not O(postings).
+per-row Python overhead is O(rows), not O(postings). ``decode_flat``
+is the decoder itself: it returns the flat columns plus per-block
+counts, for callers that would concatenate the per-block arrays
+straight back.
 """
 from __future__ import annotations
 
@@ -152,22 +155,26 @@ def encode_batch(
     return [tuple(r) for r in results]
 
 
-def decode_batch(
+def decode_flat(
     gaps_bufs: list[bytes], bases: np.ndarray, extra_bufs: list[list[bytes]] | None = None
-) -> tuple[list[np.ndarray], ...]:
-    """Decode many blocks at once (concatenate → one varint pass →
-    split). Returns (doc_id_lists, *extra_lists)."""
+) -> tuple[np.ndarray, list[np.ndarray], np.ndarray]:
+    """Decode many blocks into flat columns: → (doc_ids, [extra
+    columns], per-block value counts). One varint pass per column over
+    the concatenation; the per-block counts come from one
+    ``np.add.reduceat`` of the terminator bytes over the block byte
+    offsets."""
     n = len(gaps_bufs)
     if n == 0:
-        return ([],) + tuple([] for _ in (extra_bufs or []))
-    if any(len(b) == 0 for b in gaps_bufs):
-        raise ValueError("decode_batch: zero-length posting block")
-    flat = varint_decode(b"".join(gaps_bufs))
-    # recover per-block value counts by counting terminator bytes
-    counts = np.fromiter(
-        (np.count_nonzero(np.frombuffer(b, dtype=np.uint8) < 0x80) for b in gaps_bufs),
-        dtype=np.int64,
-        count=n,
+        empty = np.empty(0, dtype=np.int64)
+        return empty, [empty for _ in (extra_bufs or [])], empty
+    nbytes = np.fromiter(map(len, gaps_bufs), dtype=np.int64, count=n)
+    if not nbytes.all():
+        raise ValueError("decode_flat: zero-length posting block")
+    joined = b"".join(gaps_bufs)
+    flat = varint_decode(joined)
+    byte_starts = np.concatenate(([0], np.cumsum(nbytes)[:-1]))
+    counts = np.add.reduceat(
+        (np.frombuffer(joined, dtype=np.uint8) < 0x80).astype(np.int64), byte_starts
     )
     starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
     # per-block cumsum reset: subtract the running offset at block start
@@ -181,12 +188,17 @@ def decode_batch(
         else np.zeros(1, dtype=np.int64),
         counts,
     ) + np.repeat(bases.astype(np.int64), counts)
-    doc_lists = _split_concat(doc_flat, counts)
-    out = [doc_lists]
-    for bufs in extra_bufs or []:
-        flat_e = varint_decode(b"".join(bufs))
-        out.append(_split_concat(flat_e, counts))
-    return tuple(out)
+    extras = [varint_decode(b"".join(bufs)) for bufs in extra_bufs or []]
+    return doc_flat, extras, counts
+
+
+def decode_batch(
+    gaps_bufs: list[bytes], bases: np.ndarray, extra_bufs: list[list[bytes]] | None = None
+) -> tuple[list[np.ndarray], ...]:
+    """`decode_flat` split back per block → (doc_id_lists,
+    *extra_lists)."""
+    docs, extras, counts = decode_flat(gaps_bufs, bases, extra_bufs)
+    return tuple(_split_concat(c, counts) for c in (docs, *extras))
 
 
 def encode_positions_batch(pos_lists: list[list[np.ndarray]]) -> list[bytes]:

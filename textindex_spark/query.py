@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 from textindex_spark import manifest
 from textindex_spark.build import B, K1, STATS_SCHEMA, read_stats, term_bucket_py
-from textindex_spark.codec import decode_batch
+from textindex_spark.codec import decode_flat, decode_positions_batch
 from textindex_spark.refimpl.oracle import wildcard_to_regex
 from textindex_spark.session import ResidentFrame, local_df
 
@@ -62,7 +62,7 @@ _DECODE_POS_COLS = _DECODE_COLS + ["pos_bytes"]
 # probes then cost zero Spark jobs. Larger vocabularies fall back to a
 # distributed terms-table scan.
 TERMS_CACHE_MAX = 5_000_000
-_dict_cache: dict[str, tuple[pd.DataFrame, dict]] = {}
+_dict_cache: dict[str, tuple["_Dictionary | None", dict]] = {}
 
 # Analyzed-DataFrame cache per (index_dir, table): re-using the frame
 # object across queries skips the per-query manifest read + data-file
@@ -143,8 +143,22 @@ _cache_lock = threading.RLock()
 META_CACHE_MAX_ROWS = 2_000_000
 META_CACHE_TERM_MAX_ROWS = 262_144
 _META_COLS = ["term", "range_id", "n_docs", "max_tf", "max_tfnorm", "enc_avgdl"]
-# (cd, term) -> meta frame (one row per block row; range_id can repeat)
-_meta_cache: "OrderedDict[tuple[str, str], pd.DataFrame]" = OrderedDict()
+
+
+class _Meta(NamedTuple):
+    """Block-max metadata as columns, one row per block row (a
+    range_id can repeat)."""
+
+    range_id: np.ndarray
+    n_docs: np.ndarray
+    max_tf: np.ndarray
+    max_tfnorm: np.ndarray
+    enc_avgdl: np.ndarray
+
+
+_META_DTYPES = (np.int64, np.int64, np.int64, np.float64, np.float64)
+# (cd, term) -> that term's _Meta
+_meta_cache: "OrderedDict[tuple[str, str], _Meta]" = OrderedDict()
 _meta_rows = 0
 
 # Result URLs resident per doc_id — the reference prints each hit's
@@ -175,23 +189,23 @@ def _block_cache_put(cd: str, term: str, range_id: int, rows: list[tuple]) -> No
             _block_bytes -= ev_nb
 
 
-def _meta_cache_put(cd: str, term: str, pdf: pd.DataFrame) -> None:
+def _meta_cache_put(cd: str, term: str, meta: _Meta) -> None:
     global _meta_rows
-    if len(pdf) > META_CACHE_TERM_MAX_ROWS:
+    if len(meta.range_id) > META_CACHE_TERM_MAX_ROWS:
         return
     key = (cd, term)
     with _cache_lock:
         old = _meta_cache.pop(key, None)
         if old is not None:
-            _meta_rows -= len(old)
-        _meta_cache[key] = pdf
-        _meta_rows += len(pdf)
+            _meta_rows -= len(old.range_id)
+        _meta_cache[key] = meta
+        _meta_rows += len(meta.range_id)
         while _meta_rows > META_CACHE_MAX_ROWS and _meta_cache:
             _, ev = _meta_cache.popitem(last=False)
-            _meta_rows -= len(ev)
+            _meta_rows -= len(ev.range_id)
 
 
-def _meta_get(cd: str, term: str) -> pd.DataFrame | None:
+def _meta_get(cd: str, term: str) -> _Meta | None:
     with _cache_lock:
         hit = _meta_cache.get((cd, term))
         if hit is not None:
@@ -201,41 +215,41 @@ def _meta_get(cd: str, term: str) -> pd.DataFrame | None:
 
 def _cache_meta_groups(
     cd: str, fetched: pd.DataFrame, terms: list[str]
-) -> dict[str, pd.DataFrame]:
+) -> dict[str, _Meta]:
     """Split a fetched frame per term and cache each term's metadata;
-    a term with no rows caches an empty frame (negative entry) so
+    a term with no rows caches an empty `_Meta` (negative entry) so
     absent vocabulary stops costing jobs. Shared by the metadata probe
     and the ride-along path of a full-term block fetch."""
-    groups = (
-        {t: g[_META_COLS].reset_index(drop=True) for t, g in fetched.groupby("term")}
-        if len(fetched)
-        else {}
-    )
+    rows = fetched.groupby("term").indices if len(fetched) else {}
+    cols = [fetched[c].to_numpy(dt) for c, dt in zip(_META_COLS[1:], _META_DTYPES)]
     out = {}
     for t in terms:
-        pdf = groups.get(t)
-        if pdf is None:
-            pdf = fetched.iloc[0:0][_META_COLS].reset_index(drop=True)
-        out[t] = pdf
-        _meta_cache_put(cd, t, pdf)
+        r = rows.get(t, np.empty(0, dtype=np.int64))
+        out[t] = _Meta(*(c[r] for c in cols))
+        _meta_cache_put(cd, t, out[t])
     return out
 
 
 def _block_meta(
-    spark: SparkSession, index_dir: str, term_list: list[str], stats: dict
-) -> pd.DataFrame:
-    """Block-max metadata rows for the query terms, served from the
-    resident metadata cache; missing terms probed in ONE metadata-only
-    scan (binary columns never read). Terms with no blocks cache an
-    empty frame so absent vocabulary stops costing jobs."""
-    cd = canon_dir(index_dir)
-    want = list(dict.fromkeys(term_list))
-    frames: dict[str, pd.DataFrame] = {}
+    spark: SparkSession,
+    index_dir: str,
+    term_list: list[str],
+    stats: dict,
+    cd: str | None = None,
+) -> tuple[np.ndarray, _Meta]:
+    """Block-max metadata of the (distinct) query terms → (each row's
+    position in ``term_list``, the rows as `_Meta` columns), in term
+    order. Served from the resident metadata cache; missing terms
+    probed in ONE metadata-only scan (binary columns never read).
+    Terms with no blocks cache an empty entry so absent vocabulary
+    stops costing jobs."""
+    cd = cd or canon_dir(index_dir)
+    got: dict[str, _Meta] = {}
     misses = []
-    for t in want:
+    for t in term_list:
         hit = _meta_get(cd, t)
         if hit is not None:
-            frames[t] = hit
+            got[t] = hit
         else:
             misses.append(t)
     if misses:
@@ -244,11 +258,35 @@ def _block_meta(
             .select(*_META_COLS)
             .toPandas()
         )
-        frames.update(_cache_meta_groups(cd, fetched, misses))
-    got = [frames[t] for t in want if len(frames[t])]
-    if not got:
-        return pd.DataFrame(columns=_META_COLS)
-    return pd.concat(got, ignore_index=True)
+        got.update(_cache_meta_groups(cd, fetched, misses))
+    metas = [got[t] for t in term_list]
+    term_idx = np.repeat(
+        np.arange(len(metas), dtype=np.int64), [len(m.range_id) for m in metas]
+    )
+    cols = zip(*metas) if metas else ([np.empty(0, dtype=dt)] for dt in _META_DTYPES)
+    return term_idx, _Meta(*(np.concatenate(c) for c in cols))
+
+
+class _Blocks(NamedTuple):
+    """Posting-block rows as columns: ``term_idx`` is the position of
+    each block's term in the fetched term list."""
+
+    term_idx: np.ndarray
+    range_id: np.ndarray
+    doc_gaps: list[bytes]
+    tf_bytes: list[bytes]
+    dl_bytes: list[bytes]
+
+    @classmethod
+    def of(cls, term_idx: list[int], rows: list[tuple]) -> _Blocks:
+        """From ``_BLOCK_COLS`` row tuples."""
+        return cls(
+            np.array(term_idx, dtype=np.int64),
+            np.array([r[1] for r in rows], dtype=np.int64),
+            [r[6] for r in rows],
+            [r[7] for r in rows],
+            [r[8] for r in rows],
+        )
 
 
 def _fetch_blocks(
@@ -257,28 +295,36 @@ def _fetch_blocks(
     term_list: list[str],
     stats: dict,
     ranges: list[int] | None = None,
-) -> pd.DataFrame:
-    """Serving-path posting-block fetch through the block cache.
-    ``ranges=None`` → every range of each term; else only those
+    cd: str | None = None,
+) -> _Blocks:
+    """Serving-path posting-block fetch through the block cache → the
+    block rows of the (distinct) terms as `_Blocks` columns, in term
+    order. ``ranges=None`` → every range of each term; else only those
     range_ids. Cold terms cost one pushdown scan (exactly the
     pre-cache plan) and warm the cache; fully-warm queries cost zero
-    Spark jobs. Falls back to an uncached direct scan for expansions
-    past ISIN_PUSHDOWN_MAX (the cache is for serving-sized queries)."""
-    want = list(dict.fromkeys(term_list))
+    Spark jobs and build no frame. Falls back to an uncached direct
+    scan for expansions past ISIN_PUSHDOWN_MAX (the cache is for
+    serving-sized queries). ``cd``: the index's `canon_dir`, when the
+    caller already has it."""
+    want = list(term_list)
+    pos = {t: i for i, t in enumerate(want)}
     range_set = None if ranges is None else set(int(r) for r in ranges)
     if ranges is not None and len(ranges) > ISIN_PUSHDOWN_MAX:
         range_set = None  # matches the pre-cache plan: read everything
-    if len(want) == 0 or len(want) > ISIN_PUSHDOWN_MAX:
+    if not want:
+        return _Blocks.of([], [])
+    if len(want) > ISIN_PUSHDOWN_MAX:
         fetch = _query_blocks(spark, index_dir, None, want, stats.get("n_term_buckets"))
         if range_set is not None:
             fetch = fetch.filter(F.col("range_id").isin(sorted(range_set)))
-        return fetch.select(*_BLOCK_COLS).toPandas()
+        rows = list(fetch.select(*_BLOCK_COLS).toPandas().itertuples(index=False, name=None))
+        return _Blocks.of([pos[r[0]] for r in rows], rows)
 
-    cd = canon_dir(index_dir)
-    rows: list[tuple] = []
+    cd = cd or canon_dir(index_dir)
+    hits: list[list[tuple]] = [[] for _ in want]  # block rows per term
     full_miss: list[str] = []   # no metadata → fetch the whole term
     missing_pairs: set[tuple[str, int]] = set()
-    for t in want:
+    for i, t in enumerate(want):
         m = _meta_get(cd, t)
         if m is None:
             full_miss.append(t)
@@ -286,7 +332,7 @@ def _fetch_blocks(
         # dedupe: a range_id repeats in the metadata when a key owns
         # several block rows (append before compaction) — the cache
         # entry already holds ALL of the key's rows
-        needed = list(dict.fromkeys(int(r) for r in m["range_id"]))
+        needed = dict.fromkeys(m.range_id.tolist())
         if range_set is not None:
             needed = [r for r in needed if r in range_set]
         for r in needed:
@@ -295,7 +341,7 @@ def _fetch_blocks(
                 if hit is not None:
                     _block_cache.move_to_end((cd, t, r))
             if hit is not None:
-                rows.extend(hit[0])
+                hits[i].extend(hit[0])
             else:
                 missing_pairs.add((t, r))
     if full_miss or missing_pairs:
@@ -347,17 +393,17 @@ def _fetch_blocks(
             _block_cache_put(cd, t, r, key_rows)
             if t in full_set:
                 if range_set is None or r in range_set:
-                    rows.extend(key_rows)
+                    hits[pos[t]].extend(key_rows)
             elif (t, r) in missing_pairs:
-                rows.extend(key_rows)
+                hits[pos[t]].extend(key_rows)
         # metadata rides along free on a full-term fetch. Range-
         # restricted fetches see only a slice of the term, so no
         # metadata is cached for them.
         if full_miss and range_set is None:
             _cache_meta_groups(cd, fetched, full_miss)
-    if not rows:
-        return pd.DataFrame(columns=_BLOCK_COLS)
-    return pd.DataFrame(rows, columns=_BLOCK_COLS)
+    return _Blocks.of(
+        [i for i, h in enumerate(hits) for _ in h], [r for h in hits for r in h]
+    )
 
 
 def invalidate_cache(index_dir: str) -> None:
@@ -377,7 +423,7 @@ def invalidate_cache(index_dir: str) -> None:
         for k in [k for k in _block_cache if k[0] == cd]:
             _block_bytes -= _block_cache.pop(k)[1]
         for k in [k for k in _meta_cache if k[0] == cd]:
-            _meta_rows -= len(_meta_cache.pop(k))
+            _meta_rows -= len(_meta_cache.pop(k).range_id)
         for k in [k for k in _url_cache if k[0] == cd]:
             _url_cache.pop(k, None)
         for k in [k for k in _frame_cache if k[0] == cd]:
@@ -460,32 +506,6 @@ def _lev_within(a: str, b: str, d: int) -> bool:
     return prev[la] <= d
 
 
-def _fuzzy_mask(series: pd.Series, base: str, d: int) -> pd.Series:
-    """Vectorized fuzzy match over a term Series. Two cheap vectorized
-    prefilters bound the interpreted-Python DP to a handful of
-    candidates even at the 5M-term cache cap: (1) length window
-    |len(t) − len(base)| ≤ d; (2) pigeonhole — ≤ d edits touch ≤ d of
-    the base's d+1 contiguous chunks, so a true match must contain at
-    least one chunk verbatim."""
-    if len(series) == 0:
-        return pd.Series([], dtype=bool, index=series.index)
-    mask = (series.str.len() - len(base)).abs() <= d
-    nchunks = d + 1
-    if len(base) >= nchunks:
-        step = len(base) // nchunks
-        chunk_hit = pd.Series(False, index=series.index)
-        for i in range(nchunks):
-            lo = i * step
-            hi = (i + 1) * step if i < nchunks - 1 else len(base)
-            chunk_hit |= series.str.contains(base[lo:hi], regex=False)
-        mask &= chunk_hit
-    cand = series[mask]
-    mask = mask.copy()
-    if len(cand):
-        mask.loc[cand.index] = [_lev_within(base, t, d) for t in cand]
-    return mask
-
-
 # --- query-time boosts (Lucene ``pattern^boost``, engine extension) ---
 # A ``^N`` / ``^N.M`` suffix multiplies the idf weight of every
 # vocabulary term the pattern covers (flat ranked search; a term
@@ -532,8 +552,8 @@ def split_boosts(patterns: list[str]) -> tuple[list[str], list[float]]:
 # --- regex term expansion (``/pattern/`` syntax, engine extension) ---
 # A slash-delimited pattern expands to every vocabulary term the
 # regex fully matches, then rides the same pattern_idx machinery as
-# globs and fuzzy terms. The resident path evaluates Python re over
-# the dictionary (vectorized str.fullmatch); the distributed probe
+# globs and fuzzy terms. The resident path full-matches Python re
+# over the dictionary's terms (`_match`); the distributed probe
 # compiles the same source into Spark's JVM `rlike`. Keep patterns in
 # the common Python/Java/RE2 subset (literals, classes, anchored-free
 # alternation, quantifiers) — exotic constructs may diverge between
@@ -550,13 +570,6 @@ def _parse_regex(p: str) -> re.Pattern[str] | None:
         return re.compile(p[1:-1], re.DOTALL)
     except re.error as e:
         raise ValueError(f"invalid regex pattern {p!r}: {e}") from None
-
-
-def _regex_mask(series: pd.Series, rx: re.Pattern[str]) -> pd.Series:
-    """Vectorized full-match over a term Series."""
-    if len(series) == 0:
-        return pd.Series([], dtype=bool, index=series.index)
-    return series.str.fullmatch(rx).fillna(False)
 
 
 def _regex_cond(rx: re.Pattern[str]):
@@ -605,10 +618,10 @@ def suggest_terms(
         # parser's complaint about syntax the user never typed
         raise ValueError(f"suggest takes a plain word: {word!r}")
     word = word.lower()
-    expanded = expand_patterns(spark, index_dir, [f"{word}~{max_dist}"])
+    expanded = _expand(spark, index_dir, [f"{word}~{max_dist}"])
     rows = [
-        (t, fuzzy_distance(word, t, max_dist), int(df))
-        for t, df in zip(expanded["term"], expanded["df"])
+        (t, fuzzy_distance(word, t, max_dist), df)
+        for t, df in zip(expanded.term, expanded.df.tolist())
         if t != word
     ]
     rows.sort(key=lambda r: (r[1], -r[2], r[0]))
@@ -626,45 +639,162 @@ def _fuzzy_cond(base: str, d: int):
     )
 
 
-def _wild_mask(series: pd.Series, p: str) -> pd.Series:
-    """Vectorized glob match over a term Series (VERDICT r2: the
-    per-term interpreted-Python fullmatch loop cost seconds per
-    wildcard at the 5M-term cache cap). Pure-prefix globs (``head*``)
-    take the C-speed ``str.startswith`` path; everything else the
-    vectorized ``str.fullmatch`` on the compiled pattern."""
-    if len(series) == 0:
-        return pd.Series([], dtype=bool, index=series.index)
-    if p.endswith("*") and not _is_wildcard(p[:-1]):
-        return series.str.startswith(p[:-1]).astype(bool)
-    return series.str.fullmatch(wildcard_to_regex(p)).astype(bool)
+class _Dictionary(NamedTuple):
+    """A vocabulary as term-sorted columns: ``terms`` (object), ``df``
+    (int64), ``max_tfnorm`` (float64) and the term lengths ``lens``
+    (int64, the fuzzy length window)."""
+
+    terms: np.ndarray
+    df: np.ndarray
+    max_tfnorm: np.ndarray
+    lens: np.ndarray
+
+    @classmethod
+    def of(cls, terms, df, max_tfnorm) -> _Dictionary:
+        """From (term, df, max_tfnorm) columns, sorted by term unless
+        they already are (the terms table is written term-sorted)."""
+        cols = [
+            np.asarray(terms, dtype=object),
+            np.asarray(df, dtype=np.int64),
+            np.asarray(max_tfnorm, dtype=np.float64),
+        ]
+        if not (cols[0][1:] >= cols[0][:-1]).all():
+            order = np.argsort(cols[0], kind="stable")
+            cols = [c[order] for c in cols]
+        lens = np.fromiter(map(len, cols[0]), dtype=np.int64, count=len(cols[0]))
+        return cls(*cols, lens)
+
+    def rows(self, lo: int, hi: int) -> _Dictionary:
+        return _Dictionary(*(c[lo:hi] for c in self))
 
 
-def cached_stats(spark: SparkSession, index_dir: str) -> dict:
-    if canon_dir(index_dir) not in _dict_cache:
-        _load_dictionary(spark, index_dir)
-    return _dict_cache[canon_dir(index_dir)][1]
+class _Expansion(NamedTuple):
+    """Expanded patterns as parallel columns, one row per (pattern,
+    vocabulary term) pair, grouped by pattern in pattern order and by
+    term within a pattern."""
+
+    pattern_idx: np.ndarray
+    term: np.ndarray
+    df: np.ndarray
+    max_tfnorm: np.ndarray
+
+    @classmethod
+    def of(cls, hits: list[tuple[_Dictionary, np.ndarray]]) -> _Expansion:
+        """``hits[i]`` = (dictionary, rows) pattern i matched."""
+        pidx = np.repeat(
+            np.arange(len(hits), dtype=np.int64), [len(rows) for _, rows in hits]
+        )
+        cols = [(d.terms[rows], d.df[rows], d.max_tfnorm[rows]) for d, rows in hits] or [
+            (np.empty(0, dtype=object), np.empty(0, dtype=np.int64), np.empty(0))
+        ]
+        return cls(pidx, *(np.concatenate(c) for c in zip(*cols)))
+
+    def distinct(self) -> tuple[np.ndarray, np.ndarray]:
+        """(sorted distinct terms, each one's df): a term two patterns
+        cover counts once."""
+        terms, first = np.unique(self.term, return_index=True)
+        return terms, self.df[first]
+
+    def covered(self) -> int:
+        """Bitmask of the patterns with at least one expansion."""
+        return int(np.bitwise_or.reduce(np.left_shift(1, self.pattern_idx)))
 
 
-def _load_dictionary(spark: SparkSession, index_dir: str) -> pd.DataFrame | None:
-    """Load (term, df, max_tfnorm) into driver memory once per index
-    (None when the vocabulary exceeds TERMS_CACHE_MAX), indexed by
-    term for exact lookups. The index and its hash table are built
-    here, not per query: at 1M terms they cost ~40 ms (set_index plus
-    the first lookup's lazy hash build)."""
-    cd = canon_dir(index_dir)
+def _prefix_range(terms: np.ndarray, head: str) -> tuple[int, int]:
+    """[lo, hi) rows of a sorted term array that start with ``head``:
+    the terms in [head, successor of head), found by binary search."""
+    lo = int(np.searchsorted(terms, head))
+    while head and head[-1] == "\U0010ffff":
+        head = head[:-1]
+    if not head:
+        return lo, len(terms)
+    succ = head[:-1] + chr(ord(head[-1]) + 1)
+    return lo, int(np.searchsorted(terms, succ))
+
+
+def _fuzzy_rows(dic: _Dictionary, base: str, d: int) -> np.ndarray:
+    """Rows within Levenshtein distance d of ``base``. Two cheap
+    prefilters bound the interpreted-Python DP to a handful of
+    candidates even at the 5M-term cache cap: (1) the length window
+    |len(t) − len(base)| ≤ d over the stored lengths; (2) pigeonhole —
+    ≤ d edits touch ≤ d of the base's d+1 contiguous chunks, so a true
+    match must contain at least one chunk verbatim."""
+    cand = np.flatnonzero(np.abs(dic.lens - len(base)) <= d)
+    nchunks = d + 1
+    chunks = []
+    if len(base) >= nchunks:
+        step = len(base) // nchunks
+        chunks = [
+            base[i * step:(i + 1) * step if i < nchunks - 1 else len(base)]
+            for i in range(nchunks)
+        ]
+    return np.array(
+        [
+            r for r, t in zip(cand.tolist(), dic.terms[cand])
+            if (not chunks or any(c in t for c in chunks)) and _lev_within(base, t, d)
+        ],
+        dtype=np.int64,
+    )
+
+
+def _exact_rows(dic: _Dictionary, term: str) -> np.ndarray:
+    """Rows holding exactly ``term`` (binary search)."""
+    return np.arange(
+        np.searchsorted(dic.terms, term, "left"), np.searchsorted(dic.terms, term, "right")
+    )
+
+
+def _match(dic: _Dictionary, p: str) -> np.ndarray:
+    """Ascending rows of ``dic`` that pattern ``p`` covers. Exact terms
+    and pure-prefix globs (``head*``) are binary searches; other globs
+    full-match only inside their literal head's range; regexes match
+    every term; fuzzy terms go through `_fuzzy_rows`."""
+    rx = _parse_regex(p)
+    fz = None if rx is not None else _parse_fuzzy(p)
+    if rx is not None:
+        hit = [rx.fullmatch(t) is not None for t in dic.terms]
+        return np.flatnonzero(np.array(hit, dtype=bool))
+    if fz is not None:
+        return _fuzzy_rows(dic, *fz)
+    if not _is_wildcard(p):
+        return _exact_rows(dic, p)
+    head = p.split("*", 1)[0].split("?", 1)[0]
+    lo, hi = _prefix_range(dic.terms, head)
+    if p == head + "*":
+        return np.arange(lo, hi)
+    glob = wildcard_to_regex(p)
+    hit = [glob.fullmatch(t) is not None for t in dic.terms[lo:hi]]
+    return lo + np.flatnonzero(np.array(hit, dtype=bool))
+
+
+def cached_stats(spark: SparkSession, index_dir: str, cd: str | None = None) -> dict:
+    cd = cd or canon_dir(index_dir)
+    if cd not in _dict_cache:
+        _load_dictionary(spark, index_dir, cd)
+    return _dict_cache[cd][1]
+
+
+def _load_dictionary(
+    spark: SparkSession, index_dir: str, cd: str | None = None
+) -> _Dictionary | None:
+    """The vocabulary as term-sorted arrays (`_Dictionary`), loaded
+    into driver memory once per index; None when it exceeds
+    TERMS_CACHE_MAX. Exact terms and prefix globs are then binary
+    searches over the sorted terms, with no per-query index or hash
+    table to build. ``cd``: the index's `canon_dir`, when the caller
+    already has it."""
+    cd = cd or canon_dir(index_dir)
     if cd in _dict_cache:
         return _dict_cache[cd][0]
     stats = read_stats(spark, index_dir)
     terms = None
     if stats["vocab_size"] <= TERMS_CACHE_MAX:
-        terms = (
+        pdf = (
             manifest.read_table(spark, index_dir, "terms")
             .select("term", "df", "max_tfnorm")
             .toPandas()
-            .set_index("term", drop=False)
         )
-        if len(terms):
-            terms.loc[[terms.index[0]]]  # builds the lazy lookup tables
+        terms = _Dictionary.of(pdf["term"], pdf["df"], pdf["max_tfnorm"])
     _dict_cache[cd] = (terms, stats)
     return terms
 
@@ -676,9 +806,18 @@ def expand_patterns(
     by equality; globs by anchored regex (WildMatch semantics,
     index2.rs:554). Served from the in-memory dictionary when it fits;
     otherwise one combined distributed probe (a single Catalyst filter
-    OR-ing every pattern, one job total)."""
+    OR-ing every pattern, one job total). The frame of `_expand`."""
     if not patterns:
-        return pd.DataFrame(columns=["pattern_idx", "term", "df", "max_tfnorm"])
+        return pd.DataFrame(columns=list(_Expansion._fields))
+    return pd.DataFrame(_expand(spark, index_dir, patterns)._asdict())
+
+
+def _expand(
+    spark: SparkSession, index_dir: str, patterns: list[str], cd: str | None = None
+) -> _Expansion:
+    """Every vocabulary term each pattern covers, as `_Expansion`
+    columns: matched against the resident dictionary when it fits,
+    else through the prefix-shard cache (`_expand_sharded`)."""
     if len(patterns) > MAX_QUERY_PATTERNS:
         # every flat-query path packs pattern membership into ONE
         # int64 bitmask (bit i = pattern i matched) — pattern 63+
@@ -689,34 +828,19 @@ def expand_patterns(
             f"too many query patterns ({len(patterns)}); the bitmask "
             f"execution paths support at most {MAX_QUERY_PATTERNS}"
         )
-    terms = _load_dictionary(spark, index_dir)
-    if terms is not None:
-        frames = []
-        for i, p in enumerate(patterns):
-            rx = _parse_regex(p)
-            fz = None if rx is not None else _parse_fuzzy(p)
-            if rx is not None:
-                hit = terms[_regex_mask(terms["term"], rx)].copy()
-            elif fz is not None:
-                hit = terms[_fuzzy_mask(terms["term"], *fz)].copy()
-            elif _is_wildcard(p):
-                hit = terms[_wild_mask(terms["term"], p)].copy()
-            else:
-                hit = terms.loc[[p]].copy() if p in terms.index else terms.iloc[0:0].copy()
-            hit["pattern_idx"] = i
-            frames.append(hit)
-        out = pd.concat(frames, ignore_index=True)
-        return out[["pattern_idx", "term", "df", "max_tfnorm"]]
-    # distributed fallback (vocab > TERMS_CACHE_MAX), with a prefix-
-    # SHARD cache in front: hot term prefixes are served from driver
-    # memory, cold ones cost ONE combined Spark probe (ROADMAP r2 #4)
-    return _expand_sharded(spark, index_dir, patterns)
+    dic = _load_dictionary(spark, index_dir, cd)
+    if dic is None:
+        # vocab > TERMS_CACHE_MAX: hot term prefixes are served from
+        # driver memory, cold ones cost ONE combined Spark probe
+        # (ROADMAP r2 #4)
+        return _expand_sharded(spark, index_dir, patterns)
+    return _Expansion.of([(dic, _match(dic, p)) for p in patterns])
 
 
 # --- prefix-shard dictionary cache (vocabularies > TERMS_CACHE_MAX) --
 # A shard = every vocabulary term starting with the same
 # SHARD_PREFIX_LEN-char prefix, fetched with a sargable
-# startswith-pushdown scan and kept as a pandas frame. Repeated
+# startswith-pushdown scan and kept as a `_Dictionary`. Repeated
 # queries over hot prefixes (the realistic query distribution) then
 # probe with zero Spark jobs, while cold prefixes pay one combined
 # scan. Shards hotter than SHARD_ROWS_MAX rows are served but not
@@ -725,7 +849,7 @@ def expand_patterns(
 SHARD_PREFIX_LEN = 2
 SHARD_ROWS_MAX = 1_000_000
 SHARD_CACHE_ROWS = 4_000_000
-_shard_cache: dict[tuple[str, str], pd.DataFrame] = {}
+_shard_cache: dict[tuple[str, str], _Dictionary] = {}
 
 
 def _shard_key(p: str) -> str | None:
@@ -739,32 +863,32 @@ def _shard_key(p: str) -> str | None:
     return head[:SHARD_PREFIX_LEN] if len(head) >= SHARD_PREFIX_LEN else None
 
 
-def _cache_shard(index_dir: str, prefix: str, frame: pd.DataFrame) -> None:
-    if len(frame) > SHARD_ROWS_MAX:
+def _cache_shard(index_dir: str, prefix: str, shard: _Dictionary) -> None:
+    if len(shard.terms) > SHARD_ROWS_MAX:
         return
-    total = sum(len(v) for v in _shard_cache.values()) + len(frame)
+    total = sum(len(v.terms) for v in _shard_cache.values()) + len(shard.terms)
     while total > SHARD_CACHE_ROWS and _shard_cache:
         oldest = next(iter(_shard_cache))  # FIFO eviction
-        total -= len(_shard_cache.pop(oldest))
-    _shard_cache[(canon_dir(index_dir), prefix)] = frame
+        total -= len(_shard_cache.pop(oldest).terms)
+    _shard_cache[(canon_dir(index_dir), prefix)] = shard
 
 
 def _expand_sharded(
     spark: SparkSession, index_dir: str, patterns: list[str]
-) -> pd.DataFrame:
+) -> _Expansion:
     """Distributed probe with shard caching. Shardable patterns (≥
     SHARD_PREFIX_LEN literal head chars) are matched against their
     prefix shard — loaded once via startswith pushdown, then resident.
     Keyless patterns (leading wildcard / 1-char head) go through the
     per-pattern combined predicate, exactly as before. All cold work
-    is ONE Spark job."""
+    is ONE Spark job, whose rows become one `_Dictionary`."""
     cd = canon_dir(index_dir)
     keys = {p: _shard_key(p) for p in patterns}
     missing = sorted(
         {k for k in keys.values() if k is not None and (cd, k) not in _shard_cache}
     )
     keyless = [p for p in patterns if keys[p] is None]
-    loose = pd.DataFrame(columns=["term", "df", "max_tfnorm"])
+    loose = _Dictionary.of([], [], [])
     if missing or keyless:
         terms_df = _cached_table(spark, index_dir, "terms")
         conds = []
@@ -792,62 +916,53 @@ def _expand_sharded(
                 conds.append(rx_cond)
             else:
                 conds.append(F.col("term") == p)
-        combined = conds[0]
-        for c in conds[1:]:
-            combined = combined | c
-        got = terms_df.filter(combined).select("term", "df", "max_tfnorm").toPandas()
+        got = (
+            terms_df.filter(reduce(operator.or_, conds))
+            .select("term", "df", "max_tfnorm")
+            .toPandas()
+        )
+        loose = _Dictionary.of(got["term"], got["df"], got["max_tfnorm"])
         for k in missing:
-            _cache_shard(index_dir, k, got[got["term"].str.startswith(k)].copy())
-        loose = got
-    frames = []
-    for i, p in enumerate(patterns):
-        k = keys[p]
-        src = _shard_cache.get((cd, k)) if k is not None else None
+            _cache_shard(index_dir, k, loose.rows(*_prefix_range(loose.terms, k)))
+    hits = []
+    for p in patterns:
+        src = _shard_cache.get((cd, keys[p])) if keys[p] is not None else None
         if src is None:
             # keyless pattern, or a too-hot-to-cache shard: match
             # against this probe's result rows
             src = loose
-        rx = _parse_regex(p)
-        fz = None if rx is not None else _parse_fuzzy(p)
-        if rx is not None:
-            hit = src[_regex_mask(src["term"], rx)].copy()
-        elif fz is not None:
-            hit = src[_fuzzy_mask(src["term"], *fz)].copy()
-        elif _is_wildcard(p):
-            hit = src[_wild_mask(src["term"], p)].copy()
-        else:
-            hit = src[src["term"] == p].copy()
-        hit["pattern_idx"] = i
-        frames.append(hit)
-    out = pd.concat(frames, ignore_index=True)
-    return out[["pattern_idx", "term", "df", "max_tfnorm"]]
+        hits.append((src, _match(src, p)))
+    return _Expansion.of(hits)
 
 
-def _decode_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _decode_kernel(
+    batches: Iterator[pd.DataFrame], with_pos: bool = False
+) -> Iterator[pd.DataFrame]:
+    """Posting-block batches → one (term, doc_id, tf, doc_len, tfnorm)
+    row per posting, plus its position array (``pos``, from
+    pos_bytes) ``with_pos``."""
     for pdf in batches:
         if len(pdf) == 0:
             continue
         range_bits = int(pdf["range_bits"].iat[0])
         bases = pdf["range_id"].values.astype(np.int64) << range_bits
-        doc_lists, tf_lists, dl_lists = decode_batch(
+        doc_ids, (tfs, dls), counts = decode_flat(
             list(pdf["doc_gaps"]), bases, [list(pdf["tf_bytes"]), list(pdf["dl_bytes"])]
         )
-        counts = np.fromiter((len(d) for d in doc_lists), dtype=np.int64, count=len(doc_lists))
-        terms = np.repeat(pdf["term"].values, counts)
-        doc_ids = np.concatenate(doc_lists) if len(doc_lists) else np.array([], dtype=np.int64)
-        tfs = np.concatenate(tf_lists) if tf_lists else np.array([], dtype=np.int64)
-        dls = np.concatenate(dl_lists) if dl_lists else np.array([], dtype=np.int64)
         avgdl = float(pdf["avgdl"].iat[0]) or 1.0
-        tfnorm = tfs * (K1 + 1.0) / (tfs + K1 * (1.0 - B + B * dls / avgdl))
-        yield pd.DataFrame(
-            {
-                "term": terms,
-                "doc_id": doc_ids,
-                "tf": tfs.astype(np.int32),
-                "doc_len": dls,
-                "tfnorm": tfnorm,
-            }
-        )
+        out = {
+            "term": np.repeat(pdf["term"].values, counts),
+            "doc_id": doc_ids,
+            "tf": tfs.astype(np.int32),
+            "doc_len": dls,
+            "tfnorm": tfs * (K1 + 1.0) / (tfs + K1 * (1.0 - B + B * dls / avgdl)),
+        }
+        if with_pos:
+            # the batch's payloads back to back are one block whose
+            # docs are every posting, in order
+            (pos,) = decode_positions_batch([b"".join(pdf["pos_bytes"])], [tfs])
+            out["pos"] = [p.astype(np.int32) for p in pos]
+        yield pd.DataFrame(out)
 
 
 # Above this many expanded terms, the query-vocabulary probe switches
@@ -899,6 +1014,7 @@ def _and_surviving_ranges(
     full: int,
     stats: dict,
     blocks: DataFrame | None = None,
+    cd: str | None = None,
 ) -> list[int] | None:
     """Candidate-range pre-intersection for conjunctive queries: the
     range_ids where the OR of present terms' pattern-coverage masks
@@ -917,16 +1033,12 @@ def _and_surviving_ranges(
         return None
     terms = sorted(mask_by_term)
     if len(terms) <= ISIN_PUSHDOWN_MAX:
-        meta = _block_meta(spark, index_dir, terms, stats)
-        if len(meta) == 0:
-            return []
-        masks = meta["term"].map(mask_by_term).values.astype(np.int64)
-        per_range = pd.DataFrame(
-            {"range_id": meta["range_id"].values, "m": masks}
-        ).groupby("range_id")["m"].agg(
-            lambda s: int(np.bitwise_or.reduce(s.values))
-        )
-        ids = [int(r) for r, v in per_range.items() if v == full]
+        term_idx, meta = _block_meta(spark, index_dir, terms, stats, cd)
+        masks = np.array([mask_by_term[t] for t in terms], dtype=np.int64)[term_idx]
+        rids, inv = np.unique(meta.range_id, return_inverse=True)
+        acc = np.zeros(len(rids), dtype=np.int64)
+        np.bitwise_or.at(acc, inv, masks)
+        ids = rids[acc == full].tolist()
     else:
         if blocks is None:
             blocks = _query_blocks(
@@ -1208,61 +1320,72 @@ def _mask_predicate(node: tuple, mask: Column) -> Column:
     return reduce(operator.and_ if node[0] == "and" else operator.or_, cols)
 
 
-def _required_masks(
-    expanded: pd.DataFrame, req: list[int]
-) -> tuple[dict[str, int], int]:
+def _required_masks(e: _Expansion, req: list[int]) -> tuple[dict[str, int], int]:
     """(mask_by_term, full_mask) over the required leaves — the input
     of `_and_surviving_ranges`, with leaf indices re-packed into
     contiguous bits."""
     bit = {leaf: i for i, leaf in enumerate(req)}
     mask_by_term: dict[str, int] = {}
-    for term, p in zip(expanded["term"], expanded["pattern_idx"]):
+    for term, p in zip(e.term.tolist(), e.pattern_idx.tolist()):
         if p in bit:
             mask_by_term[term] = mask_by_term.get(term, 0) | 1 << bit[p]
     return mask_by_term, (1 << len(req)) - 1
 
 
+class _TermInfo(NamedTuple):
+    """The matched vocabulary terms of a ranked query as parallel
+    arrays sorted by term: the scoring weight ``idf`` (float64) and
+    the pattern-coverage ``mask`` (int64)."""
+
+    term: np.ndarray
+    idf: np.ndarray
+    mask: np.ndarray
+
+    def take(self, rows: np.ndarray) -> _TermInfo:
+        return _TermInfo(self.term[rows], self.idf[rows], self.mask[rows])
+
+
 def _term_info(
-    expansions: list[pd.DataFrame], n_docs: int, positive: set
-) -> pd.DataFrame:
+    expansions: list[_Expansion], n_docs: int, positive: set, boosts: list[float]
+) -> _TermInfo:
     """One row per matched vocabulary term → (term, idf, mask): the
     pattern-coverage mask and the scoring weight. The weight is the
     BM25 idf from the GLOBAL df (Σ df over the shards holding the
-    term), times the term's max boost (see split_boosts), and 0 for a
-    term whose leaves are all negated — its mask bits still gate
-    membership, it never scores. Every consumer (resident and
-    distributed scoring, θ probes, block upper bounds) reads this one
-    pre-multiplied column, so all paths stay rank-identical."""
-    df: dict[str, int] = {}
-    mask: dict[str, int] = {}
-    pos: dict[str, bool] = {}
-    boost: dict[str, float] = {}
+    term), times the term's max boost over its patterns (see
+    split_boosts; ``boosts`` per pattern), and 0 for a term whose
+    leaves are all negated — its mask bits still gate membership, it
+    never scores. Every consumer (resident and distributed scoring, θ
+    probes, block upper bounds) reads this one pre-multiplied column,
+    so all paths stay rank-identical."""
+    pidx = np.concatenate([e.pattern_idx for e in expansions])
+    terms, inv = np.unique(
+        np.concatenate([e.term for e in expansions]), return_inverse=True
+    )
+    df = np.zeros(len(terms), dtype=np.int64)
     for e in expansions:
-        for t, d in dict(zip(e["term"], e["df"])).items():
-            df[t] = df.get(t, 0) + int(d)
-        boosts = e["boost"] if "boost" in e.columns else [1.0] * len(e)
-        for t, p, b in zip(e["term"], e["pattern_idx"], boosts):
-            mask[t] = mask.get(t, 0) | 1 << int(p)
-            pos[t] = pos.get(t, False) or int(p) in positive
-            boost[t] = max(boost.get(t, b), b)
-    terms = sorted(df)
-    return pd.DataFrame({
-        "term": terms,
-        "idf": [idf(n_docs, df[t]) * float(pos[t]) * boost[t] for t in terms],
-        "mask": np.array([mask[t] for t in terms], dtype=np.int64),
-    })
+        t, d = e.distinct()
+        df[np.searchsorted(terms, t)] += d
+    mask = np.zeros(len(terms), dtype=np.int64)
+    np.bitwise_or.at(mask, inv, np.left_shift(1, pidx))
+    pos = np.zeros(len(terms), dtype=bool)
+    np.logical_or.at(pos, inv, np.isin(pidx, list(positive)))
+    boost = np.zeros(len(terms))
+    np.maximum.at(boost, inv, np.asarray(boosts, dtype=np.float64)[pidx])
+    idfs = np.fromiter((idf(n_docs, d) for d in df.tolist()), dtype=np.float64, count=len(df))
+    return _TermInfo(terms, idfs * pos * boost, mask)
 
 
 class _Shard(NamedTuple):
     """One index of a ranked query: its position in the shard list,
-    its stats carrying the GLOBAL avgdl, its slice of the term info,
-    its DeadSet and the ranges its decode is restricted to (None =
-    every range)."""
+    its dir and `canon_dir`, its stats carrying the GLOBAL avgdl, its
+    slice of the term info, its DeadSet and the ranges its decode is
+    restricted to (None = every range)."""
 
     pos: int
     dir: str
+    cd: str
     stats: dict
-    terms: pd.DataFrame
+    terms: _TermInfo
     dead: DeadSet
     ranges: list[int] | None
 
@@ -1298,42 +1421,44 @@ def _ranked(
     the candidate postings fit LOCAL_SCORE_MAX_POSTINGS and every
     shard's dead set is resident, else as one distributed plan
     (`_score_distributed`); ``local_score=False`` forces the latter.
-    Results are rank-identical either way."""
+    Results are rank-identical either way.
+
+    Expansion, planning and resident scoring run on numpy arrays
+    (`_Expansion`, `_TermInfo`, `_Meta`, `_Blocks`); each shard's
+    `canon_dir` is resolved once and handed to the cache helpers."""
     if scope:
         parse_scope(scope)  # validate before any work
     patterns, boosts = split_boosts(patterns)
-    stats_list = [cached_stats(spark, d) for d in index_dirs]
+    cds = [canon_dir(d) for d in index_dirs]
+    stats_list = [cached_stats(spark, d, cd) for d, cd in zip(index_dirs, cds)]
     n_docs = sum(int(s["n_docs"]) for s in stats_list)
     tokens = sum(int(s["total_tokens"]) for s in stats_list)
     avgdl = tokens / n_docs if n_docs else 1.0
-    expansions = [expand_patterns(spark, d, patterns) for d in index_dirs]
-    if any(b != 1.0 for b in boosts):
-        expansions = [
-            e.assign(boost=[boosts[i] for i in e["pattern_idx"]]) for e in expansions
-        ]
+    expansions = [_expand(spark, d, patterns, cd) for d, cd in zip(index_dirs, cds)]
     # a shard that cannot satisfy the tree contributes nothing and gets
     # no DeadSet, so its tombstone/exclusion sizes cannot force the
     # query off the serving path; its df still counts in the global idf
-    live = [
-        i
-        for i, e in enumerate(expansions)
-        if _satisfiable(tree, reduce(operator.or_, (1 << int(p) for p in e["pattern_idx"]), 0))
-    ]
+    live = [i for i, e in enumerate(expansions) if _satisfiable(tree, e.covered())]
     if not live:
         return finish_ranked(spark, index_dirs, [], k, with_urls)
-    info = _term_info(expansions, n_docs, positive_leaves(tree))
+    info = _term_info(expansions, n_docs, positive_leaves(tree), boosts)
     req = sorted(required_leaves(tree)) if pre_intersect else []
     # min_match > 1 (an "atleast" tree) keeps prune off, as search()
     # documents and the CLI enforces
     prune = prune and k is not None and len(index_dirs) == 1 and tree[0] in ("and", "or")
     shards = []
+    n_postings = 0
     for i in live:
-        d, e = index_dirs[i], expansions[i]
+        d, cd, e = index_dirs[i], cds[i], expansions[i]
         stats = dict(stats_list[i], avgdl=avgdl)
-        terms = info[info["term"].isin(set(e["term"]))]
-        dead = DeadSet(spark, d, exclude=exclude, scope=scope, exclude_ids=exclude_ids)
+        shard_terms, shard_dfs = e.distinct()
+        n_postings += int(shard_dfs.sum())
+        terms = info.take(np.searchsorted(info.term, shard_terms))
+        dead = DeadSet(
+            spark, d, exclude=exclude, scope=scope, exclude_ids=exclude_ids, cd=cd
+        )
         if prune and dead.resident is not None:
-            ranges = _prune_plan(spark, d, stats, k, tree, terms, dead.resident)
+            ranges = _prune_plan(spark, d, stats, k, tree, terms, dead.resident, cd)
         elif len(req) > 1:
             # a satisfying doc has every required leaf, and its
             # postings live in one range: only ranges where each
@@ -1341,7 +1466,9 @@ def _ranked(
             # other ranges drop for ALL query terms (negated leaves
             # included) — surviving docs keep every row, so scores
             # are unchanged.
-            ranges = _and_surviving_ranges(spark, d, *_required_masks(e, req), stats)
+            ranges = _and_surviving_ranges(
+                spark, d, *_required_masks(e, req), stats, cd=cd
+            )
         else:
             ranges = None
         # ranges == [] (e.g. a ts window missing this shard's crawl
@@ -1349,13 +1476,10 @@ def _ranked(
         # shard-per-month federation): the shard launches nothing,
         # and scores are unchanged since global stats still count it
         shards.append(
-            _Shard(i, d, stats, terms, dead, _intersect_ranges(ranges, dead.ranges))
+            _Shard(i, d, cd, stats, terms, dead, _intersect_ranges(ranges, dead.ranges))
         )
     # the postings cap holds even for an explicit local_score=True: a
     # stop-word-grade wildcard must never reach the query node
-    n_postings = sum(
-        int(expansions[s.pos].drop_duplicates("term")["df"].sum()) for s in shards
-    )
     resident = (
         k is not None
         and local_score is not False
@@ -1363,7 +1487,9 @@ def _ranked(
         and all(s.dead.resident is not None for s in shards)
     )
     score = _score_resident if resident else _score_distributed
-    return finish_ranked(spark, index_dirs, score(spark, shards, tree, k), k, with_urls)
+    return finish_ranked(
+        spark, index_dirs, score(spark, shards, tree, k), k, with_urls, cds=cds
+    )
 
 
 def _score_resident(
@@ -1380,13 +1506,13 @@ def _score_resident(
         if s.ranges == []:
             continue
         blocks = _fetch_blocks(
-            spark, s.dir, list(s.terms["term"]), s.stats, ranges=s.ranges
+            spark, s.dir, s.terms.term.tolist(), s.stats, ranges=s.ranges, cd=s.cd
         )
         uniq, score, mask_acc = _score_blocks_np(blocks, s.stats, s.terms)
         keep = _eval_np(tree, mask_acc) & ~np.isin(uniq, s.dead.resident)
         uniq, score = uniq[keep], score[keep]
         order = np.lexsort((uniq, -score))[:k]
-        rows.extend((int(uniq[j]), float(score[j]), s.pos) for j in order)
+        rows.extend(zip(uniq[order].tolist(), score[order].tolist(), [s.pos] * len(order)))
     rows.sort(key=lambda t: (-t[1], t[0]))
     return rows[:k]
 
@@ -1403,8 +1529,12 @@ def _score_distributed(
     for s in shards:
         if s.ranges == []:
             continue
-        terms = list(s.terms["term"])
-        qterms = spark.createDataFrame(s.terms)
+        terms = s.terms.term.tolist()
+        qterms = local_df(
+            spark,
+            list(zip(terms, s.terms.idf.tolist(), s.terms.mask.tolist())),
+            "term string, idf double, mask long",
+        )
         scored = (
             _decoded_postings(spark, s.dir, qterms, s.stats, terms, allowed_ranges=s.ranges)
             .join(F.broadcast(qterms), "term")
@@ -1433,6 +1563,7 @@ def finish_ranked(
     k: int | None,
     with_urls: bool,
     score_col: str = "score",
+    cds: list[str] | None = None,
 ) -> DataFrame:
     """A ranked result in the search output shape: (doc_id, score),
     or with ``with_urls`` (doc_id, score, url) in the same order.
@@ -1451,7 +1582,8 @@ def finish_ranked(
     method builds the `local_df` frame of the rows once. Ranked rows
     without urls become a `ResidentFrame` too. ``k=None`` or a wider
     k keeps the lazy left join against the docs table(s) plus the
-    ranking sort, and a lazy frame without urls stays lazy."""
+    ranking sort, and a lazy frame without urls stays lazy. ``cds``:
+    the dirs' `canon_dir`, when the caller already has them."""
     shards = not isinstance(index_dirs, str)
     dirs = list(index_dirs) if shards else [index_dirs]
     if not with_urls or k is None or k > ISIN_PUSHDOWN_MAX:
@@ -1483,7 +1615,10 @@ def finish_ranked(
     ids_by_shard: dict[int, list[int]] = {}
     for d, _, s in rows:
         ids_by_shard.setdefault(s, []).append(int(d))
-    urls = {s: _lookup_urls(spark, dirs[s], ids) for s, ids in ids_by_shard.items()}
+    urls = {
+        s: _lookup_urls(spark, dirs[s], ids, cds[s] if cds else None)
+        for s, ids in ids_by_shard.items()
+    }
     return ResidentFrame(
         spark,
         [(d, sc, urls[s][int(d)]) for d, sc, s in rows],
@@ -1492,12 +1627,12 @@ def finish_ranked(
 
 
 def _lookup_urls(
-    spark: SparkSession, index_dir: str, ids: list[int]
+    spark: SparkSession, index_dir: str, ids: list[int], cd: str | None = None
 ) -> dict[int, str | None]:
     """doc_id → url through the resident url cache; the misses are
     read in ONE isin pushdown scan of the docs table and cached,
     None for an id with no docs row."""
-    cd = canon_dir(index_dir)
+    cd = cd or canon_dir(index_dir)
     out: dict[int, str | None] = {}
     misses = []
     with _cache_lock:
@@ -1534,12 +1669,14 @@ def _lookup_urls(
 _tomb_ids_cache: dict[str, np.ndarray | None] = {}
 
 
-def _dead_ids_capped(spark: SparkSession, index_dir: str) -> np.ndarray | None:
+def _dead_ids_capped(
+    spark: SparkSession, index_dir: str, cd: str | None = None
+) -> np.ndarray | None:
     """Tombstoned doc_ids as a driver-side array, or None when the
     delete set exceeds TOMBSTONE_LOCAL_MAX (callers must then either
     anti-join distributed or treat every doc as potentially live).
     Cached per index until the next snapshot mutation."""
-    cd = canon_dir(index_dir)
+    cd = cd or canon_dir(index_dir)
     if cd in _tomb_ids_cache:
         return _tomb_ids_cache[cd]
     dead = _tombstones(spark, index_dir)
@@ -1666,7 +1803,7 @@ _ts_range_cache: dict[tuple[str, str], "np.ndarray | None"] = {}
 
 
 def _ts_allowed_ranges(
-    spark: SparkSession, index_dir: str, scope: str
+    spark: SparkSession, index_dir: str, scope: str, cd: str | None = None
 ) -> list[int] | None:
     """Sorted range_ids whose crawl-time bounds intersect the ts
     scope's window, or None when range pruning is unavailable (not a
@@ -1682,7 +1819,7 @@ def _ts_allowed_ranges(
     field, value = parse_scope(scope)
     if field != "ts":
         return None
-    key = (canon_dir(index_dir), scope)
+    key = (cd or canon_dir(index_dir), scope)
     if key in _ts_range_cache:
         hit = _ts_range_cache[key]
         return None if hit is None else [int(x) for x in hit]
@@ -1751,7 +1888,7 @@ def _restrict_ranges(spark: SparkSession, blocks: DataFrame, ids):
 
 
 def _scope_nonmatch_ids(
-    spark: SparkSession, index_dir: str, scope: str
+    spark: SparkSession, index_dir: str, scope: str, cd: str | None = None
 ) -> np.ndarray | None:
     """doc_ids NOT matching the scope, as a capped driver array: the
     complement merges into the ``dead`` set, so every execution path
@@ -1763,7 +1900,7 @@ def _scope_nonmatch_ids(
     filtered docs scan). Cached per (index, scope) until the next
     snapshot mutation."""
     field, value = parse_scope(scope)
-    key = (canon_dir(index_dir), scope)
+    key = (cd or canon_dir(index_dir), scope)
     if key in _scope_ids_cache:
         return _scope_ids_cache[key]
     docs = _cached_table(spark, index_dir, "docs")
@@ -1795,35 +1932,30 @@ def _scope_docs_df(
 
 
 def _exclusion_ids(
-    spark: SparkSession, index_dir: str, expanded: pd.DataFrame, stats: dict
+    spark: SparkSession, index_dir: str, expanded: _Expansion, stats: dict,
+    cd: str | None = None,
 ) -> np.ndarray | None:
     """doc_ids containing ANY term of an exclusion expansion, as a
     driver-side array — or None when the exclusion postings exceed
     LOCAL_SCORE_MAX_POSTINGS (a stop-word-grade exclusion must never
     be collected onto the query node; the DeadSet then anti-joins
     distributed and pruning stays off)."""
-    if len(expanded) == 0:
-        return np.empty(0, dtype=np.int64)
-    uniq = expanded.drop_duplicates("term")
-    if uniq["df"].sum() > LOCAL_SCORE_MAX_POSTINGS:
+    terms, dfs = expanded.distinct()
+    if dfs.sum() > LOCAL_SCORE_MAX_POSTINGS:
         return None
-    blocks = _fetch_blocks(spark, index_dir, list(uniq["term"]), stats)
-    if len(blocks) == 0:
-        return np.empty(0, dtype=np.int64)
-    bases = blocks["range_id"].values.astype(np.int64) << stats["range_bits"]
-    (doc_lists,) = decode_batch(list(blocks["doc_gaps"]), bases)
-    return np.unique(np.concatenate(doc_lists))
+    blocks = _fetch_blocks(spark, index_dir, terms.tolist(), stats, cd=cd)
+    docs, _, _ = decode_flat(blocks.doc_gaps, blocks.range_id << stats["range_bits"])
+    return np.unique(docs)
 
 
 def _exclusion_docs_df(
-    spark: SparkSession, index_dir: str, expanded: pd.DataFrame, stats: dict
+    spark: SparkSession, index_dir: str, expanded: _Expansion, stats: dict
 ) -> DataFrame:
     """Distinct doc_ids holding any term of an exclusion expansion as a
     DataFrame — the distributed anti-join side for exclusion sets too
     large to hold on the query node."""
-    terms = sorted(set(expanded["term"]))
     return (
-        _decoded_postings(spark, index_dir, None, stats, terms)
+        _decoded_postings(spark, index_dir, None, stats, expanded.distinct()[0].tolist())
         .select("doc_id")
         .distinct()
     )
@@ -1851,7 +1983,8 @@ class DeadSet:
 
     Parts are computed on first use and served from the per-index
     caches, so a warm query builds its dead set with zero Spark
-    jobs."""
+    jobs. ``cd``: the index's `canon_dir`, when the caller already
+    has it."""
 
     def __init__(
         self,
@@ -1860,10 +1993,12 @@ class DeadSet:
         exclude: list[str] | None = None,
         scope: str | None = None,
         exclude_ids: list[int] | None = None,
+        cd: str | None = None,
     ):
         if scope:
             parse_scope(scope)  # validate before any work
         self.spark, self.index_dir, self.scope = spark, index_dir, scope
+        self.cd = cd or canon_dir(index_dir)
         # boosts cannot change membership: strip, honor the base
         self.exclude = split_boosts(exclude)[0] if exclude else None
         self.exclude_ids = (
@@ -1874,23 +2009,23 @@ class DeadSet:
     def ranges(self) -> list[int] | None:
         if not self.scope:
             return None
-        return _ts_allowed_ranges(self.spark, self.index_dir, self.scope)
+        return _ts_allowed_ranges(self.spark, self.index_dir, self.scope, self.cd)
 
     @cached_property
-    def _excl_expanded(self) -> pd.DataFrame:
+    def _excl_expanded(self) -> _Expansion:
         # expanded ONCE: the id fetch and the anti-join share it
-        return expand_patterns(self.spark, self.index_dir, self.exclude)
+        return _expand(self.spark, self.index_dir, self.exclude, self.cd)
 
     @cached_property
     def _excl_ids(self) -> np.ndarray | None:
         return _exclusion_ids(
             self.spark, self.index_dir, self._excl_expanded,
-            cached_stats(self.spark, self.index_dir),
+            cached_stats(self.spark, self.index_dir, self.cd), self.cd,
         )
 
     @cached_property
     def _scope_ids(self) -> np.ndarray | None:
-        return _scope_nonmatch_ids(self.spark, self.index_dir, self.scope)
+        return _scope_nonmatch_ids(self.spark, self.index_dir, self.scope, self.cd)
 
     @cached_property
     def resident(self) -> np.ndarray | None:
@@ -1903,7 +2038,7 @@ class DeadSet:
             parts.append(self.exclude_ids)
         if any(p is None for p in parts):
             return None
-        tomb = _dead_ids_capped(self.spark, self.index_dir)
+        tomb = _dead_ids_capped(self.spark, self.index_dir, self.cd)
         return None if tomb is None else reduce(np.union1d, parts, tomb)
 
     def drop(self, frame: DataFrame) -> DataFrame:
@@ -1917,7 +2052,7 @@ class DeadSet:
                 frame = frame.join(
                     _exclusion_docs_df(
                         self.spark, self.index_dir, self._excl_expanded,
-                        cached_stats(self.spark, self.index_dir),
+                        cached_stats(self.spark, self.index_dir, self.cd),
                     ),
                     "doc_id", "left_anti",
                 )
@@ -1944,8 +2079,9 @@ def _prune_plan(
     stats: dict,
     k: int,
     tree: tuple,
-    term_info: pd.DataFrame,
+    info: _TermInfo,
     dead: np.ndarray,
+    cd: str | None = None,
 ) -> list[int]:
     """Block-max prune planning — two LIGHT driver round-trips, both
     served from the resident caches when warm (zero Spark jobs):
@@ -1954,8 +2090,8 @@ def _prune_plan(
        (``_block_meta``: resident metadata cache, or one isin-pushdown
        scan that never reads binary columns; a few rows per term per
        range). Range upper bounds Σ_term idf·ub and coverage masks
-       are computed in pandas on the driver; a range whose mask
-       cannot satisfy the tree (AND: a pattern absent) drops.
+       are numpy per-range aggregates on the driver; a range whose
+       mask cannot satisfy the tree (AND: a pattern absent) drops.
     2. θ probe — the binary blocks of the single best range
        (``_fetch_blocks``: block cache, or one pushdown scan on
        term AND range_id), scored in numpy on the driver; θ = the k-th
@@ -1978,57 +2114,45 @@ def _prune_plan(
     exactly ONE range (range_id = doc_id >> range_bits), so the
     per-range ub bounds any doc's TOTAL score in either mode.
     """
-    term_list = list(term_info["term"])
-    meta = _block_meta(spark, index_dir, term_list, stats)
-    if len(meta) == 0:
-        return []
-    info = term_info.set_index("term")
-    idfs = meta["term"].map(info["idf"]).values.astype(np.float64)
-    masks = meta["term"].map(info["mask"]).values.astype(np.int64)
-    fresh = np.abs(meta["enc_avgdl"].values - float(stats["avgdl"])) < 1e-9
-    max_tf = meta["max_tf"].values.astype(np.float64)
+    term_list = info.term.tolist()
+    term_idx, meta = _block_meta(spark, index_dir, term_list, stats, cd)
+    fresh = np.abs(meta.enc_avgdl - float(stats["avgdl"])) < 1e-9
+    max_tf = meta.max_tf.astype(np.float64)
     safe_ub = max_tf * (K1 + 1.0) / (max_tf + K1 * (1.0 - B))
-    row_ub = np.where(fresh, meta["max_tfnorm"].values, safe_ub)
-    per_range = pd.DataFrame(
-        {"range_id": meta["range_id"].values, "w": idfs * row_ub, "mask": masks}
-    ).groupby("range_id").agg(
-        ub=("w", "sum"),
-        mask=("mask", lambda s: int(np.bitwise_or.reduce(s.values))),
-    )
-    per_range = per_range[_eval_np(tree, per_range["mask"].values.astype(np.int64))]
-    if len(per_range) == 0:
+    row_ub = np.where(fresh, meta.max_tfnorm, safe_ub)
+    rids, inv = np.unique(meta.range_id, return_inverse=True)
+    ub = np.zeros(len(rids))
+    np.add.at(ub, inv, info.idf[term_idx] * row_ub)
+    mask = np.zeros(len(rids), dtype=np.int64)
+    np.bitwise_or.at(mask, inv, info.mask[term_idx])
+    ok = _eval_np(tree, mask)
+    rids, ub = rids[ok], ub[ok]
+    if len(rids) == 0:
         return []
-    best_range = int(per_range["ub"].idxmax())
-    probe = _fetch_blocks(spark, index_dir, term_list, stats, ranges=[best_range])
-    uniq, score, mask_acc = _score_blocks_np(probe, stats, term_info)
+    best_range = int(rids[np.argmax(ub)])
+    probe = _fetch_blocks(spark, index_dir, term_list, stats, ranges=[best_range], cd=cd)
+    uniq, score, mask_acc = _score_blocks_np(probe, stats, info)
     top = np.sort(score[~np.isin(uniq, dead) & _eval_np(tree, mask_acc)])[::-1]
     theta = float(top[k - 1]) if len(top) >= k else 0.0
-    return [int(r) for r in per_range.index[per_range["ub"].values >= theta]]
+    return rids[ub >= theta].tolist()
 
 
 def _score_blocks_np(
-    blocks: pd.DataFrame, stats: dict, term_info: pd.DataFrame
+    blocks: _Blocks, stats: dict, info: _TermInfo
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode posting-block rows and BM25-score them in numpy →
-    (doc_ids, scores, coverage masks). Shared by the query-node
+    """Decode posting blocks in one flat pass per column and
+    BM25-score them in numpy → (doc_ids, scores, coverage masks).
+    ``blocks.term_idx`` indexes ``info``. Shared by the query-node
     serving path and the pruner's θ probe."""
-    if len(blocks) == 0:
-        empty = np.empty(0, dtype=np.int64)
-        return empty, empty.astype(np.float64), empty
-    idf_map = dict(zip(term_info["term"], term_info["idf"]))
-    mask_map = dict(zip(term_info["term"], term_info["mask"]))
-    bases = blocks["range_id"].values.astype(np.int64) << stats["range_bits"]
-    doc_lists, tf_lists, dl_lists = decode_batch(
-        list(blocks["doc_gaps"]), bases,
-        [list(blocks["tf_bytes"]), list(blocks["dl_bytes"])],
+    docs, (tfs, dls), counts = decode_flat(
+        blocks.doc_gaps, blocks.range_id << stats["range_bits"],
+        [blocks.tf_bytes, blocks.dl_bytes],
     )
-    counts = np.fromiter((len(d) for d in doc_lists), dtype=np.int64, count=len(doc_lists))
-    docs = np.concatenate(doc_lists)
-    tfs = np.concatenate(tf_lists).astype(np.float64)
-    dls = np.concatenate(dl_lists).astype(np.float64)
+    tfs = tfs.astype(np.float64)
+    dls = dls.astype(np.float64)
     avgdl = float(stats["avgdl"]) or 1.0
-    idfs = np.repeat(blocks["term"].map(idf_map).values.astype(np.float64), counts)
-    masks = np.repeat(blocks["term"].map(mask_map).values.astype(np.int64), counts)
+    idfs = np.repeat(info.idf[blocks.term_idx], counts)
+    masks = np.repeat(info.mask[blocks.term_idx], counts)
     w = idfs * tfs * (K1 + 1.0) / (tfs + K1 * (1.0 - B + B * dls / avgdl))
     uniq, inv = np.unique(docs, return_inverse=True)
     score = np.zeros(len(uniq))
@@ -2146,36 +2270,7 @@ POS_DECODED_SCHEMA = DECODED_SCHEMA + ", pos array<int>"
 
 
 def _decode_pos_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """_decode_kernel + per-posting position arrays (pos_bytes)."""
-    from textindex_spark.codec import decode_positions_batch
-
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        range_bits = int(pdf["range_bits"].iat[0])
-        bases = pdf["range_id"].values.astype(np.int64) << range_bits
-        doc_lists, tf_lists, dl_lists = decode_batch(
-            list(pdf["doc_gaps"]), bases, [list(pdf["tf_bytes"]), list(pdf["dl_bytes"])]
-        )
-        pos_lists = decode_positions_batch(list(pdf["pos_bytes"]), tf_lists)
-        counts = np.fromiter((len(d) for d in doc_lists), dtype=np.int64, count=len(doc_lists))
-        terms = np.repeat(pdf["term"].values, counts)
-        doc_ids = np.concatenate(doc_lists) if len(doc_lists) else np.array([], dtype=np.int64)
-        tfs = np.concatenate(tf_lists) if tf_lists else np.array([], dtype=np.int64)
-        dls = np.concatenate(dl_lists) if dl_lists else np.array([], dtype=np.int64)
-        avgdl = float(pdf["avgdl"].iat[0]) or 1.0
-        tfnorm = tfs * (K1 + 1.0) / (tfs + K1 * (1.0 - B + B * dls / avgdl))
-        poss = [p.astype(np.int32) for docs in pos_lists for p in docs]
-        yield pd.DataFrame(
-            {
-                "term": terms,
-                "doc_id": doc_ids,
-                "tf": tfs.astype(np.int32),
-                "doc_len": dls,
-                "tfnorm": tfnorm,
-                "pos": poss,
-            }
-        )
+    return _decode_kernel(batches, with_pos=True)
 
 
 def _decoded_pos(
@@ -2342,16 +2437,16 @@ def _phrase_frame(
         raise ValueError(f"phrase too long ({len(slots)} > {PHRASE_MAX_TERMS})")
     stats = cached_stats(spark, index_dir)
     patterns = sorted(set(slots))
-    expanded = expand_patterns(spark, index_dir, patterns)
+    expanded = _expand(spark, index_dir, patterns)
     slot_terms = {
-        p: sorted(expanded.loc[expanded["pattern_idx"] == i, "term"].unique())
+        p: sorted(set(expanded.term[expanded.pattern_idx == i]))
         for i, p in enumerate(patterns)
     }
     if any(not slot_terms[p] for p in slots):
         return None  # some slot matches nothing → no doc can match
     idf_by_term = {
         t: idf(stats["n_docs"], int(d))
-        for t, d in zip(expanded["term"], expanded["df"])
+        for t, d in zip(expanded.term, expanded.df)
     }
     # conjunction over DISTINCT patterns: a doc matches only if every
     # distinct slot pattern occurs, so ranges missing any slot's terms
@@ -2451,9 +2546,9 @@ def near_docs(
         uniq = list(dict.fromkeys(slots))
     else:
         uniq = [slots[0]] + sorted(set(slots[1:]) - {slots[0]})
-    expanded = expand_patterns(spark, index_dir, uniq)
+    expanded = _expand(spark, index_dir, uniq)
     slot_terms = {
-        p: sorted(expanded.loc[expanded["pattern_idx"] == i, "term"].unique())
+        p: sorted(set(expanded.term[expanded.pattern_idx == i]))
         for i, p in enumerate(uniq)
     }
     if any(not slot_terms[p] for p in uniq):
@@ -2466,7 +2561,7 @@ def near_docs(
     if with_score:
         idf_by_term = {
             t: idf(stats["n_docs"], int(d))
-            for t, d in zip(expanded["term"], expanded["df"])
+            for t, d in zip(expanded.term, expanded.df)
         }
     cur = None
     for i, p in enumerate(uniq):
@@ -2900,10 +2995,10 @@ def _term_dfs(
     list: resident dictionary when cached, else ONE broadcast-probe
     join against the terms table (no isin — the list can exceed the
     pushdown cap)."""
-    terms = _load_dictionary(spark, index_dir)
-    if terms is not None:
-        sub = terms[terms["term"].isin(terms_list)]
-        return dict(zip(sub["term"], (int(x) for x in sub["df"])))
+    dic = _load_dictionary(spark, index_dir)
+    if dic is not None:
+        rows = [r for t in terms_list for r in _exact_rows(dic, t).tolist()]
+        return dict(zip(dic.terms[rows], dic.df[rows].tolist()))
     probe = local_df(spark, [(t,) for t in terms_list], "term string")
     rows = (
         _cached_table(spark, index_dir, "terms")

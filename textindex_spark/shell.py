@@ -407,13 +407,13 @@ class Shell:
         if at_cmd:
             return [c for c in self.COMMANDS if c.startswith(text)]
         if words[0] in ("find", "stats", "bool"):
-            from textindex_spark.query import _load_dictionary
+            from textindex_spark.query import _load_dictionary, _prefix_range
 
-            terms = _load_dictionary(self.spark, self.index_dir)
-            if terms is None:
+            dic = _load_dictionary(self.spark, self.index_dir)
+            if dic is None:
                 return []
-            hits = terms["term"][terms["term"].str.startswith(text)]
-            return sorted(hits)[:50]
+            lo, hi = _prefix_range(dic.terms, text)
+            return dic.terms[lo:min(hi, lo + 50)].tolist()
         return []
 
 
