@@ -6,7 +6,8 @@ Runs the headline jobs at ``$SPARK_GRAFT_SF_DIR`` (default
 JSON line::
 
     {"metric": ..., "value": <headline seconds>, "unit": "sec",
-     "queries": {...per-phase seconds...}, "sf": ...}
+     "queries": {...per-phase seconds...}, "sf": ...,
+     "storage": {table: {"bytes", "files"}}}
 
 Headline = full inverted-index build (read → extract → tokenize →
 shuffle → encode → write) over the deterministic synthetic web corpus
@@ -107,6 +108,13 @@ def main() -> None:
     timings["index_build"] = round(t_build, 3)
     for i, r in enumerate(runs):
         timings[f"index_build_run{i}"] = round(r, 3)
+    # the published index on disk (untimed): data bytes and files per table
+    from textindex_spark.build import describe_index
+
+    storage = {
+        t: {"bytes": d["bytes"], "files": d["files"]}
+        for t, d in describe_index(spark, idx_dir)["tables"].items()
+    }
 
     # ---- warm BM25 query latencies over that index
     from textindex_spark.corpus import site_topic_word
@@ -475,6 +483,7 @@ def main() -> None:
         "docs_per_sec": round(stats["n_docs"] / t_build, 1),
         "cpus": CPUS,
         "vocab_size": int(stats["vocab_size"]),
+        "storage": storage,
     }
     print(json.dumps(out))
 

@@ -99,6 +99,19 @@ def test_describe_index(spark, index_dir):
     assert d["tables"]["postings"]["files"] > 0
     assert d["snapshot_version"] >= 1
     assert "deleted" not in d["tables"]  # fresh build → no tombstones
+    # data files only: the _SUCCESS markers are neither files nor bytes
+    import os
+
+    for t, info in d["tables"].items():
+        parquet = [
+            os.path.join(root, f)
+            for p in manifest.table_paths(spark, index_dir, t)
+            for root, _, files in os.walk(p)
+            for f in files
+            if f.endswith(".parquet")
+        ]
+        assert info["files"] == len(parquet) > 0, t
+        assert info["bytes"] == sum(os.path.getsize(f) for f in parquet), t
 
 
 def test_delete_is_atomic_commit(spark, index_dir):

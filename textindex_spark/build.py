@@ -36,6 +36,13 @@ Scale notes (100 TB / 10^12 docs):
 * Per-posting doc_len is stored alongside tf (both varint), so BM25
   needs NO join against the docs table at query time — norms live in
   the posting list, as in production IR systems.
+* Storage: the varint blocks sit inside zstd Parquet pages, and so does
+  every other table (``session.PARQUET_CODEC``: the session setting for
+  Spark writes, an argument for the pyarrow stats row). General-purpose
+  page compression on top of the integer codec takes the perfbench
+  seed-1 index from 711 KB under Snappy to 561 KB (postings 377 → 290
+  KB, segments 280 → 233 KB). Parquet records the codec per column
+  chunk, so a table may mix Snappy and zstd files; nothing migrates.
 * Everything before the central shuffle is a single narrow stage
   (scan → filter → kernel → explode), fully pipelined.
 """
@@ -54,7 +61,7 @@ from textindex_spark import manifest
 from textindex_spark.codec import encode_batch, encode_positions_batch
 from textindex_spark.functions.kernels import SEGMENT_SCHEMA, extract_tokenize_batches
 from textindex_spark.refimpl.filters import EXT_IGNORE, NAME_IGNORE
-from textindex_spark.session import local_df
+from textindex_spark.session import PARQUET_CODEC, local_df
 
 K1 = 1.2
 B = 0.75
@@ -125,7 +132,9 @@ def write_stats_row(spark: SparkSession, stats_dir: str, stats: dict) -> None:
 
     shutil.rmtree(local, ignore_errors=True)
     os.makedirs(local, exist_ok=True)
-    pq.write_table(pa.table(cols), f"{local}/part-00000.parquet")
+    pq.write_table(
+        pa.table(cols), f"{local}/part-00000.parquet", compression=PARQUET_CODEC
+    )
     open(f"{local}/_SUCCESS", "w").close()
 
 # Postings live in hash-bucketed directories (term_bucket=K/): the
@@ -681,25 +690,19 @@ def describe_index(spark: SparkSession, index_dir: str) -> dict:
     (``/root/reference/src/main.rs:285-347`` prints block/word/file
     counts of the 4 KiB blockfile): per-table row/byte/file counts of
     the current snapshot, plus the scalar stats row and manifest
-    version. Byte counts come from the Hadoop FileSystem (FS-agnostic,
-    no driver-local os.walk)."""
+    version. Byte and file counts cover data files only
+    (`_data_file_sizes`), listed through the Hadoop FileSystem
+    (FS-agnostic, no driver-local os.walk)."""
     out: dict = {"tables": {}}
     for t in manifest.DEFAULT_TABLES:
         if not manifest.table_exists(spark, index_dir, t):
             continue
         paths = manifest.table_paths(spark, index_dir, t)
-        n_bytes = n_files = 0
-        for p in paths:
-            fs, jpath, _ = manifest._fs(spark, p)
-            if not fs.exists(jpath):
-                continue
-            summary = fs.getContentSummary(jpath)
-            n_bytes += summary.getLength()
-            n_files += summary.getFileCount()
+        sizes = [n for p in paths for n in _data_file_sizes(spark, p)]
         out["tables"][t] = {
             "rows": manifest.read_table(spark, index_dir, t).count(),
-            "bytes": int(n_bytes),
-            "files": int(n_files),
+            "bytes": sum(sizes),
+            "files": len(sizes),
             "dirs": len(paths),
         }
     out["stats"] = read_stats(spark, index_dir)
@@ -708,6 +711,23 @@ def describe_index(spark: SparkSession, index_dir: str) -> dict:
     lineage = read_lineage(spark, index_dir)
     out["lineage_rows"] = lineage.count()
     return out
+
+
+def _data_file_sizes(spark: SparkSession, path: str) -> list[int]:
+    """Byte sizes of the data files under ``path``, recursively. Names
+    starting with ``_`` or ``.`` (the ``_SUCCESS`` marker, checksums)
+    are skipped: Spark's hidden-file rule, so the count is the files a
+    scan reads."""
+    fs, jpath, _ = manifest._fs(spark, path)
+    if not fs.exists(jpath):
+        return []
+    it = fs.listFiles(jpath, True)
+    sizes = []
+    while it.hasNext():
+        st = it.next()
+        if not st.getPath().getName().startswith(("_", ".")):
+            sizes.append(int(st.getLen()))
+    return sizes
 
 
 # ------------------------------------------------------- resumable build

@@ -17,6 +17,12 @@ from pyspark.sql.classic.dataframe import DataFrame
 from pyspark.sql.types import NumericType, StringType, StructType
 
 
+# Parquet page codec of every table the engine writes: the Spark
+# writer takes it from the session (`get_spark`), the driver-side
+# pyarrow stats writer (`build.write_stats_row`) passes it directly.
+# Readers need no setting: Parquet records the codec per column chunk.
+PARQUET_CODEC = "zstd"
+
 # This sandbox VM uses hypervisor-lazy memory: the FIRST write to any
 # new page costs ~0.1ms (uffd-style fetch, ~17 MB/s serial), and pages
 # freed back to the OS are reclaimed by the balloon and re-fault later.
@@ -66,6 +72,18 @@ def get_spark(
         .config("spark.sql.icu.caseMappings.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # zstd pages on top of the varint posting blocks: on the
+        # perfbench seed-1 index every table shrinks against Spark's
+        # default Snappy (postings -23%, segments -17%, docs -36%,
+        # terms -21%; the whole index 711 -> 561 KB) at no measurable
+        # build or warm-query cost, and Iceberg has defaulted Parquet
+        # to zstd since 1.4. Spark's default zstd level: level 9 and
+        # Parquet v2 pages gain under 2.5% more. Append, compaction,
+        # purge, merge and streaming writes all inherit it. A caller's
+        # own session keeps Spark's default codec and still writes a
+        # valid index; old Snappy files and new zstd files read side
+        # by side in one table, so existing indexes need no migration.
+        .config("spark.sql.parquet.compression.codec", PARQUET_CODEC)
         # File-scan split packing targets exactly defaultParallelism
         # splits (bytesPerCore heuristic), i.e. ONE task wave — so the
         # single slowest extract/tokenize task gates the whole scan
@@ -80,6 +98,10 @@ def get_spark(
         # local[4] perfbench's 872 KB input of 8 row groups is scanned
         # and tokenized by a single task. At warehouse scale splits
         # already ≫ cores, so this is a no-op there.
+        # The one-task scan of a small input is kept on purpose:
+        # openCostInBytes = 16 KB made it 8 tasks, but warm builds took
+        # 2.3-3.0 s against 2.1-2.4 s, and 8 segments/docs files grew
+        # the index 13.5% (ROADMAP.md, direction 4).
         .config("spark.sql.files.minPartitionNum", str(2 * n_slots))
     )
     # Heap: 8 GB is GC-bound at 32 shuffle+parquet-writing threads
