@@ -7,7 +7,8 @@ JSON line::
 
     {"metric": ..., "value": <headline seconds>, "unit": "sec",
      "queries": {...per-phase seconds...}, "sf": ...,
-     "storage": {table: {"bytes", "files"}}}
+     "storage": {table: {"bytes", "files"}},
+     "posting_cache": {"entries", "postings", "bytes"}}
 
 Headline = full inverted-index build (read → extract → tokenize →
 shuffle → encode → write) over the deterministic synthetic web corpus
@@ -145,6 +146,10 @@ def main() -> None:
             spark, idx_dir, terms, k=10, mode=mode, prune=prune, with_urls=False
         ).collect()
         timings[name] = round(time.time() - t0, 3)
+    # the resident posting cache the hot rows left (untimed)
+    from textindex_spark.query import posting_cache_footprint
+
+    posting_cache = posting_cache_footprint()
 
     # NOT-semantics exclusion (r4): warm serving cost of per-query
     # tombstoning = one extra resident-cache fetch for the exclusion
@@ -484,6 +489,7 @@ def main() -> None:
         "cpus": CPUS,
         "vocab_size": int(stats["vocab_size"]),
         "storage": storage,
+        "posting_cache": posting_cache,
     }
     print(json.dumps(out))
 

@@ -1,18 +1,22 @@
-"""X5 — query-node posting-block cache.
+"""X5 — query-node posting cache.
 
 The reference retains hot index blocks in memory between commands and
 evicts the rest after each save (``cleanup``, reference
 ``src/index2.rs:363-374``; iteration-time ``discard``,
-``src/index2/word_map.rs:326-334``). The Spark analog caches fetched
-posting-block rows on the query node under an LRU byte budget
-(``textindex_spark/query.py``: ``_block_cache`` / ``_fetch_blocks``).
-These tests pin: (1) a warm serving query launches ZERO Spark jobs,
-(2) warm results are identical to cold, on every path — including an
-appended index where one (term, range_id) key owns several block
-rows, (3) the byte budget evicts LRU, (4) snapshot mutations
-invalidate, (5) the top-k urls of a bounded query come from the
-resident doc_id -> url cache — zero jobs warm, the same rows as the
-docs join on every path, invalidated by append and delete.
+``src/index2/word_map.rs:326-334``). The Spark analog keeps fetched
+postings decoded on the query node, as doc_id-sorted doc_id/tf/dl
+columns per term, under an LRU budget of decoded bytes
+(``textindex_spark/query.py``: ``_posting_cache`` / ``_fetch_blocks``).
+These tests pin: (1) a warm serving query launches ZERO Spark jobs
+and decodes nothing, (2) warm results are identical to cold, on every
+path — including an appended index where one (term, range_id) key
+owns several block rows — and bit-identical to a fresh decode scored
+with the per-posting formula, (3) range-restricted misses fetch only
+their ranges, (4) the byte budget evicts LRU, also under concurrent
+queries, (5) snapshot mutations invalidate, (6) the top-k urls of a
+bounded query come from the resident doc_id -> url cache — zero jobs
+warm, the same rows as the docs join on every path, invalidated by
+append and delete.
 """
 from __future__ import annotations
 
@@ -36,7 +40,7 @@ def index_dir(spark, tmp_path_factory):
 
 
 def _cd_bytes(cd: str) -> int:
-    return sum(v[1] for k, v in query._block_cache.items() if k[0] == cd)
+    return sum(e.nbytes for k, e in query._posting_cache.items() if k[0] == cd)
 
 
 def _jobs_during(spark, group: str, fn):
@@ -97,8 +101,8 @@ def test_eviction_respects_byte_budget(spark, index_dir, monkeypatch):
     # older entries (LRU), the GLOBAL total never exceeding the budget
     monkeypatch.setattr(query, "BLOCK_CACHE_MAX_BYTES", int(one_term * 1.5))
     search(spark, index_dir, ["index"], k=5, with_urls=False).collect()
-    assert query._block_bytes <= int(one_term * 1.5)
-    assert "index" in {k[1] for k in query._block_cache if k[0] == cd}
+    assert query._posting_bytes <= int(one_term * 1.5)
+    assert "index" in {k[1] for k in query._posting_cache if k[0] == cd}
     invalidate_cache(index_dir)
 
 
@@ -569,3 +573,310 @@ def test_warm_expand_reuses_term_index(spark, index_dir, monkeypatch):
     warm = query.expand_patterns(spark, index_dir, pats)
     assert warm.equals(cold)
     assert (cold["term"] == "spark").any()
+
+
+# --- decoded posting cache: decode once, slice per query -------------
+
+
+@pytest.fixture
+def varint_decodes(monkeypatch):
+    """Counts varint passes: every decode of the codec (the flat block
+    decode included) goes through `codec.varint_decode`."""
+    from textindex_spark import codec
+
+    calls = [0]
+    decode = codec.varint_decode
+
+    def counting(buf):
+        calls[0] += 1
+        return decode(buf)
+
+    monkeypatch.setattr(codec, "varint_decode", counting)
+    return calls
+
+
+@pytest.mark.parametrize("with_urls", [False, True])
+@pytest.mark.parametrize(
+    "family",
+    ["and", "or", "or_pruned", "wildcard", "fuzzy", "exclude", "scope", "bool", "sharded"],
+)
+def test_warm_query_decodes_nothing(
+    spark, index_dir, shard_dirs, varint_decodes, family, with_urls
+):
+    """A warm resident query scores the cached doc_id/tf/dl columns:
+    from the search call through collect() it runs no varint decode."""
+    for d in [index_dir, *shard_dirs]:
+        invalidate_cache(d)
+    cold = _resident_call(family, spark, index_dir, shard_dirs, with_urls).collect()
+    assert cold, f"{family}: the fixture query must have hits"
+    assert varint_decodes[0] > 0, "the cold fill decodes through the counter"
+    varint_decodes[0] = 0
+    warm = _resident_call(family, spark, index_dir, shard_dirs, with_urls).collect()
+    assert varint_decodes[0] == 0, f"{family}: {varint_decodes[0]} varint decodes warm"
+    assert warm == cold
+
+
+@pytest.fixture(scope="module")
+def split_index(spark, tmp_path_factory):
+    """An appended, uncompacted index: hot (term, range_id) keys own
+    several block rows."""
+    rows = synth_corpus(150, seed=13)
+    out = str(tmp_path_factory.mktemp("splitdiff") / "idx")
+    build_index(spark, corpus_df(spark, rows[:100]), out, range_bits=5)
+    append_batch(spark, corpus_df(spark, rows[100:]), out)
+    return out
+
+
+def _per_posting_scores(pdf, terms, ranges, stats, info):
+    """The reference: the table's block rows of ``terms`` (in term
+    order, each term's rows in table order) restricted to ``ranges``,
+    one fresh `decode_flat`, and BM25 accumulated per posting with
+    ``ufunc.at`` → ((doc_ids, scores, masks), (term_idx, docs, tf, dl))."""
+    import numpy as np
+
+    from textindex_spark.build import B, K1
+    from textindex_spark.codec import decode_flat
+
+    pos = {t: i for i, t in enumerate(terms)}
+    rows = pdf[pdf["term"].isin(terms)]
+    if ranges is not None:
+        rows = rows[rows["range_id"].isin(ranges)]
+    rows = rows.iloc[np.argsort([pos[t] for t in rows["term"]], kind="stable")]
+    term_idx = np.array([pos[t] for t in rows["term"]], dtype=np.int64)
+    docs, (tfs, dls), counts = decode_flat(
+        list(rows["doc_gaps"]),
+        rows["range_id"].to_numpy(np.int64) << stats["range_bits"],
+        [list(rows["tf_bytes"]), list(rows["dl_bytes"])],
+    )
+    t_idx = np.repeat(term_idx, counts)
+    tf, dl = tfs.astype(np.float64), dls.astype(np.float64)
+    avgdl = float(stats["avgdl"]) or 1.0
+    w = info.idf[t_idx] * tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
+    uniq, inv = np.unique(docs, return_inverse=True)
+    score = np.zeros(len(uniq))
+    np.add.at(score, inv, w)
+    mask = np.zeros(len(uniq), dtype=np.int64)
+    np.bitwise_or.at(mask, inv, info.mask[t_idx])
+    return (uniq, score, mask), (t_idx, docs, tfs, dls)
+
+
+def test_decoded_postings_differential(spark, split_index):
+    """Seeded differential: random term lists and range sets (None,
+    [], subsets, absent ranges) over random cache states (cold, meta
+    only, partly filled by other requests) give exactly the postings
+    of a fresh decode and bit-identical scores, masks and doc order."""
+    import random
+
+    import numpy as np
+
+    out = split_index
+    stats0 = query.cached_stats(spark, out)
+    pdf = query._cached_table(spark, out, "postings").select(*query._BLOCK_COLS).toPandas()
+    assert (pdf.groupby(["term", "range_id"]).size() > 1).any(), "needs split keys"
+    by_rows = pdf.groupby("term").size().sort_values()
+    hot, vocab = by_rows.index[-10:].tolist(), by_rows.index.tolist()
+    all_ranges = sorted(set(pdf["range_id"].tolist()))
+    assert len(all_ranges) >= 4
+    rng = random.Random(21)
+    shapes = {"none": 0, "empty": 0, "subset": 0}
+    for trial in range(40):
+        roll = rng.random()
+        if roll < 0.25:
+            invalidate_cache(out)
+        elif roll < 0.4:
+            invalidate_cache(out)
+            query._block_meta(spark, out, rng.sample(hot, 3), stats0)
+        terms = sorted(
+            set(rng.sample(hot, rng.randint(1, 4)) + rng.sample(vocab, rng.randint(0, 2)))
+            | ({"zzabsentterm"} if rng.random() < 0.2 else set())
+        )
+        shape = rng.choice(list(shapes))
+        shapes[shape] += 1
+        ranges = {
+            "none": None,
+            "empty": [],
+            "subset": rng.sample(all_ranges + [all_ranges[-1] + 7], rng.randint(1, 4)),
+        }[shape]
+        if rng.random() < 0.5:  # a neighbouring request fills part first
+            query._fetch_blocks(
+                spark, out, rng.sample(terms, 1), stats0,
+                ranges=rng.choice([None, rng.sample(all_ranges, 2)]),
+            )
+        # a federated query scores with the GLOBAL avgdl
+        stats = dict(stats0, avgdl=stats0["avgdl"] * rng.choice([1.0, 1.37]))
+        info = query._TermInfo(
+            np.array(terms),
+            np.array([rng.uniform(0.1, 3.0) for _ in terms]),
+            np.array([1 << rng.randint(0, 3) for _ in terms], dtype=np.int64),
+        )
+        post = query._fetch_blocks(spark, out, terms, stats, ranges=ranges)
+        got = query._score_blocks_np(post, stats, info)
+        want, (t_idx, docs, tfs, dls) = _per_posting_scores(pdf, terms, ranges, stats, info)
+        for g, w in zip(got, want):
+            assert g.dtype == w.dtype and np.array_equal(g, w), (trial, terms, ranges)
+        assert post.counts.tolist() == np.bincount(t_idx, minlength=len(terms)).tolist()
+        mine = np.lexsort((post.doc_id, np.repeat(np.arange(len(terms)), post.counts)))
+        ref = np.lexsort((docs, t_idx))
+        assert np.array_equal(mine, np.arange(len(mine))), "runs are doc_id-sorted"
+        assert np.array_equal(post.doc_id, docs[ref])
+        assert np.array_equal(post.tf, tfs[ref]) and np.array_equal(post.dl, dls[ref])
+        assert post.tf.dtype == post.dl.dtype == np.int32
+    assert min(shapes.values()) > 0, shapes
+
+
+@pytest.mark.parametrize("meta_resident", [True, False])
+def test_theta_probe_miss_fetches_only_best_range(
+    spark, index_dir, monkeypatch, meta_resident
+):
+    """The block-max θ probe on a cold posting cache scans only the
+    best range, whether or not the terms' block-max metadata is
+    resident, and the entries it leaves hold that range alone."""
+    if not meta_resident:
+        monkeypatch.setattr(query, "META_CACHE_TERM_MAX_ROWS", 0)
+    invalidate_cache(index_dir)
+    calls, scanned = [], []
+    fetch, decode = query._fetch_blocks, query._decode_terms
+
+    def spy_fetch(*a, ranges=None, **kw):
+        calls.append(None if ranges is None else list(ranges))
+        if len(calls) == 1:
+            cd = query.canon_dir(index_dir)
+            assert not any(k[0] == cd for k in query._posting_cache)
+        return fetch(*a, ranges=ranges, **kw)
+
+    def spy_decode(fetched, range_bits):
+        scanned.append(sorted(set(fetched["range_id"].tolist())))
+        return decode(fetched, range_bits)
+
+    monkeypatch.setattr(query, "_fetch_blocks", spy_fetch)
+    monkeypatch.setattr(query, "_decode_terms", spy_decode)
+    terms = ["index", "spark"]
+    out = search(
+        spark, index_dir, terms, k=5, mode="or", prune=True, with_urls=False
+    ).collect()
+    assert out and len(calls[0]) == 1, calls
+    assert scanned[0] == calls[0], (scanned, calls)
+    # the probe's entries, before the scoring fetch widened them
+    monkeypatch.setattr(query, "_fetch_blocks", fetch)
+    invalidate_cache(index_dir)
+    if meta_resident:
+        query._block_meta(spark, index_dir, terms, query.cached_stats(spark, index_dir))
+    stats = query.cached_stats(spark, index_dir)
+    fetch(spark, index_dir, terms, stats, ranges=calls[0])
+    cd = query.canon_dir(index_dir)
+    for t in terms:
+        e = query._posting_cache[(cd, t)]
+        assert e.ranges == frozenset(calls[0]), (t, e.ranges)
+        assert set((e.doc_id >> stats["range_bits"]).tolist()) == set(calls[0])
+
+
+def test_mutations_invalidate_posting_cache(spark, tmp_path_factory):
+    """append, delete, compact, purge, rebuild and merge each drop the
+    index's posting entries; the next warm query equals a cold one."""
+    from textindex_spark.build import compact_postings, merge_indexes, purge_deleted
+
+    rows = synth_corpus(120, seed=9)
+    base = tmp_path_factory.mktemp("postinval")
+    out = str(base / "idx")
+    build_index(spark, corpus_df(spark, rows[:80]), out, range_bits=6)
+    terms = ["spark", "index"]
+
+    def run(d):
+        return search(spark, d, terms, k=200, mode="or", with_urls=True).collect()
+
+    def after(op, d=out):
+        cd = query.canon_dir(d)
+        if not any(k[0] == cd for k in query._posting_cache):
+            run(d)
+        assert any(k[0] == cd for k in query._posting_cache)
+        op()
+        assert not any(k[0] == cd for k in query._posting_cache), op
+        got = run(d)
+        invalidate_cache(d)
+        assert got == run(d)
+        return {r["doc_id"]: r["url"] for r in got}
+
+    start = {r["doc_id"]: r["url"] for r in run(out)}
+    appended = after(lambda: append_batch(spark, corpus_df(spark, rows[80:]), out))
+    assert set(appended) > set(start)
+    victim = next(iter(appended))
+    deleted = after(lambda: delete_docs(spark, out, appended[victim]))
+    assert victim not in deleted
+    assert after(lambda: compact_postings(spark, out)) == deleted
+    assert after(lambda: purge_deleted(spark, out)) == deleted
+    rebuilt = after(
+        lambda: build_index(spark, corpus_df(spark, rows[60:]), out, range_bits=6)
+    )
+    assert set(rebuilt) <= {r["doc_id"] for r in rows[60:]}
+
+    shards = [str(base / "s0"), str(base / "s1")]
+    build_index(spark, corpus_df(spark, rows[:60]), shards[0], range_bits=6)
+    build_index(spark, corpus_df(spark, rows[60:]), shards[1], range_bits=6)
+    merged = str(base / "merged")
+    # an entry left under the new index's key by an earlier generation
+    query._posting_cache_put(query.canon_dir(merged), "spark", query._NO_POSTINGS)
+    got = after(lambda: merge_indexes(spark, shards, merged, range_bits=6), merged)
+    assert got and set(got) <= {r["doc_id"] for r in rows}
+
+
+def test_posting_cache_cap_under_threads(spark, index_dir, monkeypatch):
+    """Concurrent fetches from 6 driver threads under a decoded-bytes
+    budget of a few entries: every fetch returns the uncapped
+    postings, and the byte count equals the entries' bytes and stays
+    within the budget."""
+    import sys
+    import threading
+
+    import numpy as np
+
+    stats = query.cached_stats(spark, index_dir)
+    cd = query.canon_dir(index_dir)
+    terms = [
+        r["term"]
+        for r in query._cached_table(spark, index_dir, "terms")
+        .orderBy(F.desc("df"), "term").limit(6).collect()
+    ]
+    reqs = [(t, r) for t in terms for r in (None, (1, 2))]
+    invalidate_cache(index_dir)
+    want = {}
+    for t, r in reqs:
+        p = query._fetch_blocks(spark, index_dir, [t], stats, ranges=r and list(r))
+        want[(t, r)] = (p.doc_id, p.tf, p.dl)
+    assert all(len(v[0]) for v in want.values())
+    cap = 3 * max(e.nbytes for k, e in query._posting_cache.items() if k[0] == cd)
+    invalidate_cache(index_dir)
+    monkeypatch.setattr(query, "BLOCK_CACHE_MAX_BYTES", cap)
+    errors: list[str] = []
+
+    def worker(tid: int) -> None:
+        for rep in range(2):
+            for j in range(len(reqs)):
+                t, r = reqs[(tid * 5 + rep * 3 + j) % len(reqs)]
+                p = query._fetch_blocks(spark, index_dir, [t], stats, ranges=r and list(r))
+                if not all(
+                    np.array_equal(a, b) for a, b in zip((p.doc_id, p.tf, p.dl), want[(t, r)])
+                ):
+                    errors.append(f"thread {tid}: {t} {r}")
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker, args=(t,)) for t in range(6)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, errors[:2]
+    with query._cache_lock:
+        held = sum(e.nbytes for e in query._posting_cache.values())
+        assert query._posting_bytes == held <= cap
+        assert any(k[0] == cd for k in query._posting_cache)
+        assert query.posting_cache_footprint() == {
+            "entries": len(query._posting_cache),
+            "postings": sum(len(e.doc_id) for e in query._posting_cache.values()),
+            "bytes": held,
+        }
+    invalidate_cache(index_dir)

@@ -161,3 +161,52 @@ def test_flat_decode_is_split_decode(blocks, base0):
     assert len(split_docs) == len(split_tfs) == len(blocks)
     for got_d, got_t, want_d, want_t in zip(split_docs, split_tfs, doc_lists, tf_lists):
         assert np.array_equal(got_d, want_d) and np.array_equal(got_t, want_t)
+
+
+def _searchsorted_varint_decode(buf: bytes) -> np.ndarray:
+    """The earlier decoder (per-byte searchsorted for the value index,
+    ``np.add.at`` for the sums), kept as the oracle of
+    ``varint_decode``."""
+    if not buf:
+        return np.empty(0, dtype=np.int64)
+    arr = np.frombuffer(buf, dtype=np.uint8)
+    is_end = arr < 0x80
+    ends = np.nonzero(is_end)[0]
+    n_vals = len(ends)
+    starts = np.empty(n_vals, dtype=np.int64)
+    starts[0] = 0
+    starts[1:] = ends[:-1] + 1
+    byte_idx = np.arange(len(arr), dtype=np.int64)
+    value_id = np.searchsorted(ends, byte_idx, side="left")
+    shift = (byte_idx - starts[value_id]) * 7
+    contrib = (arr & 0x7F).astype(np.int64) << shift
+    vals = np.zeros(n_vals, dtype=np.int64)
+    np.add.at(vals, value_id, contrib)
+    return vals
+
+
+# full uint64 range: 10-byte varints (values ≥ 2^63) decode to the
+# same wrapped int64 in both decoders
+u64 = st.integers(min_value=0, max_value=2**64 - 1)
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    st.lists(
+        st.one_of(
+            u64,
+            st.integers(min_value=0, max_value=127),  # one-byte values
+            st.sampled_from([2**63 - 1, 2**63, 2**64 - 1, 2**56, 128]),
+        ),
+        max_size=300,
+    )
+)
+@example([2**63 - 1])
+@example([2**64 - 1, 0, 2**63])
+@example([0, 1, 127])
+def test_varint_decode_matches_searchsorted_decoder(vals):
+    buf = varint_encode(np.array(vals, dtype=np.uint64))
+    got, want = varint_decode(buf), _searchsorted_varint_decode(buf)
+    assert got.dtype == want.dtype == np.int64
+    assert np.array_equal(got, want)
+    assert np.array_equal(got.view(np.uint64), np.array(vals, dtype=np.uint64))

@@ -194,8 +194,8 @@ def search_bool(
 
     Serving path: when the matched vocabulary's total df fits
     LOCAL_SCORE_MAX_POSTINGS (and the tombstone set is capped),
-    scoring runs on the query node — resident-block-cache fetch,
-    numpy decode/score, vectorized formula evaluation (``_eval_np``)
+    scoring runs on the query node — resident decoded postings,
+    numpy score, vectorized formula evaluation (``_eval_np``)
     — warm queries launch zero Spark jobs, exactly like flat
     `query.search`. Wider candidate sets use the distributed plan
     (one shuffle + codegen'd mask predicate). ``local_score`` forces

@@ -61,23 +61,25 @@ def varint_encode(values: np.ndarray, nbytes: np.ndarray | None = None) -> bytes
 
 
 def varint_decode(buf: bytes) -> np.ndarray:
-    """Decode a LEB128 buffer into an int64 array."""
+    """Decode a LEB128 buffer into an int64 array. A byte's value
+    index is the count of terminators before it (one cumsum), and the
+    values are one ``np.add.reduceat`` of the shifted 7-bit groups
+    over the value starts; a buffer of one-byte values (most tf
+    columns) is returned as is."""
     if not buf:
         return np.empty(0, dtype=np.int64)
     arr = np.frombuffer(buf, dtype=np.uint8)
     is_end = arr < 0x80
-    ends = np.nonzero(is_end)[0]
-    n_vals = len(ends)
-    starts = np.empty(n_vals, dtype=np.int64)
+    if is_end.all():
+        return arr.astype(np.int64)
+    ends = np.flatnonzero(is_end)
+    starts = np.empty(len(ends), dtype=np.int64)
     starts[0] = 0
     starts[1:] = ends[:-1] + 1
-    byte_idx = np.arange(len(arr), dtype=np.int64)
-    value_id = np.searchsorted(ends, byte_idx, side="left")
-    shift = (byte_idx - starts[value_id]) * 7
+    value_id = np.cumsum(is_end) - is_end
+    shift = (np.arange(len(arr), dtype=np.int64) - starts[value_id]) * 7
     contrib = (arr & 0x7F).astype(np.int64) << shift
-    vals = np.zeros(n_vals, dtype=np.int64)
-    np.add.at(vals, value_id, contrib)
-    return vals
+    return np.add.reduceat(contrib, starts)
 
 
 def _split_concat(flat: np.ndarray, lengths: np.ndarray) -> list[np.ndarray]:

@@ -99,33 +99,76 @@ def _cached_table(spark: SparkSession, index_dir: str, name: str) -> DataFrame:
     return df
 
 
-# --- X5: query-node posting-block cache ------------------------------
+# --- X5: query-node posting cache ------------------------------------
 # The reference keeps hot index blocks resident between commands and
 # evicts the rest after each save (`cleanup` retains only the bag-head
 # block type, ``/root/reference/src/index2.rs:363-374``; iteration
 # additionally `discard`s visited posting blocks,
 # ``src/index2/word_map.rs:326-334``). The Spark serving-path analog:
-# the query node caches fetched posting-block rows — the varint binary
-# columns plus the block-max metadata, never ``pos_bytes`` — at
-# (term, range_id) granularity under an LRU byte budget, so a warm
-# BM25 query costs ZERO Spark jobs. Bounded: the local serving path
-# only engages when the candidate set fits LOCAL_SCORE_MAX_POSTINGS,
-# so any single insert is small, and the budget caps the total.
-# Invalidation: ``invalidate_cache`` (called by every snapshot
-# mutator), so a cached block can never outlive its snapshot.
+# the query node keeps each fetched term's postings DECODED, as
+# doc_id-sorted columns (doc_id int64, tf int32, dl int32: 16 B per
+# posting, never positions), under an LRU byte budget counted in those
+# decoded bytes. The varint blocks are decoded once, when an entry is
+# filled; a warm BM25 query slices, scores and launches ZERO Spark
+# jobs. Columnar postings that vectorized operators read directly, as
+# in PAPERS.md "Columnar Formatted Inverted Index for Highly-
+# Paralleled, Vectorized Query Processing". An entry records the
+# ranges it holds, so a range-restricted fetch (θ probe, prune plan,
+# ts scope) fills only those ranges and a later request slices its
+# ranges out with one searchsorted (range_id = doc_id >> range_bits).
+# Bounded: the local serving path only engages when the candidate set
+# fits LOCAL_SCORE_MAX_POSTINGS, and a term over the whole budget is
+# served uncached. Invalidation: ``invalidate_cache`` (called by every
+# snapshot mutator), so an entry can never outlive its snapshot.
 BLOCK_CACHE_MAX_BYTES = 256 * 1024 * 1024
 _BLOCK_COLS = [
     "term", "range_id", "n_docs", "max_tf", "max_tfnorm", "enc_avgdl",
     "doc_gaps", "tf_bytes", "dl_bytes",
 ]
-# (cd, term, range_id) -> (tuple of block-row tuples, nbytes). One key
-# can own SEVERAL block rows: ``append_batch`` adds rows next to
-# existing ones until compaction folds them (build.py append_batch
-# docstring) — the cache must serve ALL of a key's rows or none.
-# Budgets are GLOBAL across index dirs (a long-lived driver touching
-# many indexes must not accumulate a budget per dir).
-_block_cache: "OrderedDict[tuple[str, str, int], tuple[tuple, int]]" = OrderedDict()
-_block_bytes = 0
+# fixed charge per entry beside its columns and held ranges (key, tuple)
+_ENTRY_BYTES = 128
+
+
+class _TermPostings(NamedTuple):
+    """One term's decoded postings, doc_id-sorted. ``ranges``: the
+    range_ids whose postings the entry holds in full (None = every
+    range of the term); a held range can hold no posting."""
+
+    doc_id: np.ndarray
+    tf: np.ndarray
+    dl: np.ndarray
+    ranges: frozenset | None
+
+    @property
+    def nbytes(self) -> int:
+        held = 0 if self.ranges is None else 8 * len(self.ranges)
+        return self.doc_id.nbytes + self.tf.nbytes + self.dl.nbytes + held + _ENTRY_BYTES
+
+    def slice(self, ranges: np.ndarray | None, range_bits: int) -> _TermPostings:
+        """The run of postings in sorted ``ranges`` (None = all; the
+        run is not a cache entry): one searchsorted over the range
+        bounds, no per-range loop."""
+        if ranges is None:
+            return self
+        bounds = np.searchsorted(
+            self.doc_id, np.concatenate((ranges, ranges + 1)) << range_bits
+        )
+        lo, hi = bounds[: len(ranges)], bounds[len(ranges):]
+        n = hi - lo
+        idx = np.repeat(lo - np.cumsum(n) + n, n) + np.arange(n.sum())
+        return _TermPostings(self.doc_id[idx], self.tf[idx], self.dl[idx], None)
+
+
+_NO_POSTINGS = _TermPostings(
+    np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int32),
+    np.empty(0, dtype=np.int32), None,
+)
+
+# (cd, term) -> _TermPostings. Budgets are GLOBAL across index dirs (a
+# long-lived driver touching many indexes must not accumulate a budget
+# per dir).
+_posting_cache: "OrderedDict[tuple[str, str], _TermPostings]" = OrderedDict()
+_posting_bytes = 0
 
 # One lock guards every serving-cache mutation (block/meta puts, LRU
 # move_to_end, invalidation). A long-lived query node serves requests
@@ -171,22 +214,32 @@ URL_CACHE_MAX_ENTRIES = 262_144
 _url_cache: "OrderedDict[tuple[str, int], str | None]" = OrderedDict()
 
 
-def _block_cache_put(cd: str, term: str, range_id: int, rows: list[tuple]) -> None:
-    global _block_bytes
-    key = (cd, term, range_id)
-    # 3 binary columns + fixed per-row overhead for the scalars/keys
-    nb = sum(len(r[6]) + len(r[7]) + len(r[8]) + 64 for r in rows)
+def _posting_cache_put(cd: str, term: str, entry: _TermPostings) -> None:
+    global _posting_bytes
+    nb = entry.nbytes
     if nb > BLOCK_CACHE_MAX_BYTES:
         return
+    key = (cd, term)
     with _cache_lock:
-        old = _block_cache.pop(key, None)
+        old = _posting_cache.pop(key, None)
         if old is not None:
-            _block_bytes -= old[1]
-        _block_cache[key] = (tuple(rows), nb)
-        _block_bytes += nb
-        while _block_bytes > BLOCK_CACHE_MAX_BYTES and _block_cache:
-            _, (_, ev_nb) = _block_cache.popitem(last=False)
-            _block_bytes -= ev_nb
+            _posting_bytes -= old.nbytes
+        _posting_cache[key] = entry
+        _posting_bytes += nb
+        while _posting_bytes > BLOCK_CACHE_MAX_BYTES and _posting_cache:
+            _, ev = _posting_cache.popitem(last=False)
+            _posting_bytes -= ev.nbytes
+
+
+def posting_cache_footprint() -> dict:
+    """The resident posting cache over every index: entries, postings
+    held and the decoded bytes charged to BLOCK_CACHE_MAX_BYTES."""
+    with _cache_lock:
+        return {
+            "entries": len(_posting_cache),
+            "postings": sum(len(e.doc_id) for e in _posting_cache.values()),
+            "bytes": _posting_bytes,
+        }
 
 
 def _meta_cache_put(cd: str, term: str, meta: _Meta) -> None:
@@ -267,26 +320,48 @@ def _block_meta(
     return term_idx, _Meta(*(np.concatenate(c) for c in cols))
 
 
-class _Blocks(NamedTuple):
-    """Posting-block rows as columns: ``term_idx`` is the position of
-    each block's term in the fetched term list."""
+class _Postings(NamedTuple):
+    """Decoded postings of a term list as flat columns: each term's
+    doc_id-sorted run, term after term in list order; ``counts`` =
+    postings per term."""
 
-    term_idx: np.ndarray
-    range_id: np.ndarray
-    doc_gaps: list[bytes]
-    tf_bytes: list[bytes]
-    dl_bytes: list[bytes]
+    doc_id: np.ndarray
+    tf: np.ndarray
+    dl: np.ndarray
+    counts: np.ndarray
 
     @classmethod
-    def of(cls, term_idx: list[int], rows: list[tuple]) -> _Blocks:
-        """From ``_BLOCK_COLS`` row tuples."""
+    def of(cls, runs: list[_TermPostings]) -> _Postings:
+        cols = runs or [_NO_POSTINGS]
         return cls(
-            np.array(term_idx, dtype=np.int64),
-            np.array([r[1] for r in rows], dtype=np.int64),
-            [r[6] for r in rows],
-            [r[7] for r in rows],
-            [r[8] for r in rows],
+            np.concatenate([r.doc_id for r in cols]),
+            np.concatenate([r.tf for r in cols]),
+            np.concatenate([r.dl for r in cols]),
+            np.array([len(r.doc_id) for r in runs], dtype=np.int64),
         )
+
+
+def _decode_terms(fetched: pd.DataFrame, range_bits: int) -> dict[str, _TermPostings]:
+    """Fetched ``_BLOCK_COLS`` rows → each term's postings, decoded in
+    one flat pass per column over the whole fetch and sorted by
+    doc_id (a term's rows arrive in scan order, and an append adds
+    rows beside existing (term, range) rows until compaction)."""
+    if not len(fetched):
+        return {}
+    docs, (tfs, dls), counts = decode_flat(
+        list(fetched["doc_gaps"]),
+        fetched["range_id"].to_numpy(np.int64) << range_bits,
+        [list(fetched["tf_bytes"]), list(fetched["dl_bytes"])],
+    )
+    codes, terms = pd.factorize(fetched["term"])
+    code = np.repeat(codes, counts)
+    ends = np.cumsum(np.bincount(code, minlength=len(terms)))[:-1]
+    # one gather per term: an entry owns its arrays, never a view that
+    # would pin the whole fetch after its neighbours are evicted
+    return {
+        t: _TermPostings(docs[o], tfs[o].astype(np.int32), dls[o].astype(np.int32), None)
+        for t, o in zip(terms, np.split(np.lexsort((docs, code)), ends))
+    }
 
 
 def _fetch_blocks(
@@ -296,121 +371,134 @@ def _fetch_blocks(
     stats: dict,
     ranges: list[int] | None = None,
     cd: str | None = None,
-) -> _Blocks:
-    """Serving-path posting-block fetch through the block cache → the
-    block rows of the (distinct) terms as `_Blocks` columns, in term
-    order. ``ranges=None`` → every range of each term; else only those
-    range_ids. Cold terms cost one pushdown scan (exactly the
-    pre-cache plan) and warm the cache; fully-warm queries cost zero
-    Spark jobs and build no frame. Falls back to an uncached direct
-    scan for expansions past ISIN_PUSHDOWN_MAX (the cache is for
-    serving-sized queries). ``cd``: the index's `canon_dir`, when the
-    caller already has it."""
+) -> _Postings:
+    """Serving-path posting fetch through the posting cache → the
+    decoded postings of the (distinct) terms as `_Postings` columns,
+    in term order. ``ranges=None`` → every range of each term; else
+    only those range_ids, sliced out of the cached columns. Warm
+    terms decode nothing and launch nothing. Every miss of the call
+    (whole terms, or only the missing ranges of a term whose block-max
+    metadata is resident or whose fetch is range-restricted) is filled
+    by ONE pushdown scan, decoded once and cached with the ranges it
+    covers. Expansions past ISIN_PUSHDOWN_MAX take an uncached direct
+    scan (the cache is for serving-sized queries). ``cd``: the index's
+    `canon_dir`, when the caller already has it."""
     want = list(term_list)
-    pos = {t: i for i, t in enumerate(want)}
-    range_set = None if ranges is None else set(int(r) for r in ranges)
+    bits = int(stats["range_bits"])
     if ranges is not None and len(ranges) > ISIN_PUSHDOWN_MAX:
-        range_set = None  # matches the pre-cache plan: read everything
-    if not want:
-        return _Blocks.of([], [])
+        ranges = None  # matches the pre-cache plan: read everything
+    req = None if ranges is None else np.unique(np.asarray(ranges, dtype=np.int64))
+    if not want or (req is not None and not len(req)):
+        return _Postings.of([_NO_POSTINGS for _ in want])
     if len(want) > ISIN_PUSHDOWN_MAX:
         fetch = _query_blocks(spark, index_dir, None, want, stats.get("n_term_buckets"))
-        if range_set is not None:
-            fetch = fetch.filter(F.col("range_id").isin(sorted(range_set)))
-        rows = list(fetch.select(*_BLOCK_COLS).toPandas().itertuples(index=False, name=None))
-        return _Blocks.of([pos[r[0]] for r in rows], rows)
+        if req is not None:
+            fetch = fetch.filter(F.col("range_id").isin(req.tolist()))
+        got = _decode_terms(fetch.select(*_BLOCK_COLS).toPandas(), bits)
+        return _Postings.of([got.get(t, _NO_POSTINGS) for t in want])
 
     cd = cd or canon_dir(index_dir)
-    hits: list[list[tuple]] = [[] for _ in want]  # block rows per term
-    full_miss: list[str] = []   # no metadata → fetch the whole term
-    missing_pairs: set[tuple[str, int]] = set()
+    req_set = None if req is None else frozenset(req.tolist())
+    pos = {t: i for i, t in enumerate(want)}
+    runs: list[_TermPostings | None] = [None] * len(want)
+    held: dict[str, _TermPostings] = {}  # a miss's partial entry
+    # the missing ranges per term (None = the whole term), split by
+    # whether block-max metadata chose them: one scan predicate per
+    # group, as the in-list cross of its terms and ranges. A range-
+    # restricted request keeps its ranges in the SCAN even for a
+    # meta-less term: a θ probe on a term too large for the metadata
+    # cache must never pull the term's whole postings driver-side.
+    need_meta: dict[str, set] = {}
+    need_bare: dict[str, set | None] = {}
+    metas: dict[str, set] = {}
     for i, t in enumerate(want):
+        with _cache_lock:
+            e = _posting_cache.get((cd, t))
+            if e is not None:
+                _posting_cache.move_to_end((cd, t))
+        have = frozenset() if e is None else e.ranges
+        if have is None or (req_set is not None and have >= req_set):
+            runs[i] = e.slice(req, bits)
+            continue
         m = _meta_get(cd, t)
         if m is None:
-            full_miss.append(t)
-            continue
-        # dedupe: a range_id repeats in the metadata when a key owns
-        # several block rows (append before compaction) — the cache
-        # entry already holds ALL of the key's rows
-        needed = dict.fromkeys(m.range_id.tolist())
-        if range_set is not None:
-            needed = [r for r in needed if r in range_set]
-        for r in needed:
-            with _cache_lock:
-                hit = _block_cache.get((cd, t, r))
-                if hit is not None:
-                    _block_cache.move_to_end((cd, t, r))
-            if hit is not None:
-                hits[i].extend(hit[0])
-            else:
-                missing_pairs.add((t, r))
-    if full_miss or missing_pairs:
-        pair_terms = sorted({t for t, _ in missing_pairs})
-        pair_ranges = sorted({r for _, r in missing_pairs})
-        if len(pair_ranges) > ISIN_PUSHDOWN_MAX:
-            # the DERIVED range in-list must honor the same plan-size
-            # invariant as the term list (review r4): a mass block-
-            # cache miss across many terms×ranges would otherwise put
-            # a 10^4+-literal In() into the plan and stall planning.
-            # Dropping the range predicate keeps the scan bounded by
-            # the term in-list; the over-delivered ranges are already
-            # filtered to exact (term, range) membership driver-side
-            # below, and the extras warm the block cache.
-            pair_ranges = []
-        conds = []
-        if full_miss:
-            cond = F.col("term").isin(full_miss)
-            if range_set is not None:
-                # a requested-range fetch must keep the range predicate
-                # in the SCAN even for meta-less terms — a θ probe on a
-                # term too large for the metadata cache must never pull
-                # the term's whole postings driver-side
-                cond &= F.col("range_id").isin(sorted(range_set))
-            conds.append(cond)
-        if missing_pairs:
-            # the in-list cross can over-deliver (term, range) combos;
-            # exact membership is re-checked driver-side below
-            pc = F.col("term").isin(pair_terms)
-            if pair_ranges:
-                pc &= F.col("range_id").isin(pair_ranges)
-            conds.append(pc)
-        pred = conds[0] if len(conds) == 1 else conds[0] | conds[1]
+            need_bare[t] = None if req_set is None else set(req_set - have)
+        else:
+            metas[t] = set(m.range_id.tolist())
+            need = metas[t] - have if req_set is None else (metas[t] & req_set) - have
+            if not need:  # every requested range is held or empty
+                runs[i] = _NO_POSTINGS if e is None else e.slice(req, bits)
+                continue
+            need_meta[t] = need
+        if e is not None:
+            held[t] = e
+    if need_meta or need_bare:
+        groups = [
+            (list(g), None if None in g.values() else set().union(*g.values()))
+            for g in (need_bare, need_meta) if g
+        ]
+        # the in-list size cap holds for the DERIVED range list too: a
+        # mass miss across many terms x ranges drops the range
+        # predicate and reads the terms whole (bounded by the term
+        # in-list) instead of planning a 10^4-literal In()
+        groups = [
+            (ts, None if rs is None or len(rs) > ISIN_PUSHDOWN_MAX else rs)
+            for ts, rs in groups
+        ]
+        conds = [
+            F.col("term").isin(ts)
+            if rs is None
+            else F.col("term").isin(ts) & F.col("range_id").isin(sorted(rs))
+            for ts, rs in groups
+        ]
         fetched = (
             _bucket_filter(
                 _cached_table(spark, index_dir, "postings"),
-                full_miss + pair_terms,
+                list(need_bare) + list(need_meta),
                 stats.get("n_term_buckets"),
             )
-            .filter(pred)
+            .filter(reduce(operator.or_, conds))
             .select(*_BLOCK_COLS)
             .toPandas()
         )
-        full_set = set(full_miss)
-        by_key: dict[tuple[str, int], list[tuple]] = {}
-        for tup in fetched.itertuples(index=False, name=None):
-            by_key.setdefault((tup[0], int(tup[1])), []).append(tup)
-        for (t, r), key_rows in by_key.items():
-            _block_cache_put(cd, t, r, key_rows)
-            if t in full_set:
-                if range_set is None or r in range_set:
-                    hits[pos[t]].extend(key_rows)
-            elif (t, r) in missing_pairs:
-                hits[pos[t]].extend(key_rows)
-        # metadata rides along free on a full-term fetch. Range-
-        # restricted fetches see only a slice of the term, so no
-        # metadata is cached for them.
-        if full_miss and range_set is None:
-            _cache_meta_groups(cd, fetched, full_miss)
-    return _Blocks.of(
-        [i for i, h in enumerate(hits) for _ in h], [r for h in hits for r in h]
-    )
+        got = _decode_terms(fetched, bits)
+        for ts, rs in groups:
+            for t in ts:
+                new = got.get(t, _NO_POSTINGS)
+                old = held.get(t)
+                if old is not None and rs is not None:
+                    # the in-list cross can re-deliver a held range
+                    keep = ~np.isin(new.doc_id >> bits, list(old.ranges))
+                    cols = [
+                        np.concatenate((o, n[keep]))
+                        for o, n in zip(old[:3], new[:3])
+                    ]
+                    order = np.argsort(cols[0], kind="stable")
+                    new = _TermPostings(*(c[order] for c in cols), None)
+                if rs is None:
+                    cover = None
+                else:
+                    # + the requested ranges the metadata shows empty
+                    cover = (old.ranges if old is not None else frozenset()) | rs
+                    if t in metas:
+                        cover |= req_set or frozenset()
+                        if metas[t] <= cover:
+                            cover = None
+                entry = new._replace(ranges=cover)
+                _posting_cache_put(cd, t, entry)
+                runs[pos[t]] = entry.slice(req, bits)
+        # metadata rides along free on a whole-term fetch of bare
+        # terms; a range-restricted fetch sees only a slice of a term
+        if need_bare and req is None:
+            _cache_meta_groups(cd, fetched, list(need_bare))
+    return _Postings.of(runs)
 
 
 def invalidate_cache(index_dir: str) -> None:
     """Drop every query-node cache for an index (dictionary, stats,
     analyzed table frames, posting blocks, result urls). Called by all
     snapshot-mutating ops."""
-    global _block_bytes, _meta_rows
+    global _posting_bytes, _meta_rows
     cd = canon_dir(index_dir)
     with _cache_lock:
         _dict_cache.pop(cd, None)
@@ -420,8 +508,8 @@ def invalidate_cache(index_dir: str) -> None:
             _scope_ids_cache.pop(k, None)
         for k in [k for k in _ts_range_cache if k[0] == cd]:
             _ts_range_cache.pop(k, None)
-        for k in [k for k in _block_cache if k[0] == cd]:
-            _block_bytes -= _block_cache.pop(k)[1]
+        for k in [k for k in _posting_cache if k[0] == cd]:
+            _posting_bytes -= _posting_cache.pop(k).nbytes
         for k in [k for k in _meta_cache if k[0] == cd]:
             _meta_rows -= len(_meta_cache.pop(k).range_id)
         for k in [k for k in _url_cache if k[0] == cd]:
@@ -1424,7 +1512,7 @@ def _ranked(
     Results are rank-identical either way.
 
     Expansion, planning and resident scoring run on numpy arrays
-    (`_Expansion`, `_TermInfo`, `_Meta`, `_Blocks`); each shard's
+    (`_Expansion`, `_TermInfo`, `_Meta`, `_Postings`); each shard's
     `canon_dir` is resolved once and handed to the cache helpers."""
     if scope:
         parse_scope(scope)  # validate before any work
@@ -1496,19 +1584,20 @@ def _score_resident(
     spark: SparkSession, shards: list[_Shard], tree: tuple, k: int
 ) -> list[tuple[int, float, int]]:
     """Query-node scoring → the top-k (doc_id, score, shard) rows: per
-    shard one block fetch through the block cache, numpy decode +
-    BM25 (`_score_blocks_np`), the tree over the leaf masks and the
-    resident dead set; the shards' top-k merge driver-side. Same
-    formula and tie-break as `_score_distributed`; zero Spark jobs
-    warm."""
+    shard one fetch of its decoded postings through the posting cache
+    (`_fetch_blocks`: cached doc_id/tf/dl columns, sliced to the
+    shard's ranges), numpy BM25 (`_score_blocks_np`), the tree over
+    the leaf masks and the resident dead set; the shards' top-k merge
+    driver-side. Same formula and tie-break as `_score_distributed`;
+    zero Spark jobs and no varint decode warm."""
     rows: list[tuple[int, float, int]] = []
     for s in shards:
         if s.ranges == []:
             continue
-        blocks = _fetch_blocks(
+        post = _fetch_blocks(
             spark, s.dir, s.terms.term.tolist(), s.stats, ranges=s.ranges, cd=s.cd
         )
-        uniq, score, mask_acc = _score_blocks_np(blocks, s.stats, s.terms)
+        uniq, score, mask_acc = _score_blocks_np(post, s.stats, s.terms)
         keep = _eval_np(tree, mask_acc) & ~np.isin(uniq, s.dead.resident)
         uniq, score = uniq[keep], score[keep]
         order = np.lexsort((uniq, -score))[:k]
@@ -1943,9 +2032,7 @@ def _exclusion_ids(
     terms, dfs = expanded.distinct()
     if dfs.sum() > LOCAL_SCORE_MAX_POSTINGS:
         return None
-    blocks = _fetch_blocks(spark, index_dir, terms.tolist(), stats, cd=cd)
-    docs, _, _ = decode_flat(blocks.doc_gaps, blocks.range_id << stats["range_bits"])
-    return np.unique(docs)
+    return np.unique(_fetch_blocks(spark, index_dir, terms.tolist(), stats, cd=cd).doc_id)
 
 
 def _exclusion_docs_df(
@@ -2092,9 +2179,10 @@ def _prune_plan(
        range). Range upper bounds Σ_term idf·ub and coverage masks
        are numpy per-range aggregates on the driver; a range whose
        mask cannot satisfy the tree (AND: a pattern absent) drops.
-    2. θ probe — the binary blocks of the single best range
-       (``_fetch_blocks``: block cache, or one pushdown scan on
-       term AND range_id), scored in numpy on the driver; θ = the k-th
+    2. θ probe — the postings of the single best range
+       (``_fetch_blocks``: sliced from the posting cache, or one
+       pushdown scan on term AND that range_id that fills only it),
+       scored in numpy on the driver; θ = the k-th
        LIVE score (``dead`` — the resident DeadSet — excluded: a range
        full of deleted docs must not inflate θ and prune the true
        top-k away; ADVICE r1).
@@ -2138,27 +2226,28 @@ def _prune_plan(
 
 
 def _score_blocks_np(
-    blocks: _Blocks, stats: dict, info: _TermInfo
+    post: _Postings, stats: dict, info: _TermInfo
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode posting blocks in one flat pass per column and
-    BM25-score them in numpy → (doc_ids, scores, coverage masks).
-    ``blocks.term_idx`` indexes ``info``. Shared by the query-node
-    serving path and the pruner's θ probe."""
-    docs, (tfs, dls), counts = decode_flat(
-        blocks.doc_gaps, blocks.range_id << stats["range_bits"],
-        [blocks.tf_bytes, blocks.dl_bytes],
-    )
-    tfs = tfs.astype(np.float64)
-    dls = dls.astype(np.float64)
+    """BM25-score decoded postings in numpy → (doc_ids, scores,
+    coverage masks). ``post`` holds one run per row of ``info``, in
+    its order; the weight is computed per query from tf, dl and the
+    query's avgdl (global over the shards of a federated query), and
+    a doc's score sums its terms' weights in term order. Shared by the
+    query-node serving path and the pruner's θ probe."""
+    tfs = post.tf.astype(np.float64)
+    dls = post.dl.astype(np.float64)
     avgdl = float(stats["avgdl"]) or 1.0
-    idfs = np.repeat(info.idf[blocks.term_idx], counts)
-    masks = np.repeat(info.mask[blocks.term_idx], counts)
+    idfs = np.repeat(info.idf, post.counts)
     w = idfs * tfs * (K1 + 1.0) / (tfs + K1 * (1.0 - B + B * dls / avgdl))
-    uniq, inv = np.unique(docs, return_inverse=True)
-    score = np.zeros(len(uniq))
-    np.add.at(score, inv, w)
+    uniq, inv = np.unique(post.doc_id, return_inverse=True)
+    # bincount adds the weights one posting at a time in input order,
+    # so each doc's float sum runs over its terms in term order (an
+    # empty input comes back int64)
+    score = np.bincount(inv, weights=w, minlength=len(uniq)).astype(np.float64, copy=False)
     mask_acc = np.zeros(len(uniq), dtype=np.int64)
-    np.bitwise_or.at(mask_acc, inv, masks)
+    ends = np.cumsum(post.counts).tolist()
+    for m, a, b in zip(info.mask.tolist(), [0] + ends[:-1], ends):
+        mask_acc[inv[a:b]] |= m
     return uniq, score, mask_acc
 
 

@@ -23,9 +23,13 @@ from pyspark.sql.types import NumericType, StringType, StructType
 # Readers need no setting: Parquet records the codec per column chunk.
 PARQUET_CODEC = "zstd"
 
-# This sandbox VM uses hypervisor-lazy memory: the FIRST write to any
-# new page costs ~0.1ms (uffd-style fetch, ~17 MB/s serial), and pages
-# freed back to the OS are reclaimed by the balloon and re-fault later.
+# The development VMs use hypervisor-lazy memory: the FIRST write to
+# any new page is a fault the hypervisor serves, and pages freed back
+# to the OS are reclaimed by the balloon and re-fault later. Earlier
+# rounds recorded ~17 MB/s serial first-touch service; on 2026-10-20
+# a 192 MB first touch of an anonymous mapping (one write per 4 KiB
+# page, 4-vCPU VM) took 0.15-0.20 s, about 1.0-1.3 GB/s, so the cost
+# varies with the host.
 # Mitigation: keep allocations resident in the long-lived processes —
 # glibc must never trim/munmap (Python driver + reused workers), and
 # the JVM GC must never uncommit heap (ParallelGC instead of G1).
@@ -117,11 +121,11 @@ def get_spark(
     )
     # Shuffle files: profiling at local[32] showed cumulative
     # shuffleWriteTime inflating ~200× vs local[8] for the same bytes
-    # — small buffered writes hitting this VM's ~17 MB/s first-touch
-    # page service. tmpfs spill dirs + 1 MB write buffers take the
-    # write path off that cliff. On a real cluster the cluster manager
-    # overrides spark.local.dir (SPARK_LOCAL_DIRS), so this is purely
-    # a local-mode mitigation.
+    # — small buffered writes hitting the VM's first-touch page
+    # service (see the note at the top). tmpfs spill dirs + 1 MB
+    # write buffers take the write path off that cliff. On a real
+    # cluster the cluster manager overrides spark.local.dir
+    # (SPARK_LOCAL_DIRS), so this is purely a local-mode mitigation.
     if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
         shm = "/dev/shm/spark-local"
         os.makedirs(shm, exist_ok=True)
@@ -129,7 +133,7 @@ def get_spark(
     # Sort-based shuffle writer always: the bypass-merge writer opens
     # one buffered stream PER REDUCER per map task (64 reducers × the
     # write buffer each = tens of MB of first-touch pages per task on
-    # this VM's ~17 MB/s lazy page service — measured 13.6 s cumulative
+    # the VM's lazy page service — measured 13.6 s cumulative
     # shuffleWriteTime for 137 MB at local[32]). The sort writer keeps
     # one spill buffer + one output file per task; with 128k buffers
     # the same build drops ~10% wall.
