@@ -880,3 +880,58 @@ def test_posting_cache_cap_under_threads(spark, index_dir, monkeypatch):
             "bytes": held,
         }
     invalidate_cache(index_dir)
+
+
+def test_fifo_caches_survive_concurrent_invalidation(tmp_path, monkeypatch):
+    """The scope-complement, ts-range and prefix-shard caches evict and
+    insert under the cache lock: writers evicting the same FIFO entries
+    while `invalidate_cache` scans the same dicts, switched every
+    10 µs, raise nothing (no KeyError from a double eviction, no
+    "dictionary changed size during iteration") and keep every cap."""
+    import sys
+    import threading
+
+    import numpy as np
+
+    monkeypatch.setattr(query, "SCOPE_CACHE_MAX", 4)
+    monkeypatch.setattr(query, "SHARD_CACHE_ROWS", 12)
+    dirs = [str(tmp_path / f"idx{i}") for i in range(2)]
+    cds = [query.canon_dir(d) for d in dirs]
+    shard = query._Dictionary.of(["a", "b", "c"], [1, 1, 1], [1.0, 1.0, 1.0])
+    ids = np.arange(3, dtype=np.int64)
+    errors: list[BaseException] = []
+
+    def run(fn) -> None:
+        try:
+            for i in range(3000):
+                fn(i)
+        except BaseException as e:  # surfaced by the assert below
+            errors.append(e)
+
+    jobs = [
+        lambda i: query._fifo_put(query._scope_ids_cache, (cds[i % 2], f"s{i % 7}"), ids),
+        lambda i: query._fifo_put(query._scope_ids_cache, (cds[i % 2], f"s{i % 5}"), None),
+        lambda i: query._fifo_put(query._ts_range_cache, (cds[i % 2], f"t{i % 7}"), ids),
+        lambda i: query._cache_shard(dirs[i % 2], f"p{i % 9}", shard),
+        lambda i: query.invalidate_cache(dirs[i % 2]),
+    ]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=run, args=(fn,)) for fn in jobs]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=300)
+        sizes = (
+            len(query._scope_ids_cache),
+            len(query._ts_range_cache),
+            sum(len(v.terms) for v in query._shard_cache.values()),
+        )
+    finally:
+        sys.setswitchinterval(old)
+        for d in dirs:
+            invalidate_cache(d)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, repr(errors[0])
+    assert sizes[0] <= 4 and sizes[1] <= 4 and sizes[2] <= 12, sizes

@@ -1744,18 +1744,89 @@ def test_phrase_pos_fetch_prunes_ranges(spark, index_dir, oracle):
     in-list AND the surviving range_id in-list down to the parquet
     scan — pos_bytes (the largest column) is only deserialized for
     ranges where every slot co-occurs (VERDICT r2 #4)."""
-    from textindex_spark.query import _decoded_pos, cached_stats
+    from textindex_spark.query import _positional_blocks, cached_stats
 
     phrases = [p for p in _corpus_phrases(oracle, n=4) if len(p) >= 2]
     words = phrases[0][:2]
     stats = cached_stats(spark, index_dir)
-    decoded = _decoded_pos(spark, index_dir, [[w] for w in words], stats)
+    decoded = _positional_blocks(spark, index_dir, [[w] for w in words], stats)
     plan = decoded._jdf.queryExecution().executedPlan().toString()
     scan = next(
         l for l in plan.splitlines() if "FileScan" in l and "postings" in l
     )
     assert "In(term, " in scan or "EqualTo(term" in scan, scan
     assert "In(range_id, " in scan or "EqualTo(range_id" in scan, scan
+
+
+def test_positional_edges_match_oracle(spark, tmp_path):
+    """Phrase, NEAR and ordered NEAR at the edges of the range-local
+    positional kernel, against the oracle: adjacent doc_ids whose
+    phrase or window would cross the doc boundary, anchors at
+    position 0 with a window reaching below it, docs on both sides of
+    a range boundary (range_bits=2: four doc_ids per range), and
+    explicit doc_ids at 2^40 and past 2^53. The plan is one
+    FlatMapGroupsInPandas over the block fetch: no MapInPandas decode
+    and no join when the dead set is empty."""
+    import random
+
+    from textindex_spark.query import (
+        DeadSet, _positional, near_docs, phrase_docs, search_phrase,
+    )
+
+    words = ["quill", "ember", "frost", "glade"]
+    texts = {
+        0: "quill ember frost",
+        1: "glade quill",
+        2: "ember",
+        3: "frost quill ember",
+        4: "ember glade",
+        2**40 - 1: "glade frost quill",
+        2**40: "quill glade ember frost",
+        2**40 + 1: "frost ember",
+        2**53 + 3: "ember quill glade",
+        2**53 + 4: "glade ember quill quill",
+    }
+    rng = random.Random(11)
+    for d in range(8, 20):
+        texts[d] = " ".join(rng.choice(words) for _ in range(rng.randint(1, 6)))
+    rows = [
+        {"doc_id": d, "url": f"http://s{d % 3}.example/p{d}.html",
+         "warc_ts": None, "html": None, "text": t, "lang": "en"}
+        for d, t in sorted(texts.items())
+    ]
+    out = str(tmp_path / "edges")
+    build_index(spark, corpus_df(spark, rows), out, range_bits=2)
+    oracle = OracleIndex.build(rows)
+
+    queries = [[a, b] for a in words for b in words]
+    queries += [rng.sample(words, 3) for _ in range(4)]
+    for q in queries:
+        got = {r["doc_id"]: r["n_occ"] for r in phrase_docs(spark, out, q).collect()}
+        assert got == oracle.phrase_occurrences(q), q
+        for w in (1, 3):
+            for ordered in (False, True):
+                got = {
+                    r["doc_id"]: r["n_near"]
+                    for r in near_docs(
+                        spark, out, q, window=w, ordered=ordered
+                    ).collect()
+                }
+                assert got == oracle.near_occurrences(q, window=w, ordered=ordered), (
+                    q, w, ordered,
+                )
+    for q in (["quill", "ember"], ["ember", "quill"], ["glade", "ember"]):
+        got = [
+            (r["doc_id"], round(r["score"], 9))
+            for r in search_phrase(spark, out, q, k=20, with_urls=False).collect()
+        ]
+        assert got == [(d, round(s, 9)) for d, s in oracle.search_phrase(q, 20)], q
+
+    plan = (
+        _positional(spark, out, ["quill", "ember"], DeadSet(spark, out), "near", 3)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert plan.count("FlatMapGroupsInPandas") == 1, plan
+    assert "MapInPandas" not in plan and "Join" not in plan, plan
 
 
 def test_search_near_ranked_matches_oracle(spark, index_dir, oracle):

@@ -58,7 +58,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from textindex_spark import manifest
-from textindex_spark.codec import encode_batch, encode_positions_batch
+from textindex_spark.codec import (
+    decode_flat,
+    decode_positions_flat,
+    encode_batch,
+    encode_positions_batch,
+)
 from textindex_spark.functions.kernels import SEGMENT_SCHEMA, extract_tokenize_batches
 from textindex_spark.refimpl.filters import EXT_IGNORE, NAME_IGNORE
 from textindex_spark.session import PARQUET_CODEC, local_df
@@ -404,8 +409,8 @@ def _encode_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 def build_postings(
     segments: DataFrame, avgdl: float, range_bits: int = RANGE_BITS_DEFAULT
 ) -> DataFrame:
-    """segments → encoded posting blocks. One shuffle, keyed
-    (term, range_id)."""
+    """segments → encoded posting blocks: one row per posting, then
+    `_encode_postings`."""
     pairs = (
         segments.select(
             "doc_id",
@@ -421,6 +426,13 @@ def build_postings(
         )
         .withColumn("range_id", F.shiftright("doc_id", range_bits))
     )
+    return _encode_postings(pairs, avgdl, range_bits)
+
+
+def _encode_postings(pairs: DataFrame, avgdl: float, range_bits: int) -> DataFrame:
+    """Posting rows (term, range_id, doc_id, tf, doc_len, pos) →
+    encoded posting blocks with their block-max metadata under
+    ``avgdl``. One shuffle, keyed (term, range_id)."""
     avgdl = float(avgdl) or 1.0
     tfnorm = (
         F.col("tf")
@@ -460,15 +472,47 @@ def build_postings(
     return grouped.mapInPandas(_encode_kernel, POSTING_SCHEMA)
 
 
-def terms_from_postings(postings: DataFrame) -> DataFrame:
-    """Dictionary stats from block rows (cheap agg over blocks, never
-    over raw postings)."""
-    return postings.groupBy("term").agg(
-        F.sum("n_docs").alias("df"),
-        F.sum("sum_tf").alias("cf"),
-        F.max("max_tfnorm").alias("max_tfnorm"),
-        F.count("*").alias("n_ranges"),
+def write_terms(postings: DataFrame, path: str, nparts: int) -> int:
+    """Write the terms table — dictionary stats aggregated over
+    ``postings``' block rows, never over raw postings — range-
+    partitioned and sorted by term, and return its row count
+    (vocab_size). The count rides on the write as an observed metric,
+    with no re-read + count() job (VERDICT r3 task 6); it sits ABOVE
+    the range exchange, because below it repartitionByRange's sampling
+    pass would execute the metrics node twice and double the count."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    (
+        postings.groupBy("term")
+        .agg(
+            F.sum("n_docs").alias("df"),
+            F.sum("sum_tf").alias("cf"),
+            F.max("max_tfnorm").alias("max_tfnorm"),
+            F.count("*").alias("n_ranges"),
+        )
+        .repartitionByRange(max(1, nparts), "term")
+        .sortWithinPartitions("term")
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .write.mode("overwrite")
+        .parquet(path)
     )
+    return int(obs.get["n"] or 0)
+
+
+def corpus_stats(docs: DataFrame) -> dict:
+    """n_docs, avgdl and total_tokens over ``docs``' doc_len column
+    (one row per live doc), in one agg job."""
+    row = docs.agg(
+        F.count("*").alias("n_docs"),
+        F.avg("doc_len").alias("avgdl"),
+        F.sum("doc_len").alias("total_tokens"),
+    ).collect()[0]
+    return {
+        "n_docs": int(row["n_docs"] or 0),
+        "avgdl": float(row["avgdl"] or 0.0),
+        "total_tokens": int(row["total_tokens"] or 0),
+    }
 
 
 def build_index(
@@ -558,17 +602,10 @@ def finalize_index(
     docs_job.start()
 
     with job_phase(spark, "stats"):
-        stats_row = seg.agg(
-            F.count("*").alias("n_docs"),
-            F.avg("doc_len").alias("avgdl"),
-            F.sum("doc_len").alias("total_tokens"),
-        ).collect()[0]
-    n_docs = stats_row["n_docs"] or 0
-    avgdl = float(stats_row["avgdl"] or 0.0)
-    total_tokens = int(stats_row["total_tokens"] or 0)
-    n_buckets = n_term_buckets_for(total_tokens)
+        corpus = corpus_stats(seg)
+    n_buckets = n_term_buckets_for(corpus["total_tokens"])
 
-    postings = build_postings(seg, avgdl, range_bits)
+    postings = build_postings(seg, corpus["avgdl"], range_bits)
     nparts = write_partitions or max(1, postings.sparkSession.sparkContext.defaultParallelism)
     # Small/medium corpora: persist the encoded blocks and let the
     # bucketed write run on a driver thread while the terms agg below
@@ -576,7 +613,7 @@ def finalize_index(
     # materialization and the finalize tail loses its last serial
     # stage. Large corpora keep write-once + column-pruned re-read
     # (see POSTINGS_OVERLAP_MAX_DOCS).
-    overlap = 0 < n_docs <= POSTINGS_OVERLAP_MAX_DOCS
+    overlap = 0 < corpus["n_docs"] <= POSTINGS_OVERLAP_MAX_DOCS
     postings_err: list[BaseException] = []
     postings_job: InheritableThread | None = None
     if overlap:
@@ -604,25 +641,9 @@ def finalize_index(
         postings_df = spark.read.schema(manifest.TABLE_SCHEMAS["postings"]).parquet(
             f"{out_dir}/postings"
         )
-    # vocab_size rides on the terms WRITE as an observed metric — no
-    # separate re-read + count() job (VERDICT r3 task 6). The observe
-    # sits ABOVE the range exchange: below it, repartitionByRange's
-    # sampling pass would execute the metrics node twice and double
-    # the count.
-    from pyspark.sql import Observation
-
-    obs = Observation("vocab")
-    terms = terms_from_postings(postings_df)
     try:
         with job_phase(spark, "terms"):
-            (
-                terms.repartitionByRange(max(1, nparts // 4), "term")
-                .sortWithinPartitions("term")
-                .observe(obs, F.count(F.lit(1)).alias("n"))
-                .write.mode("overwrite")
-                .parquet(f"{out_dir}/terms")
-            )
-        vocab_size = int(obs.get["n"] or 0)
+            vocab_size = write_terms(postings_df, f"{out_dir}/terms", nparts // 4)
         # the docs write ran concurrently with everything above (stats
         # agg, postings shuffle+write, terms write); it only has to be
         # durable before the manifest commit below
@@ -642,10 +663,8 @@ def finalize_index(
     if postings_err:
         raise postings_err[0]
     stats = {
-        "n_docs": int(n_docs),
-        "avgdl": avgdl,
-        "total_tokens": total_tokens,
-        "vocab_size": int(vocab_size),
+        **corpus,
+        "vocab_size": vocab_size,
         "range_bits": range_bits,
         "k1": K1,
         "b": B,
@@ -1008,28 +1027,20 @@ def append_batch(
             victims = None
         else:
             live_old = live_old.join(victims, "doc_id", "left_anti")
-    srow = (
-        live_old.select("doc_len")
-        .unionByName(
+    corpus = corpus_stats(
+        live_old.select("doc_len").unionByName(
             spark.read.schema(manifest.TABLE_SCHEMAS["docs"])
             .parquet(docs_dir)
             .select("doc_len")
         )
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.avg("doc_len").alias("avgdl"),
-            F.sum("doc_len").alias("total_tokens"),
-        )
-        .collect()[0]
     )
-    new_avgdl = float(srow["avgdl"] or 0.0)
 
     # postings: encode ONLY the new segment rows into a staged part
     # (same bucketed layout as the base table so multi-dir reads and
     # directory pruning see one homogeneous partition scheme)
     n_buckets = int(stats.get("n_term_buckets") or N_TERM_BUCKETS_DEFAULT)
     write_postings_bucketed(
-        build_postings(new_seg, new_avgdl, range_bits),
+        build_postings(new_seg, corpus["avgdl"], range_bits),
         postings_dir,
         max(1, spark.sparkContext.defaultParallelism // 2),
         n_buckets,
@@ -1039,28 +1050,10 @@ def append_batch(
     postings_df = manifest.read_table(spark, out_dir, "postings").unionByName(
         spark.read.schema(manifest.TABLE_SCHEMAS["postings"]).parquet(postings_dir)
     )
-    # observe above the range exchange (see finalize_index: the
-    # sampling pass would double a below-exchange count)
-    from pyspark.sql import Observation
-
-    obs = Observation("vocab_append")
-    terms = terms_from_postings(postings_df)
-    nparts = max(1, spark.sparkContext.defaultParallelism // 4)
-    (
-        terms.repartitionByRange(nparts, "term")
-        .sortWithinPartitions("term")
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .write.mode("overwrite")
-        .parquet(terms_dir)
+    vocab_size = write_terms(
+        postings_df, terms_dir, spark.sparkContext.defaultParallelism // 4
     )
-
-    new_stats = dict(stats)
-    new_stats.update(
-        n_docs=int(srow["n_docs"]),
-        avgdl=new_avgdl,
-        total_tokens=int(srow["total_tokens"] or 0),
-        vocab_size=int(obs.get["n"] or 0),
-    )
+    new_stats = {**stats, **corpus, "vocab_size": vocab_size}
     write_stats_row(spark, stats_dir, new_stats)
 
     # the ONE atomic step: everything above becomes visible together
@@ -1324,7 +1317,6 @@ def compact_postings(spark: SparkSession, out_dir: str) -> int:
         return 0
     stats = read_stats(spark, out_dir)
     range_bits = int(stats["range_bits"])
-    avgdl = float(stats["avgdl"]) or 1.0
     split = postings.join(
         F.broadcast(dup_keys.select("term", "range_id")), ["term", "range_id"]
     )
@@ -1334,65 +1326,31 @@ def compact_postings(spark: SparkSession, out_dir: str) -> int:
         "left_anti",
     )
 
-    from textindex_spark.codec import decode_batch, decode_positions_batch
-
-    def merge_kernel(batches):
-        import pandas as pd
-
+    def posting_rows(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            bases = pdf["range_id"].values.astype("int64") << range_bits
-            docs, tfs, dls = decode_batch(
-                list(pdf["doc_gaps"]), bases,
+            rids = pdf["range_id"].values.astype(np.int64)
+            docs, (tfs, dls), counts = decode_flat(
+                list(pdf["doc_gaps"]), rids << range_bits,
                 [list(pdf["tf_bytes"]), list(pdf["dl_bytes"])],
             )
-            poss = decode_positions_batch(list(pdf["pos_bytes"]), tfs)
-            rows = []
-            for i in range(len(pdf)):
-                for j, (d, t, l) in enumerate(zip(docs[i], tfs[i], dls[i])):
-                    rows.append(
-                        (pdf["term"].iat[i], int(pdf["range_id"].iat[i]),
-                         int(d), int(t), int(l),
-                         poss[i][j].astype("int32"))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["term", "range_id", "doc_id", "tf", "doc_len", "pos"],
-            )
+            pos = decode_positions_flat(list(pdf["pos_bytes"]), tfs)
+            yield pd.DataFrame({
+                "term": np.repeat(pdf["term"].values, counts),
+                "range_id": np.repeat(rids, counts),
+                "doc_id": docs,
+                "tf": tfs,
+                "doc_len": dls,
+                "pos": np.split(pos.astype(np.int32), np.cumsum(tfs)[:-1]),
+            })
 
     pairs = split.mapInPandas(
-        merge_kernel,
+        posting_rows,
         "term string, range_id long, doc_id long, tf long, doc_len long, "
         "pos array<int>",
     )
-    tfnorm = (
-        F.col("tf") * (K1 + 1.0)
-        / (F.col("tf") + K1 * (1.0 - B + B * F.col("doc_len") / F.lit(avgdl)))
-    )
-    regrouped = (
-        pairs.withColumn("tfnorm", tfnorm)
-        .groupBy("term", "range_id")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("doc_id", "tf", "doc_len", "pos"))
-            ).alias("pl"),
-            F.count("*").cast("int").alias("n_docs"),
-            F.sum("tf").alias("sum_tf"),
-            F.max("tf").cast("int").alias("max_tf"),
-            F.max("tfnorm").alias("max_tfnorm"),
-        )
-        .select(
-            "term", "range_id", "n_docs", "sum_tf", "max_tf", "max_tfnorm",
-            F.col("pl.doc_id").alias("doc_ids"),
-            F.col("pl.tf").alias("tfs"),
-            F.col("pl.doc_len").alias("dls"),
-            F.col("pl.pos").alias("poss"),
-            F.lit(range_bits).alias("range_bits"),
-            F.lit(avgdl).alias("enc_avgdl"),
-        )
-    )
-    merged = regrouped.mapInPandas(_encode_kernel, POSTING_SCHEMA)
+    merged = _encode_postings(pairs, stats["avgdl"], range_bits)
     combined = intact.select(*merged.columns).unionByName(merged)
     gen = (int(man["version"]) + 1) if man else 1
     new_dir = f"{out_dir}/postings_compact_{gen}"

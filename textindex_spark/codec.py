@@ -10,9 +10,10 @@ All functions operate on whole Arrow batches: ``encode_batch`` /
 ``decode_batch`` take *lists of arrays* (one entry per posting block)
 and vectorize the varint transform across the concatenation, so the
 per-row Python overhead is O(rows), not O(postings). ``decode_flat``
-is the decoder itself: it returns the flat columns plus per-block
-counts, for callers that would concatenate the per-block arrays
-straight back.
+and ``decode_positions_flat`` are the decoders themselves: they return
+flat columns (plus per-block counts), for callers that would
+concatenate the per-block arrays straight back; the ``*_batch`` forms
+split them.
 """
 from __future__ import annotations
 
@@ -240,35 +241,33 @@ def encode_positions_batch(pos_lists: list[list[np.ndarray]]) -> list[bytes]:
     return [full[offs[i] : offs[i + 1]] for i in range(n)]
 
 
+def decode_positions_flat(pos_bufs: list[bytes], tfs: np.ndarray) -> np.ndarray:
+    """Inverse of ``encode_positions_batch`` as one flat column: the
+    absolute positions of every posting back to back, in block and
+    doc order. ``tfs`` is the flat tf column of the same blocks
+    (`decode_flat`), one position count per posting."""
+    flat = varint_decode(b"".join(pos_bufs))
+    doc_lens = np.asarray(tfs, dtype=np.int64)
+    if doc_lens.sum() != len(flat):
+        raise ValueError("decode_positions_flat: tf/positions mismatch")
+    if not len(flat):
+        return flat
+    # per-doc cumsum reset: subtract the running offset at doc start
+    csum = np.cumsum(flat)
+    ends = np.cumsum(doc_lens)
+    base = np.zeros(len(doc_lens), dtype=np.int64)  # int64: see decode_flat
+    base[1:] = csum[ends[:-1] - 1]
+    return csum - np.repeat(base, doc_lens)
+
+
 def decode_positions_batch(
     pos_bufs: list[bytes], tf_lists: list[np.ndarray]
 ) -> list[list[np.ndarray]]:
-    """Inverse of ``encode_positions_batch``: ``tf_lists[b]`` gives the
-    per-doc position counts of block *b* (the decoded tf column).
-    Returns per-block lists of per-doc absolute position arrays."""
-    n = len(pos_bufs)
-    if n == 0:
-        return []
-    flat = varint_decode(b"".join(pos_bufs))
-    doc_lens = np.concatenate(
-        [np.asarray(t, dtype=np.int64) for t in tf_lists]
-    ) if n else np.empty(0, dtype=np.int64)
-    if doc_lens.sum() != len(flat):
-        raise ValueError("decode_positions_batch: tf/positions mismatch")
-    doc_starts = np.concatenate(([0], np.cumsum(doc_lens)[:-1]))
-    csum = np.cumsum(flat)
-    base = (
-        np.concatenate(([0], csum[doc_starts[1:] - 1]))
-        if len(doc_lens) > 1
-        else np.zeros(1, dtype=np.int64)  # int64: see decode_batch
-    )
-    absolute = csum - np.repeat(base, doc_lens)
-    out: list[list[np.ndarray]] = []
-    i = 0
-    for b in range(n):
-        docs: list[np.ndarray] = []
-        for _ in range(len(tf_lists[b])):
-            docs.append(absolute[doc_starts[i] : doc_starts[i] + doc_lens[i]])
-            i += 1
-        out.append(docs)
-    return out
+    """`decode_positions_flat` split back per block and doc:
+    ``tf_lists[b]`` gives the per-doc position counts of block *b*
+    (the decoded tf column)."""
+    tfs = [np.asarray(t, dtype=np.int64) for t in tf_lists]
+    flat_tfs = np.concatenate(tfs) if tfs else np.empty(0, dtype=np.int64)
+    per_doc = _split_concat(decode_positions_flat(pos_bufs, flat_tfs), flat_tfs)
+    bounds = np.cumsum([0] + [len(t) for t in tfs])
+    return [per_doc[bounds[b] : bounds[b + 1]] for b in range(len(tfs))]

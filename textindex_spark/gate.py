@@ -2229,7 +2229,7 @@ def _phrase_sql(phrase: list[str], ranked: bool) -> str:
     The ranked variant sums BM25 over DISTINCT slot patterns: a
     literal pattern contributes its term's partial, a wildcard
     pattern the MAX partial over expansion terms present in the doc
-    (engine semantics, query._phrase_frame)."""
+    (engine semantics, query._positional_kernel)."""
     joins = "\n".join(
         f"    JOIN p{i} USING (doc_id, pos)" for i in range(1, len(phrase))
     )

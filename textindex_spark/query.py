@@ -1,26 +1,37 @@
-"""Query engine: wildcard expansion, BM25 top-k, matched lines.
+"""Query engine: wildcard expansion, BM25 top-k, phrase and NEAR,
+matched lines.
 
 Spark re-expression of ``Words::find`` (``/root/reference/src/
 index2.rs:550-582``) plus the BM25 block-max ranking the north_star
-adds on top:
+adds on top. One ranked core (`_ranked`) runs every flat and boolean
+query over a shard list (one index is the one-shard case):
 
-* wildcard term → vocabulary probe (J1): Catalyst filter on the terms
-  table (``rlike`` for globs, equality for exact terms) — pushed down
-  to the term-sorted parquet/Iceberg scan.
-* posting fetch (J2): broadcast semi-join of the (small) expanded
-  query-term set against the postings table; term-range row-group
-  skipping applies.
-* AND intersection (J3): per-doc pattern bitmask aggregation
-  (``bit_or``) — one shuffle keyed doc_id, no chained joins.
-* ranking (T5): exact BM25 from the self-contained posting blocks
-  (tf + doc_len both stored), ``orderBy desc limit k`` →
-  TakeOrderedAndProject (per-partition heaps + driver merge).
-* block-max pruning (``prune=True``): ranges are scored by their
-  summed per-term upper bounds first; a cheap exact pass over the
-  best range sets the threshold θ and only ranges with ub ≥ θ are
-  decoded — the distributed, Catalyst-expressible form of block-max
-  WAND (upper bounds and candidate filtering are plain columnar ops;
-  only surviving blocks reach the Python decode kernel).
+* expansion: patterns (exact, glob, regex, fuzzy) match the resident
+  term-sorted dictionary (`_Dictionary`, binary searches, zero jobs
+  warm); vocabularies past TERMS_CACHE_MAX probe the terms table
+  through the prefix-shard cache.
+* membership: a tree over the per-doc pattern bitmask (AND, OR,
+  min_match, boolean trees), with the certain-conjunct candidate
+  ranges pre-intersected (`_and_surviving_ranges`) and ts-scoped
+  ranges pruned before any posting is fetched.
+* serving path (`_score_resident`): postings come from the decoded
+  posting cache (`_fetch_blocks`; misses fill in one pushdown scan)
+  and are scored in numpy on the query node — a warm query launches
+  no Spark job. Candidate sets over LOCAL_SCORE_MAX_POSTINGS (or
+  ``local_score=False``) take the distributed plan (`_score_distributed`: decode kernel, one shuffle
+  keyed doc_id, ``orderBy desc limit k``).
+* block-max pruning (``prune=True``): per-range upper bounds from the
+  resident block metadata, a θ probe over the best range, and only
+  ranges with ub ≥ θ are fetched (`_prune_plan`; resident and
+  single-index only).
+* dead set (`DeadSet`): tombstones, scope complement, exclusions and
+  ts ranges, as one resident array or as distributed anti-joins.
+* positional queries (`_positional`): phrase, NEAR and ordered NEAR
+  share one range-pre-intersected block fetch and one numpy kernel
+  per range (``groupBy(range_id).applyInPandas``); BM25 never reads
+  ``pos_bytes``.
+* results: a bounded top-k resolves its urls from the resident url
+  cache (`finish_ranked`).
 """
 from __future__ import annotations
 
@@ -39,8 +50,16 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from textindex_spark import manifest
-from textindex_spark.build import B, K1, STATS_SCHEMA, read_stats, term_bucket_py
-from textindex_spark.codec import decode_flat, decode_positions_batch
+from textindex_spark.build import (
+    B,
+    K1,
+    STATS_SCHEMA,
+    corpus_stats,
+    read_stats,
+    term_bucket_py,
+    write_stats_row,
+)
+from textindex_spark.codec import decode_flat, decode_positions_flat
 from textindex_spark.refimpl.oracle import wildcard_to_regex
 from textindex_spark.session import ResidentFrame, local_df
 
@@ -50,11 +69,10 @@ DECODED_SCHEMA = "term string, doc_id long, tf int, doc_len long, tfnorm double"
 # (bit i = pattern i matched a term in the doc), so at most 63
 # patterns fit; expand_patterns rejects longer lists up front.
 MAX_QUERY_PATTERNS = 63
-# Exactly the columns each decode kernel consumes — selected explicitly
+# Exactly the columns the decode kernel consumes — selected explicitly
 # before mapInPandas so the parquet scan never reads pos_bytes (the
-# largest column) for BM25 work, and reads it ONLY for phrase/NEAR.
+# largest column) for BM25 work; only `_positional` reads it.
 _DECODE_COLS = ["term", "range_id", "doc_gaps", "tf_bytes", "dl_bytes"]
-_DECODE_POS_COLS = _DECODE_COLS + ["pos_bytes"]
 
 # Vocabularies up to this many terms are cached in query-node memory —
 # the Spark analog of the reference keeping its whole WordList BTreeMap
@@ -95,7 +113,8 @@ def _cached_table(spark: SparkSession, index_dir: str, name: str) -> DataFrame:
     if hit is not None and hit[0] is spark:
         return hit[1]
     df = manifest.read_table(spark, index_dir, name)
-    _frame_cache[key] = (spark, df)
+    with _cache_lock:  # invalidate_cache iterates this dict
+        _frame_cache[key] = (spark, df)
     return df
 
 
@@ -954,11 +973,13 @@ def _shard_key(p: str) -> str | None:
 def _cache_shard(index_dir: str, prefix: str, shard: _Dictionary) -> None:
     if len(shard.terms) > SHARD_ROWS_MAX:
         return
-    total = sum(len(v.terms) for v in _shard_cache.values()) + len(shard.terms)
-    while total > SHARD_CACHE_ROWS and _shard_cache:
-        oldest = next(iter(_shard_cache))  # FIFO eviction
-        total -= len(_shard_cache.pop(oldest).terms)
-    _shard_cache[(canon_dir(index_dir), prefix)] = shard
+    key = (canon_dir(index_dir), prefix)
+    with _cache_lock:
+        total = sum(len(v.terms) for v in _shard_cache.values()) + len(shard.terms)
+        while total > SHARD_CACHE_ROWS and _shard_cache:
+            oldest = next(iter(_shard_cache))  # FIFO eviction
+            total -= len(_shard_cache.pop(oldest).terms)
+        _shard_cache[key] = shard
 
 
 def _expand_sharded(
@@ -1023,12 +1044,9 @@ def _expand_sharded(
     return _Expansion.of(hits)
 
 
-def _decode_kernel(
-    batches: Iterator[pd.DataFrame], with_pos: bool = False
-) -> Iterator[pd.DataFrame]:
+def _decode_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Posting-block batches → one (term, doc_id, tf, doc_len, tfnorm)
-    row per posting, plus its position array (``pos``, from
-    pos_bytes) ``with_pos``."""
+    row per posting."""
     for pdf in batches:
         if len(pdf) == 0:
             continue
@@ -1038,19 +1056,13 @@ def _decode_kernel(
             list(pdf["doc_gaps"]), bases, [list(pdf["tf_bytes"]), list(pdf["dl_bytes"])]
         )
         avgdl = float(pdf["avgdl"].iat[0]) or 1.0
-        out = {
+        yield pd.DataFrame({
             "term": np.repeat(pdf["term"].values, counts),
             "doc_id": doc_ids,
             "tf": tfs.astype(np.int32),
             "doc_len": dls,
             "tfnorm": tfs * (K1 + 1.0) / (tfs + K1 * (1.0 - B + B * dls / avgdl)),
-        }
-        if with_pos:
-            # the batch's payloads back to back are one block whose
-            # docs are every posting, in order
-            (pos,) = decode_positions_batch([b"".join(pdf["pos_bytes"])], [tfs])
-            out["pos"] = [p.astype(np.int32) for p in pos]
-        yield pd.DataFrame(out)
+        })
 
 
 # Above this many expanded terms, the query-vocabulary probe switches
@@ -1796,6 +1808,17 @@ SCOPE_FIELDS = ("lang", "site", "ts")
 # TOMBSTONE_LOCAL_MAX int64 ids (~800 KB) — review r5
 SCOPE_CACHE_MAX = 64
 _scope_ids_cache: dict[tuple[str, str], np.ndarray | None] = {}
+_MISS = object()  # cache-miss sentinel: a cached value may be None
+
+
+def _fifo_put(cache: dict, key, value) -> None:
+    """Insert into a SCOPE_CACHE_MAX-entry FIFO cache under the cache
+    lock, so eviction never races `invalidate_cache`'s scan or
+    another thread's eviction of the same key."""
+    with _cache_lock:
+        while len(cache) >= SCOPE_CACHE_MAX:
+            cache.pop(next(iter(cache)), None)
+        cache[key] = value
 
 
 def parse_scope(scope: str) -> tuple[str, str]:
@@ -1909,8 +1932,8 @@ def _ts_allowed_ranges(
     if field != "ts":
         return None
     key = (cd or canon_dir(index_dir), scope)
-    if key in _ts_range_cache:
-        hit = _ts_range_cache[key]
+    hit = _ts_range_cache.get(key, _MISS)
+    if hit is not _MISS:
         return None if hit is None else [int(x) for x in hit]
     # table_exists, NOT table_paths: a manifest lacking the range_ts
     # key entirely (pre-upgrade index) falls back to the default dir,
@@ -1942,9 +1965,7 @@ def _ts_allowed_ranges(
             out = np.array(
                 sorted(int(r["range_id"]) for r in rows), dtype=np.int64
             )
-    while len(_ts_range_cache) >= SCOPE_CACHE_MAX:
-        _ts_range_cache.pop(next(iter(_ts_range_cache)))
-    _ts_range_cache[key] = out
+    _fifo_put(_ts_range_cache, key, out)
     return None if out is None else [int(x) for x in out]
 
 
@@ -1990,8 +2011,9 @@ def _scope_nonmatch_ids(
     snapshot mutation."""
     field, value = parse_scope(scope)
     key = (cd or canon_dir(index_dir), scope)
-    if key in _scope_ids_cache:
-        return _scope_ids_cache[key]
+    hit = _scope_ids_cache.get(key, _MISS)
+    if hit is not _MISS:
+        return hit
     docs = _cached_table(spark, index_dir, "docs")
     rows = (
         docs.filter(~_scope_match_pred(field, value))
@@ -2003,9 +2025,7 @@ def _scope_nonmatch_ids(
         out: np.ndarray | None = None
     else:
         out = np.array(sorted(r["doc_id"] for r in rows), dtype=np.int64)
-    while len(_scope_ids_cache) >= SCOPE_CACHE_MAX:
-        _scope_ids_cache.pop(next(iter(_scope_ids_cache)))
-    _scope_ids_cache[key] = out
+    _fifo_put(_scope_ids_cache, key, out)
     return out
 
 
@@ -2330,21 +2350,8 @@ def _delete_where(spark: SparkSession, index_dir: str, pred: Column) -> int:
         victims.write.mode("overwrite").parquet(dead_dir)
         all_dead = old_dead.unionByName(spark.read.parquet(dead_dir)).distinct()
         live = docs.join(all_dead, "doc_id", "left_anti")
-        srow = live.agg(
-            F.count("*").alias("n_docs"),
-            F.avg("doc_len").alias("avgdl"),
-            F.sum("doc_len").alias("total_tokens"),
-        ).collect()[0]
-        from textindex_spark.build import read_stats as _rs
-        from textindex_spark.build import write_stats_row as _wsr
-
-        stats = _rs(spark, index_dir)
-        stats.update(
-            n_docs=int(srow["n_docs"] or 0),
-            avgdl=float(srow["avgdl"] or 0.0),
-            total_tokens=int(srow["total_tokens"] or 0),
-        )
-        _wsr(spark, stats_dir, stats)
+        stats = {**read_stats(spark, index_dir), **corpus_stats(live)}
+        write_stats_row(spark, stats_dir, stats)
         manifest.commit(
             spark,
             index_dir,
@@ -2355,21 +2362,23 @@ def _delete_where(spark: SparkSession, index_dir: str, pred: Column) -> int:
     return int(n)
 
 
-POS_DECODED_SCHEMA = DECODED_SCHEMA + ", pos array<int>"
+def _slot_masks(slot_term_lists: list[list[str]]) -> dict[str, int]:
+    """term → bitmask of the slots (bit i = slot i) it matches."""
+    out: dict[str, int] = {}
+    for i, lst in enumerate(slot_term_lists):
+        for t in lst:
+            out[t] = out.get(t, 0) | (1 << i)
+    return out
 
 
-def _decode_pos_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    return _decode_kernel(batches, with_pos=True)
-
-
-def _decoded_pos(
+def _positional_blocks(
     spark: SparkSession,
     index_dir: str,
     slot_term_lists: list[list[str]],
     stats: dict,
     allowed_ranges: list[int] | None = None,
 ) -> DataFrame:
-    """Positional postings for a conjunctive (phrase/NEAR) query, with
+    """Posting block rows for a conjunctive (phrase/NEAR) query, with
     candidate-range pre-intersection (VERDICT r2: the positional path
     decoded every query term's FULL posting + position payload —
     pos_bytes is the largest column, so a phrase containing one hot
@@ -2389,26 +2398,17 @@ def _decoded_pos(
     pre-pass — positions are the index's heaviest payload, so
     skipping out-of-window ranges before the pos_bytes fetch is where
     range_ts pays most."""
-    n_buckets = stats.get("n_term_buckets")
     all_terms = sorted({t for lst in slot_term_lists for t in lst})
-    blocks = _query_blocks(spark, index_dir, None, all_terms, n_buckets)
-    ids = allowed_ranges
-    if len(slot_term_lists) > 1:
-        mask_by_term: dict[str, int] = {}
-        for i, lst in enumerate(slot_term_lists):
-            for t in lst:
-                mask_by_term[t] = mask_by_term.get(t, 0) | (1 << i)
-        full = (1 << len(slot_term_lists)) - 1
-        ids = _intersect_ranges(ids, _and_surviving_ranges(
-            spark, index_dir, mask_by_term, full, stats, blocks
-        ))
-        # AND ids None: unselective — only the time window (if any)
-        # restricts the scan
-    blocks = _restrict_ranges(spark, blocks, ids)
-    blocks = blocks.select(*_DECODE_POS_COLS).withColumn(
-        "range_bits", F.lit(stats["range_bits"])
-    ).withColumn("avgdl", F.lit(stats["avgdl"]))
-    return blocks.mapInPandas(_decode_pos_kernel, POS_DECODED_SCHEMA)
+    blocks = _query_blocks(
+        spark, index_dir, None, all_terms, stats.get("n_term_buckets")
+    )
+    # None from the pre-pass (one slot, or unselective): only the time
+    # window (if any) restricts the scan
+    surviving = _and_surviving_ranges(
+        spark, index_dir, _slot_masks(slot_term_lists),
+        (1 << len(slot_term_lists)) - 1, stats, blocks,
+    )
+    return _restrict_ranges(spark, blocks, _intersect_ranges(allowed_ranges, surviving))
 
 
 def phrase_terms(words: list[str]) -> list[str]:
@@ -2455,139 +2455,180 @@ def phrase_slots(words: list[str]) -> list[str]:
     return out
 
 
-def _slot_occurrences(
-    decoded: DataFrame,
-    terms: list[str],
-    shift: int,
-    name: str,
-    idf_df: DataFrame | None = None,
-    wname: str | None = None,
-):
-    """→ (doc_id, <name>: array<int>[, <wname>: double]) of slot
-    positions shifted by -shift. Single-term slots stay narrow (no
-    agg); multi-term (wildcard) slots union positions across the
-    expansion with one map-side-combining agg. When ``idf_df``
-    (term, _idf) is given the slot also yields its BM25 partial:
-    MAX over the expansion terms present in the doc of idf·tfnorm —
-    best-match scoring for wildcard slots (VERDICT r3 task 5)."""
-    shifted = F.transform("pos", lambda x: x - F.lit(shift))
-    if len(terms) == 1 and idf_df is None:
-        return decoded.filter(F.col("term") == terms[0]).select(
-            "doc_id", shifted.alias(name)
-        )
-    src = decoded.filter(F.col("term").isin(terms))
-    if idf_df is None:
-        return (
-            src.select("doc_id", shifted.alias("_s"))
-            .groupBy("doc_id")
-            .agg(F.array_distinct(F.flatten(F.collect_list("_s"))).alias(name))
-        )
-    return (
-        src.join(F.broadcast(idf_df), "term")
-        .select(
-            "doc_id",
-            shifted.alias("_s"),
-            (F.col("_idf") * F.col("tfnorm")).alias("_w"),
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.array_distinct(F.flatten(F.collect_list("_s"))).alias(name),
-            F.max("_w").alias(wname),
-        )
+POSITIONAL_SCHEMA = "doc_id long, n int, score double"
+# positions are int32, so a window wider than this matches anywhere in
+# the doc, and clamping to it keeps every key window inside its doc
+_POS_SPAN = (1 << 31) - 1
+
+
+class _PosQuery(NamedTuple):
+    """One positional query as the range kernel reads it. Patterns are
+    the distinct slot patterns in score-summation order."""
+
+    mode: str  # "phrase", "near" or "ordered"
+    window: int
+    slots: list[int]  # pattern index of each slot, in query order
+    term_row: dict[str, int]  # matched term -> row of masks / idfs
+    masks: np.ndarray  # int64 pattern bitmask per term
+    idfs: np.ndarray
+    range_bits: int
+    avgdl: float
+    with_score: bool
+
+
+def _positional_kernel(q: _PosQuery, pdf: pd.DataFrame) -> pd.DataFrame:
+    """One range's block rows → (doc_id, n, score) for each doc that
+    matches. A doc's postings all sit in its own range (range_id =
+    doc_id >> range_bits), so no match needs another group.
+
+    Each position is keyed ``(doc_id - range base) << 32 | pos``: keys
+    sort by doc then position, a doc offset stays small however large
+    the doc_ids are, and no window reaches into a neighbouring doc.
+    Each pattern's keys are the sorted union over its terms. Phrase
+    keeps the slot-0 keys ``a`` with ``a + i`` in slot i's keys; NEAR
+    keeps anchor keys with every other pattern inside ``±window``;
+    ordered NEAR propagates the keys that can finish the chain back
+    from the last slot. ``n`` counts the surviving keys per doc; the
+    score sums, per pattern, the max idf·tfnorm over its terms in the
+    doc."""
+    base = int(pdf["range_id"].iat[0]) << q.range_bits
+    extra = [list(pdf["tf_bytes"])]
+    if q.with_score:
+        extra.append(list(pdf["dl_bytes"]))
+    doc_ids, cols, counts = decode_flat(
+        list(pdf["doc_gaps"]), np.full(len(pdf), base, dtype=np.int64), extra
     )
+    tfs = cols[0]
+    rows = np.repeat(np.array([q.term_row[t] for t in pdf["term"]]), counts)
+    post_mask = q.masks[rows]
+    offs = doc_ids - base
+    keys = np.repeat(offs << 32, tfs) | decode_positions_flat(
+        list(pdf["pos_bytes"]), tfs
+    )
+    key_mask = np.repeat(post_mask, tfs)
+    n_patterns = max(q.slots) + 1
+    pk = [
+        np.unique(keys[((key_mask >> j) & 1).astype(bool)])
+        for j in range(n_patterns)
+    ]
+    w = max(-1, min(q.window, _POS_SPAN))
+    if q.mode == "phrase":
+        hit = pk[q.slots[0]]
+        for i, j in enumerate(q.slots[1:], 1):
+            hit = hit[np.isin(hit + i, pk[j], assume_unique=True)]
+    elif q.mode == "near":
+        hit = pk[0]
+        for other in pk[1:]:
+            lo = np.searchsorted(other, hit - w)
+            hit = hit[lo < np.searchsorted(other, hit + w, "right")]
+    else:
+        hit = pk[q.slots[-1]]
+        for j in reversed(q.slots[:-1]):
+            prev = pk[j]
+            lo = np.searchsorted(hit, prev + 1)
+            hit = prev[lo < np.searchsorted(hit, prev + w, "right")]
+    docs, n = np.unique(hit >> 32, return_counts=True)
+    score = np.zeros(len(docs))
+    if q.with_score and len(docs):
+        weight = q.idfs[rows] * (
+            tfs * (K1 + 1.0) / (tfs + K1 * (1.0 - B + B * cols[1] / q.avgdl))
+        )
+        in_docs = np.isin(offs, docs)
+        for j in range(n_patterns):
+            sel = in_docs & ((post_mask >> j) & 1).astype(bool)
+            best = np.full(len(docs), -np.inf)
+            np.maximum.at(best, np.searchsorted(docs, offs[sel]), weight[sel])
+            score = best if j == 0 else score + best
+    return pd.DataFrame({"doc_id": docs + base, "n": n.astype(np.int32), "score": score})
 
 
-def _phrase_frame(
+def _positional(
     spark: SparkSession,
     index_dir: str,
     words: list[str],
     dead: DeadSet,
+    mode: str,
+    window: int = 0,
     with_score: bool = True,
 ) -> DataFrame | None:
-    """→ (doc_id, n_occ[, score]) for every doc outside ``dead``
-    containing the exact phrase, or None when a slot matches nothing
-    in the dictionary (no doc can match); a ts scope in ``dead``
-    time-prunes the positional fetch. One bucket-pruned isin-pushdown posting fetch,
-    one positions decode, then a JVM-side join chain: the i-th slot's
-    positions shifted by -i and intersected across slots
-    (n_occ = |intersection|). A slot may be a wildcard pattern
-    ("dat*"): its positions are the union over the pattern's expansion
-    terms. The BM25 partial of each DISTINCT pattern rides on its
-    first occurrence so candidates and scores come from the same
-    scan; a wildcard slot scores as the MAX over its expansion terms
-    present in the doc of idf·tfnorm — deterministic best-match
-    semantics (the strongest matched expansion), the natural analog
-    of literal-slot scoring (beyond the reference: it stores no
-    positions and has no phrase operator)."""
+    """→ (doc_id, n, score) for every doc outside ``dead`` that matches
+    the positional query ``words``: ``mode`` "phrase" (n = phrase
+    occurrences), "near" (n = anchor positions with every other slot
+    within ``window``) or "ordered" (n = anchor positions starting an
+    in-order chain); None when a slot matches nothing in the
+    dictionary. Slots may be wildcard/fuzzy/regex patterns, whose
+    positions are the union over the pattern's expansion terms.
+
+    One bucket-pruned, range-pre-intersected block fetch (a ts scope
+    in ``dead`` time-prunes it), then ``groupBy("range_id")`` and the
+    numpy `_positional_kernel` per range: positions are decoded once
+    and no join runs per slot. The score (``with_score``) sums over
+    the DISTINCT slot patterns the max idf·tfnorm of the pattern's
+    terms in the doc — a literal slot's own partial, a wildcard's
+    strongest matched expansion — in order of first appearance (NEAR:
+    the anchor, then the other patterns sorted). Beyond the reference,
+    which stores no positions and has no phrase or proximity
+    operator."""
     slots = phrase_slots(words)
     if not slots:
-        raise ValueError("phrase contains no indexable terms")
+        raise ValueError("query contains no indexable terms")
     if len(slots) > PHRASE_MAX_TERMS:
-        raise ValueError(f"phrase too long ({len(slots)} > {PHRASE_MAX_TERMS})")
+        raise ValueError(f"too many terms ({len(slots)} > {PHRASE_MAX_TERMS})")
+    if mode == "near":
+        patterns = [slots[0]] + sorted(set(slots[1:]) - {slots[0]})
+    else:
+        patterns = list(dict.fromkeys(slots))
     stats = cached_stats(spark, index_dir)
-    patterns = sorted(set(slots))
     expanded = _expand(spark, index_dir, patterns)
-    slot_terms = {
-        p: sorted(set(expanded.term[expanded.pattern_idx == i]))
-        for i, p in enumerate(patterns)
-    }
-    if any(not slot_terms[p] for p in slots):
+    pattern_terms = [
+        sorted(set(expanded.term[expanded.pattern_idx == i]))
+        for i in range(len(patterns))
+    ]
+    if not all(pattern_terms):
         return None  # some slot matches nothing → no doc can match
-    idf_by_term = {
-        t: idf(stats["n_docs"], int(d))
-        for t, d in zip(expanded.term, expanded.df)
-    }
-    # conjunction over DISTINCT patterns: a doc matches only if every
-    # distinct slot pattern occurs, so ranges missing any slot's terms
-    # are pruned before pos_bytes is ever read
-    decoded = _decoded_pos(
-        spark, index_dir, [slot_terms[p] for p in patterns], stats,
-        allowed_ranges=dead.ranges,
+    masks = _slot_masks(pattern_terms)
+    terms = sorted(masks)
+    df_of = dict(zip(expanded.term, expanded.df))
+    q = _PosQuery(
+        mode,
+        int(window),
+        [patterns.index(p) for p in slots],
+        {t: i for i, t in enumerate(terms)},
+        np.array([masks[t] for t in terms], dtype=np.int64),
+        np.array([idf(stats["n_docs"], int(df_of[t])) for t in terms]),
+        int(stats["range_bits"]),
+        float(stats["avgdl"]) or 1.0,
+        with_score,
     )
-    first_occ: dict[str, int] = {}
-    cur = None
-    for i, p in enumerate(slots):
-        if with_score and p not in first_occ:
-            # each DISTINCT pattern's BM25 partial rides on its first
-            # occurrence
-            first_occ[p] = i
-            terms = slot_terms[p]
-            if len(terms) == 1:
-                # NB: a 2-arg lambda to F.transform would receive the
-                # ELEMENT INDEX as its second argument — bind the slot
-                # offset via an outer closure instead
-                shift_col = (lambda sh: F.transform("pos", lambda x: x - F.lit(sh)))(i)
-                occ = decoded.filter(F.col("term") == terms[0]).select(
-                    "doc_id",
-                    shift_col.alias(f"_p{i}"),
-                    (F.lit(idf_by_term[terms[0]]) * F.col("tfnorm")).alias(
-                        f"_w{i}"
-                    ),
-                )
-            else:
-                # wildcard slot: positions = union over expansion,
-                # weight = max matched expansion partial
-                idf_df = local_df(
-                    spark,
-                    [(t, float(idf_by_term[t])) for t in terms],
-                    "term string, _idf double",
-                )
-                occ = _slot_occurrences(
-                    decoded, terms, i, f"_p{i}", idf_df=idf_df, wname=f"_w{i}"
-                )
-        else:
-            occ = _slot_occurrences(decoded, slot_terms[p], i, f"_p{i}")
-        cur = occ if cur is None else cur.join(occ, "doc_id")
-    inter = F.col("_p0")
-    for i in range(1, len(slots)):
-        inter = F.array_intersect(inter, F.col(f"_p{i}"))
-    cols = [F.col("doc_id"), F.size(inter).cast("int").alias("n_occ")]
+    cols = ["range_id", "term", "doc_gaps", "tf_bytes", "pos_bytes"]
     if with_score:
-        score = None
-        for i in first_occ.values():
-            score = F.col(f"_w{i}") if score is None else score + F.col(f"_w{i}")
-        cols.append(score.alias("score"))
-    return dead.drop(cur.select(*cols).filter(F.col("n_occ") > 0))
+        cols.append("dl_bytes")
+    blocks = _positional_blocks(
+        spark, index_dir, pattern_terms, stats, allowed_ranges=dead.ranges
+    )
+
+    def kernel(pdf):
+        return _positional_kernel(q, pdf)
+
+    return dead.drop(
+        blocks.select(*cols)
+        .groupBy("range_id")
+        .applyInPandas(kernel, POSITIONAL_SCHEMA)
+    )
+
+
+def _positional_top_k(
+    spark: SparkSession, index_dir: str, frame: DataFrame | None, k: int,
+    with_urls: bool,
+) -> DataFrame:
+    if frame is None:
+        return finish_ranked(spark, index_dir, [], k, with_urls)
+    result = (
+        frame.select("doc_id", "score")
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(k)
+    )
+    return finish_ranked(spark, index_dir, result, k, with_urls)
 
 
 def near_docs(
@@ -2606,116 +2647,29 @@ def near_docs(
     FIRST slot (anchored-window semantics; n_near = number of such
     anchor positions). Slots may be wildcard patterns ("dat*"): a
     slot's positions are the union over its expansion terms, exactly
-    as in phrase_docs (r4). Same single bucket-pruned fetch as
-    phrase_docs; the window test is a JVM-side exists() chain — no
-    Python in the match.
+    as in phrase_docs (r4).
 
     ``ordered=True`` (Lucene SpanNearQuery inOrder): the slots must
     occur IN QUERY ORDER (duplicate slot patterns each need their own
     occurrence), every step within ``window`` kept tokens AFTER the
     previous match — n_near counts anchor positions of the FIRST slot
-    that start at least one full chain. Compiled to a nested
-    JVM ``exists()`` chain (one level per slot), same single scan.
+    that start at least one full chain.
 
     ``with_score``: BM25 sum over the DISTINCT slot patterns —
     literal slots contribute idf·tfnorm, wildcard slots the MAX
-    matched expansion partial, exactly `_phrase_frame`'s scoring
-    (candidates and scores from the same scan)."""
+    matched expansion partial, as in `search_phrase`. Both modes run
+    in `_positional` (one fetch, one range-local kernel)."""
     dead = DeadSet(spark, index_dir, exclude=exclude, scope=scope)
-    slots = phrase_slots(words)
-    if not slots:
-        raise ValueError("query contains no indexable terms")
-    if len(slots) > PHRASE_MAX_TERMS:
-        raise ValueError(f"too many terms ({len(slots)} > {PHRASE_MAX_TERMS})")
-    stats = cached_stats(spark, index_dir)
-    # anchor = the query's first slot; the remaining DISTINCT slot
-    # patterns in stable order (ordered mode keeps first-appearance
-    # order — the chain references frames by slot position)
-    if ordered:
-        uniq = list(dict.fromkeys(slots))
-    else:
-        uniq = [slots[0]] + sorted(set(slots[1:]) - {slots[0]})
-    expanded = _expand(spark, index_dir, uniq)
-    slot_terms = {
-        p: sorted(set(expanded.term[expanded.pattern_idx == i]))
-        for i, p in enumerate(uniq)
-    }
-    if any(not slot_terms[p] for p in uniq):
+    frame = _positional(
+        spark, index_dir, words, dead, "ordered" if ordered else "near",
+        window, with_score,
+    )
+    if frame is None:
         schema = "doc_id long, n_near int" + (", score double" if with_score else "")
         return local_df(spark, [], schema)
-    decoded = _decoded_pos(
-        spark, index_dir, [slot_terms[p] for p in uniq], stats,
-        allowed_ranges=dead.ranges,
+    return frame.select(
+        "doc_id", F.col("n").alias("n_near"), *(["score"] if with_score else [])
     )
-    if with_score:
-        idf_by_term = {
-            t: idf(stats["n_docs"], int(d))
-            for t, d in zip(expanded.term, expanded.df)
-        }
-    cur = None
-    for i, p in enumerate(uniq):
-        if with_score:
-            # uniq is already the DISTINCT patterns: every slot
-            # carries its BM25 partial (wildcards: max over matched
-            # expansions — same semantics as _phrase_frame)
-            idf_df = local_df(
-                spark,
-                [(t, float(idf_by_term[t])) for t in slot_terms[p]],
-                "term string, _idf double",
-            )
-            occ = _slot_occurrences(
-                decoded, slot_terms[p], 0, f"_p{i}", idf_df=idf_df, wname=f"_w{i}"
-            )
-        else:
-            occ = _slot_occurrences(decoded, slot_terms[p], 0, f"_p{i}")
-        cur = occ if cur is None else cur.join(occ, "doc_id")
-    w = int(window)
-
-    def _anchor_ok(x):
-        cond = None
-        for i in range(1, len(uniq)):
-            c = F.exists(
-                F.col(f"_p{i}"),
-                lambda y: (y >= x - F.lit(w)) & (y <= x + F.lit(w)),
-            )
-            cond = c if cond is None else cond & c
-        return cond if cond is not None else F.lit(True)
-
-    cols = ["doc_id", "n_near"]
-    if ordered:
-        # in-order chain: slot i's match strictly after slot i-1's,
-        # at most `window` tokens later; duplicate patterns reuse
-        # their pattern's occurrence column but still need their own
-        # strictly-later position in the chain
-        col_of = [f"_p{uniq.index(p)}" for p in slots]
-
-        def _chain(i: int, prev):
-            if i == len(slots):
-                return F.lit(True)
-            return F.exists(
-                F.col(col_of[i]),
-                lambda y: (y > prev)
-                & (y <= prev + F.lit(w))
-                & _chain(i + 1, y),
-            )
-
-        cur = cur.withColumn(
-            "n_near",
-            F.size(
-                F.filter(F.col(col_of[0]), lambda x: _chain(1, x))
-            ).cast("int"),
-        )
-    else:
-        cur = cur.withColumn(
-            "n_near", F.size(F.filter(F.col("_p0"), _anchor_ok)).cast("int")
-        )
-    if with_score:
-        score = None
-        for i in range(len(uniq)):
-            score = F.col(f"_w{i}") if score is None else score + F.col(f"_w{i}")
-        cur = cur.withColumn("score", score)
-        cols.append("score")
-    return dead.drop(cur.filter(F.col("n_near") > 0).select(*cols))
 
 
 def search_near(
@@ -2735,16 +2689,11 @@ def search_near(
     in-order chain), rank by the BM25 sum over the distinct slot
     patterns (`search_phrase` semantics applied to proximity).
     ``scope``: metadata-filtered (see `search`)."""
-    frame = near_docs(
-        spark, index_dir, words, window=window, exclude=exclude,
-        with_score=True, scope=scope, ordered=ordered,
+    dead = DeadSet(spark, index_dir, exclude=exclude, scope=scope)
+    frame = _positional(
+        spark, index_dir, words, dead, "ordered" if ordered else "near", window
     )
-    result = (
-        frame.select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-    return finish_ranked(spark, index_dir, result, k, with_urls)
+    return _positional_top_k(spark, index_dir, frame, k, with_urls)
 
 
 def phrase_docs(
@@ -2753,12 +2702,13 @@ def phrase_docs(
     """→ (doc_id, n_occ): every live doc containing the exact phrase,
     with its occurrence count. Slots may be wildcard patterns:
     phrase_docs(spark, idx, ["big", "dat*"])."""
-    frame = _phrase_frame(
-        spark, index_dir, words, DeadSet(spark, index_dir), with_score=False
+    frame = _positional(
+        spark, index_dir, words, DeadSet(spark, index_dir), "phrase",
+        with_score=False,
     )
     if frame is None:
         return local_df(spark, [], "doc_id long, n_occ int")
-    return frame.select("doc_id", "n_occ")
+    return frame.select("doc_id", F.col("n").alias("n_occ"))
 
 
 def search_phrase(
@@ -2771,25 +2721,17 @@ def search_phrase(
     scope: str | None = None,
 ) -> DataFrame:
     """Exact-phrase top-k, ranked by BM25 over the phrase's distinct
-    terms (same formula, same doc_id tie-break as ``search``).
+    slot patterns (same formula, same doc_id tie-break as ``search``;
+    a wildcard slot scores its strongest matched expansion).
     ``exclude``: NOT semantics, one anti-join before top-k.
     ``scope``: metadata-filtered retrieval (see `search`); a ts
     scope additionally time-prunes the positional fetch (range_ts
     bounds — pos_bytes is the heaviest payload). ``with_urls``: as
     in `search`, a bounded k gives a `ResidentFrame` that answers
     ``collect``/``toPandas``/``count`` from driver memory."""
-    frame = _phrase_frame(
-        spark, index_dir, words,
-        DeadSet(spark, index_dir, exclude=exclude, scope=scope),
-    )
-    if frame is None:
-        return finish_ranked(spark, index_dir, [], k, with_urls)
-    result = (
-        frame.select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-    return finish_ranked(spark, index_dir, result, k, with_urls)
+    dead = DeadSet(spark, index_dir, exclude=exclude, scope=scope)
+    frame = _positional(spark, index_dir, words, dead, "phrase")
+    return _positional_top_k(spark, index_dir, frame, k, with_urls)
 
 
 _tomb_exists: dict[str, bool] = {}

@@ -465,7 +465,7 @@ class OracleIndex:
         phrase's DISTINCT slot patterns — a literal slot adds its
         term's partial, a wildcard slot adds the MAX partial over its
         expansion terms present in the doc (engine semantics,
-        query._phrase_frame)."""
+        query._positional_kernel)."""
         occ = self.phrase_occurrences(words)
         from textindex_spark.refimpl.txt_tokenize import iter_raw_words, normalize_token
 
